@@ -24,6 +24,10 @@ object Components {
 
   /** (node, component) for every endpoint of `edges` (columns i, j);
     * component = minimum node id reachable through the edge set.
+    * `maxIter` bounds the double-hop rounds (`round * 2 + 2 <= maxIter`);
+    * the init pass folds one more hop, so a run that stops after `round`
+    * rounds has propagated `round * 2 + 1` hops, which is the figure the
+    * non-convergence error reports.
     */
   def connected(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     // the loop advances two hops per round, so a budget below one round
@@ -95,7 +99,7 @@ object Components {
       labels.unpersist()
       Ckpt.release(labels)
       throw new IllegalStateException(
-        s"Components.connected did not converge within ${round * 2} " +
+        s"Components.connected did not converge within ${round * 2 + 1} " +
           s"label-propagation hops (maxIter=$maxIter); raise maxIter for " +
           "graphs with longer chain diameters")
     }

@@ -18,9 +18,11 @@ import org.apache.spark.sql.functions._
   *     consume-within-the-call contract, without the shared-cursor
   *     corruption mode (SURVEY.md §2.2 Q4)
   *   - `Partitioner` → optional `K => Int`; when supplied we reproduce
-  *     the reference's exact dataflow — partition by user hash, sort
-  *     within partition, grouped streaming reduce over sorted runs
-  *     (reference `src/mapreduce.c:141-160,215-238`)
+  *     the reference's exact dataflow — the user's id (mod
+  *     `numPartitions`) IS the Spark reduce partition id, as the
+  *     reference's id alone picks the reducer (`src/mapreduce.c:115`);
+  *     then sort within partition and a grouped streaming reduce over
+  *     sorted runs (reference `src/mapreduce.c:141-160,215-238`)
   *   - `num_reducers` → `numPartitions`, without the `MAPS_NUM = 100`
   *     cap (reference `src/mapreduce.h:8`)
   *
@@ -74,16 +76,18 @@ object MR {
           .sortWithinPartitions(col("_1"))
           .mapPartitions(it => groupedRuns(it).map { case (k, vs) => reducer(k, vs) })
       case Some(p) =>
-        // Reference-faithful path: user-controlled partition id
-        // (reference src/mapreduce.c:115), sort within partition
-        // (src/mapreduce.c:141-160), streaming grouped reduce over the
-        // sorted runs (src/mapreduce.c:215-238). Keys are co-located
-        // strictly per the USER's partitioner — no second shuffle on
-        // the key itself.
+        // Reference-faithful path: the user's partition id IS the reduce
+        // partition (reference src/mapreduce.c:115), then sort within
+        // partition (src/mapreduce.c:141-160) and a streaming grouped
+        // reduce over the sorted runs (src/mapreduce.c:215-238).
+        // repartitionById plans a pass-through exchange that routes each
+        // row to partition `_1` as is; hash-partitioning on the id
+        // instead would re-hash it, so distinct ids could collide and
+        // leave reduce partitions empty while one takes most of the rows.
         implicit val pkvEnc: Encoder[(Int, K, V)] = Encoders.tuple(
           Encoders.scalaInt, implicitly[Encoder[K]], implicitly[Encoder[V]])
         kv.map { case (k, v) => (math.floorMod(p(k), numPartitions), k, v) }
-          .repartition(numPartitions, col("_1"))
+          .repartitionById(numPartitions, col("_1"))
           .sortWithinPartitions(col("_2"))
           .mapPartitions(it => groupedRuns(it.map(t => (t._2, t._3)))
             .map { case (k, vs) => reducer(k, vs) })

@@ -2,11 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.apache.spark.sql.functions.spark_partition_id
 import graft.operators.MR
 
 /** The MR facade laws (SURVEY.md §5.2 t3): emit multiplicity is preserved
   * through the shuffle, every key is reduced exactly once with all its
-  * values, the custom-partitioner path agrees with the Catalyst path, and
+  * values, the custom-partitioner path agrees with the Catalyst path and
+  * places each key in the reduce partition its partitioner names, and
   * the default partitioner is bit-compatible with the reference's djb2
   * (reference src/mapreduce.c:129-138).
   */
@@ -91,6 +93,31 @@ class MRSpec extends AnyFunSuite {
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
     assert(res.passed, res.status.toString)
+  }
+
+  test("user-partitioner path: each key's reduce partition IS its partitioner id") {
+    // regression: the path hash-partitioned on the id, re-hashing it —
+    // at n = 4 ids 0, 1 and 3 all landed in Spark partition 3 and two
+    // reduce partitions sat empty
+    val words = (0 until 64).map(i => s"w$i")
+    val lines = spark.createDataset(words.grouped(8).map(_.mkString(" ")).toSeq)
+    for (n <- Seq(4, 8)) {
+      assert(words.map(MR.defaultHashPartition(_, n)).toSet == (0 until n).toSet,
+        s"key set no longer hits every id at n=$n")
+      val out = MR.runOnDataset[String, Int, (String, Long)](
+        lines, tokenize, countReducer, n,
+        partitioner = Some(MR.defaultHashPartition(_, n)))
+        .withColumn("pid", spark_partition_id())
+      val placed = out.collect().map(r => (r.getString(0), r.getInt(2)))
+      assert(placed.length == words.size)
+      for ((k, pid) <- placed)
+        assert(pid == MR.defaultHashPartition(k, n), s"key=$k n=$n")
+      assert(placed.map(_._2).toSet == (0 until n).toSet,
+        s"an output partition is empty at n=$n")
+      val plan = TestSpark.finalPlan(out)
+      assert(plan.contains("Exchange shufflepartitionidpassthrough("), plan)
+      assert(!plan.contains("hashpartitioning"), plan)
+    }
   }
 
   test("djb2 reference parity, including keys that overflow 64 bits") {
