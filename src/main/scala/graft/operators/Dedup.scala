@@ -20,6 +20,10 @@ import org.apache.spark.sql.functions._
   *     distance. Signature build is one shuffle; pair scan is over
   *     signatures (8 bytes/doc), not documents.
   *
+  * Every candidate-pair tier derives only its block keys and its score;
+  * the hot-key cap, the same-key pairing and the overlap count are the
+  * shared steps of [[Blocking]].
+  *
   * Width discipline (the property that decides the 100 TB bill): every
   * shingle is hashed to a 60-bit long AT BIRTH ([[shingles]]), so every
   * downstream distinct / posting-list join / signature shuffle moves
@@ -90,24 +94,16 @@ object Dedup {
     // no checkpoint here: the posting self-join dominates and the full
     // per-occurrence frame is large — A/B at sf0.1 read 1.92s re-derive
     // vs 2.14s checkpointed (materialization outweighs the saved scans)
-    jaccardOf(shingles(docs, n), threshold)
+    jaccardAtLeast(Blocking.overlap(shingles(docs, n)), threshold)
 
-  private[operators] def jaccardOf(sh: DataFrame, threshold: Double): DataFrame = {
-    val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = sh.as("a")
-      .join(sh.as("b"), col("a.gh") === col("b.gh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-      .agg(count(lit(1)).as("c"))
-    // `sz` grows O(corpus): no broadcast hint — these are equi-joins AQE
-    // plans on its own (and can still broadcast when actually small).
-    inter
-      .join(sz.as("s1"), col("i") === col("s1.doc_id"))
-      .join(sz.as("s2"), col("j") === col("s2.doc_id"))
-      .select(col("i"), col("j"),
-        (col("c").cast("double") / (col("s1.n") + col("s2.n") - col("c"))).as("jaccard"))
+  /** Jaccard c / (n_i + n_j − c) of a [[Blocking.overlap]] frame, kept
+    * at ≥ `threshold` and rounded to 4 dp: (i, j, jaccard).
+    */
+  private def jaccardAtLeast(ov: DataFrame, threshold: Double): DataFrame =
+    ov.select(col("i"), col("j"),
+        (col("c").cast("double") / (col("n_i") + col("n_j") - col("c"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .select(col("i"), col("j"), round(col("jaccard"), 4).as("jaccard"))
-  }
 
   /** Asymmetric near-dup: containment of the SMALLER shingle set within
     * the pair — |A∩B| / min(|A|, |B|) — catches a short document quoted
@@ -123,35 +119,14 @@ object Dedup {
     * side's signature, which this exact tier exists to verify against.
     */
   def containmentPairs(docs: DataFrame, n: Int = 3,
-      threshold: Double = 0.9): DataFrame = {
-    val sh = shingles(docs, n)
-    val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = sh.as("a")
-      .join(sh.as("b"), col("a.gh") === col("b.gh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-      .agg(count(lit(1)).as("c"))
-    inter
-      .join(sz.as("s1"), col("i") === col("s1.doc_id"))
-      .join(sz.as("s2"), col("j") === col("s2.doc_id"))
-      .select(col("i"), col("j"),
-        col("s1.n").as("n_i"), col("s2.n").as("n_j"), col("c").as("inter"),
-        (col("c").cast("double") / least(col("s1.n"), col("s2.n")))
-          .as("containment"))
+      threshold: Double = 0.9): DataFrame =
+    Blocking.overlap(shingles(docs, n))
+      .select(col("i"), col("j"), col("n_i"), col("n_j"), col("c").as("inter"),
+        (col("c").cast("double") / least(col("n_i"), col("n_j"))).as("containment"))
       .filter(col("containment") >= threshold)
       .select(col("i"), col("j"), col("n_i"), col("n_j"), col("inter"),
         round(col("containment"), 4).as("containment"))
-  }
 
-  /** Exact Jaccard restricted to the given candidate (i, j) pairs.
-    *
-    * Cost is O(|candidates| × shingles-per-doc), independent of the
-    * number of non-candidate pairs: shingle sets are first semi-joined
-    * down to docs that appear in some candidate pair, then the
-    * intersection count is computed per candidate pair only (join the
-    * pair to i's shingles, match them against j's). This is what makes
-    * LSH an actual scale path — verification work tracks the candidate
-    * set, never the full pair space.
-    */
   /** EXACT set-similarity join via prefix filtering (the AllPairs/PPJoin
     * family — Bayardo et al. WWW'07, Xiao et al. WWW'08 — re-expressed
     * as three DataFrame joins): unlike the LSH tiers this is complete BY
@@ -200,26 +175,17 @@ object Dedup {
       .filter(col("p") <=
         col("m") - expr(s"($tNum * m + ${tDen - 1}) div $tDen") + 1)
       .select(col("doc_id"), col("gh"), col("m")))
-    val cand = prefix.as("a")
-      .join(prefix.as("b"),
-        col("a.gh") === col("b.gh") && col("a.doc_id") < col("b.doc_id") &&
-          lit(tDen) * least(col("a.m"), col("b.m")) >=
-            lit(tNum) * greatest(col("a.m"), col("b.m")))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-      .distinct()
-    val inter = cand
-      .join(sh.as("sa"), col("i") === col("sa.doc_id"))
-      .join(sh.as("sb"), col("j") === col("sb.doc_id") && col("sa.gh") === col("sb.gh"))
-      .groupBy("i", "j")
-      .agg(count(lit(1)).as("c"))
-    inter
-      .join(sz.as("z1"), col("i") === col("z1.doc_id"))
-      .join(sz.as("z2"), col("j") === col("z2.doc_id"))
+    // length filter tDen·m_min ≥ tNum·m_max on the carried set sizes
+    val cand = Blocking.pairs(prefix, Seq("gh"), carry = Seq("m"))
+      .filter(lit(tDen) * least(col("m_i"), col("m_j")) >=
+        lit(tNum) * greatest(col("m_i"), col("m_j")))
+      .select(col("i"), col("j"))
+    Blocking.overlapOf(sh, cand)
       .filter(col("c") * lit(tDen) >=
-        lit(tNum) * (col("z1.m") + col("z2.m") - col("c")))
+        lit(tNum) * (col("n_i") + col("n_j") - col("c")))
       .select(col("i"), col("j"),
         round(col("c").cast("double") /
-          (col("z1.m") + col("z2.m") - col("c")), 4).as("jaccard"))
+          (col("n_i") + col("n_j") - col("c")), 4).as("jaccard"))
   }
 
   /** Per-document shingle novelty at ingest order — the marginal-value
@@ -252,38 +218,24 @@ object Dedup {
           .cast("long").as("novelty_ppm"))
   }
 
-  /** Exact-Jaccard verification of candidate pairs over a shingle
-    * frame. `ckptPruned` picks the checkpoint economics: FALSE (the
-    * batch default) when `sh` is already checkpointed blocks — the
-    * three consumers then re-run only a cheap semi-join (A/B at sf0.1:
-    * q27 1.9s → 2.1s, q48 4.0s → 4.7s with one); TRUE when `sh` is a
-    * LAZY corpus-sized parquet union (the incremental/probe paths) —
-    * the candidate-pruned frame is delta-proportional, so one
-    * materialization replaces three full corpus scans (measured at the
-    * 100× ingest probe: the eager full-union checkpoint this replaces
-    * cost 25s/probe; see `bench/ingest_probe_r12_100x.json`).
+  /** Exact Jaccard restricted to the given candidate (i, j) pairs.
+    *
+    * Cost is O(|candidates| × shingles-per-doc), independent of the
+    * number of non-candidate pairs: shingle sets are first semi-joined
+    * down to docs that appear in some candidate pair, then the
+    * intersection count is computed per candidate pair only (join the
+    * pair to i's shingles, match them against j's). This is what makes
+    * LSH an actual scale path — verification work tracks the candidate
+    * set, never the full pair space ([[Blocking.overlapOf]]).
+    * `ckptPruned` cuts the candidate-pruned shingle frame: TRUE when
+    * `sh` is a LAZY corpus-sized parquet union (the incremental/probe
+    * paths), FALSE when it is already checkpointed blocks (see
+    * `cutPruned` there for the measured trade).
     */
   private[graft] def jaccardOfCandidates(
       sh: DataFrame, cand: DataFrame, threshold: Double,
-      ckptPruned: Boolean = false): DataFrame = {
-    val candDocs = cand.select(col("i").as("doc_id"))
-      .union(cand.select(col("j").as("doc_id"))).distinct()
-    val shc0 = sh.join(candDocs, Seq("doc_id"), "left_semi")
-    val shc = if (ckptPruned) Ckpt.narrowLazy(shc0) else shc0
-    val sz = shc.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(shc.as("sa"), col("i") === col("sa.doc_id"))
-      .join(shc.as("sb"), col("j") === col("sb.doc_id") && col("sa.gh") === col("sb.gh"))
-      .groupBy("i", "j")
-      .agg(count(lit(1)).as("c"))
-    inter
-      .join(sz.as("s1"), col("i") === col("s1.doc_id"))
-      .join(sz.as("s2"), col("j") === col("s2.doc_id"))
-      .select(col("i"), col("j"),
-        (col("c").cast("double") / (col("s1.n") + col("s2.n") - col("c"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("i"), col("j"), round(col("jaccard"), 4).as("jaccard"))
-  }
+      ckptPruned: Boolean = false): DataFrame =
+    jaccardAtLeast(Blocking.overlapOf(sh, cand, ckptPruned), threshold)
 
   /** Prime modulus of the minhash permutation family (2^31 − 1). */
   private[graft] val MinhashP = 2147483647L
@@ -515,46 +467,22 @@ object Dedup {
       maxBucketSize: Int = NearDupMaxBucket): DataFrame =
     candidatesOfBands(lshBands(sh, numHashes, rowsPerBand), maxBucketSize)
 
-  /** The LSH skew guard as a reusable step: drop band buckets larger
-    * than `maxBucketSize` (0 = off) BEFORE any candidate join — one
-    * aggregation over the narrow band frame, nothing wide rescanned.
-    *
-    * Filter shape: ANTI-join against the OVER-cap keys, not semi-join
-    * against the under-cap ones. The over-cap side holds at most
-    * rows/cap distinct keys by construction (each needs > cap members),
-    * so AQE broadcasts it in any non-degenerate corpus and the band
-    * frame itself never shuffles for the guard; the under-cap side is
-    * nearly every key and could never broadcast.
-    */
-  private def capBuckets(all: DataFrame, maxBucketSize: Int): DataFrame =
-    if (maxBucketSize <= 0) all
-    else {
-      val hot = all.groupBy("b", "band_key")
-        .agg(count(lit(1)).as("_bsz"))
-        .filter(col("_bsz") > maxBucketSize)
-        .select(col("b").as("_fb"), col("band_key").as("_fk"))
-      all.join(hot,
-        col("b") === col("_fb") && col("band_key") === col("_fk"), "left_anti")
-    }
+  /** Key columns of a band frame: one bucket per (band, band_key). */
+  private val BandKey = Seq("b", "band_key")
 
   /** Same-bucket pairs from a band frame (see [[minhashCandidates]] for
     * the skew-guard contract).
     */
   private def candidatesOfBands(
-      bandFrame: DataFrame, maxBucketSize: Int, cut: Boolean = true): DataFrame = {
+      bandFrame: DataFrame, maxBucketSize: Int, cut: Boolean = true): DataFrame =
     // the band frame feeds both sides of the bucket self-join (and the
     // skew-guard aggregation); cut the lineage so its producer pipeline
     // runs once, not per consumer. `cut = false` when the caller's frame
     // is already a narrow projection of checkpointed blocks — a second
     // eager materialization there is pure overhead
-    val bands = capBuckets(if (cut) Ckpt.narrowLazy(bandFrame) else bandFrame, maxBucketSize)
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.b") === col("b.b") && col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-      .distinct()
-  }
+    Blocking.pairs(Blocking.cap(
+      if (cut) Ckpt.narrowLazy(bandFrame) else bandFrame, BandKey, maxBucketSize),
+      BandKey)
 
   /** LSH band-shape sensitivity curve: for rowsPerBand ∈ {2, 4, 8} over
     * the same 16 minhash permutations (bands = 16/r), the candidate
@@ -730,7 +658,7 @@ object Dedup {
       shAll: DataFrame, bandsAll: DataFrame, deltaIds: DataFrame,
       threshold: Double, maxBucketSize: Int,
       ckptPruned: Boolean = false): DataFrame =
-    deltaEdgesOf(shAll, capBuckets(bandsAll, maxBucketSize), deltaIds,
+    deltaEdgesOf(shAll, Blocking.cap(bandsAll, BandKey, maxBucketSize), deltaIds,
       threshold, ckptPruned)
 
   private def deltaEdgesOf(
@@ -797,7 +725,7 @@ object Dedup {
       shAll: DataFrame, bandsAll: DataFrame, deltaIds: DataFrame,
       corpusEdges: DataFrame, threshold: Double, maxBucketSize: Int,
       ckptPruned: Boolean = false): DataFrame = {
-    val bands = capBuckets(bandsAll, maxBucketSize)
+    val bands = Blocking.cap(bandsAll, BandKey, maxBucketSize)
     // stored pairs that still share a surviving bucket (class doc above)
     val revalidated = corpusEdges.select(col("i"), col("j"))
       .join(bands.as("x"), col("i") === col("x.doc_id"))
@@ -989,7 +917,8 @@ object Dedup {
     *     squaring the per-key selectivity at the cost of more key rows.
     *
     * Both shapes are equi self-joins with no false negatives by
-    * construction. Carries (si, sj) through for exact verification.
+    * construction. Carries (simhash_i, simhash_j) through for exact
+    * verification.
     *
     * `maxKeySize` (default [[NearDupMaxBucket]] via [[simhashPairs]];
     * 0 = off, for ground-truth comparisons only)
@@ -1024,21 +953,8 @@ object Dedup {
       }
     val blocked = sig.select(col("doc_id"), col("simhash"),
       explode(array(keys: _*)).as("blk"))
-    val kept =
-      if (maxKeySize <= 0) blocked
-      else {
-        // anti-join against the over-cap keys (≤ rows/cap of them by
-        // construction → AQE broadcasts; see capBuckets)
-        val hot = blocked.groupBy("blk").agg(count(lit(1)).as("_ksz"))
-          .filter(col("_ksz") > maxKeySize).select(col("blk").as("_fk"))
-        blocked.join(hot, col("blk") === col("_fk"), "left_anti")
-      }
-    kept.as("a")
-      .join(kept.as("b"),
-        col("a.blk") === col("b.blk") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"),
-        col("a.simhash").as("si"), col("b.simhash").as("sj"))
-      .distinct()
+    Blocking.pairs(Blocking.cap(blocked, Seq("blk"), maxKeySize), Seq("blk"),
+      carry = Seq("simhash"))
   }
 
   /** Near-dup pairs by SimHash Hamming distance ≤ `maxHamming`:
@@ -1062,27 +978,10 @@ object Dedup {
     val sig = Ckpt.narrowLazy(simhashSignatures(docs, n))
     simhashCandidates(sig, maxHamming, maxKeySize)
       .select(col("i"), col("j"),
-        expr("cast(bit_count(si ^ sj) as bigint)").as("hamming"))
+        expr("cast(bit_count(simhash_i ^ simhash_j) as bigint)").as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Eval-set decontamination: per corpus document, how many distinct
-    * word n-grams it shares with a held-out eval corpus, and a
-    * contaminated flag at `minShared` — the overlap screen run before
-    * training so benchmark text can't leak into the train set (the
-    * complement of the q69 audit, which checks INTERNAL split leakage
-    * through near-dup edges; this screens against an EXTERNAL corpus on
-    * raw n-gram collision, the standard published procedure).
-    *
-    * Scale shape: eval benchmarks are tiny next to a training corpus,
-    * so the eval side reduces to a broadcast distinct-gram set and the
-    * pass is one corpus shingle scan + a broadcast semi-probe + a
-    * doc_id count — nothing proportional to corpus pairs. If the eval
-    * side ever isn't broadcastable, drop the hint and the same plan
-    * runs as a linear gram equi-join. Every doc gets a row (zero
-    * shared grams included) so the screen is a total audit, not just a
-    * blocklist.
-    */
   /** Sub-document exact dedup at chunk grain — the line-dedup pass of
     * web-corpus pipelines, rendered over fixed `size`-char chunks since
     * this corpus has no line structure: the FIRST occurrence (minimal
@@ -1121,6 +1020,23 @@ object Dedup {
           "x -> x.chunk), '')").as("text_clean"))
   }
 
+  /** Eval-set decontamination: per corpus document, how many distinct
+    * word n-grams it shares with a held-out eval corpus, and a
+    * contaminated flag at `minShared` — the overlap screen run before
+    * training so benchmark text can't leak into the train set (the
+    * complement of the q69 audit, which checks INTERNAL split leakage
+    * through near-dup edges; this screens against an EXTERNAL corpus on
+    * raw n-gram collision, the standard published procedure).
+    *
+    * Scale shape: eval benchmarks are tiny next to a training corpus,
+    * so the eval side reduces to a broadcast distinct-gram set and the
+    * pass is one corpus shingle scan + a broadcast semi-probe + a
+    * doc_id count — nothing proportional to corpus pairs. If the eval
+    * side ever isn't broadcastable, drop the hint and the same plan
+    * runs as a linear gram equi-join. Every doc gets a row (zero
+    * shared grams included) so the screen is a total audit, not just a
+    * blocklist.
+    */
   def evalOverlap(corpus: DataFrame, eval: DataFrame, n: Int = 3,
       minShared: Long = 1L): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
@@ -1201,22 +1117,12 @@ object Dedup {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     require(maxPostings >= 2, s"maxPostings must be >= 2, got $maxPostings")
     val fp = winnowedFingerprints(docs, n, w)
-    val rare = fp.groupBy("gh").agg(count(lit(1)).as("_df"))
-      .filter(col("_df") <= maxPostings).select("gh")
-    val kept = fp.join(rare, "gh")
-    val sz = fp.groupBy("doc_id").agg(count(lit(1)).as("nfp"))
-    kept.as("a")
-      .join(kept.as("b"),
-        col("a.gh") === col("b.gh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
-      .join(sz.select(col("doc_id").as("doc_a"), col("nfp").as("nfp_a")), "doc_a")
-      .join(sz.select(col("doc_id").as("doc_b"), col("nfp").as("nfp_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("shared"),
-        col("nfp_a"), col("nfp_b"),
-        round(col("shared").cast("double") /
-          least(col("nfp_a"), col("nfp_b")), 4).as("overlap"))
+    Blocking.overlap(Blocking.cap(fp, Seq("gh"), maxPostings), fp)
+      .filter(col("c") >= minShared)
+      .select(col("i").as("doc_a"), col("j").as("doc_b"), col("c").as("shared"),
+        col("n_i").as("nfp_a"), col("n_j").as("nfp_b"),
+        round(col("c").cast("double") /
+          least(col("n_i"), col("n_j")), 4).as("overlap"))
   }
 
   /** Exact maximal shared token runs between document pairs — the
@@ -1267,10 +1173,8 @@ object Dedup {
       maxPostings: Long = 1000L): DataFrame = {
     require(minRun >= n, s"minRun must be >= n = $n, got $minRun")
     require(maxPostings >= 2, s"maxPostings must be >= 2, got $maxPostings")
-    val ps = positionalShingles(docs, n)
-    val rare = ps.groupBy("gh").agg(count(lit(1)).as("_occ"))
-      .filter(col("_occ") <= maxPostings).select("gh")
-    crossRunsOf(ps.join(rare, "gh"), n, minRun)
+    crossRunsOf(Blocking.cap(positionalShingles(docs, n), Seq("gh"), maxPostings),
+      n, minRun)
   }
 
   /** Cross-doc diagonal run assembly over an already-guarded positional
@@ -1427,10 +1331,9 @@ object Dedup {
   def selfRuns(docs: DataFrame, n: Int = 3, minRun: Long = 15L,
       maxPostings: Long = 1000L): DataFrame = {
     require(minRun >= n, s"minRun must be >= n = $n, got $minRun")
-    val ps = positionalShingles(docs, n)
-    val rare = ps.groupBy("gh").agg(count(lit(1)).as("_occ"))
-      .filter(col("_occ") <= maxPostings).select("gh")
-    selfRunsOf(ps.join(rare, "gh"), n, minRun)
+    require(maxPostings >= 2, s"maxPostings must be >= 2, got $maxPostings")
+    selfRunsOf(Blocking.cap(positionalShingles(docs, n), Seq("gh"), maxPostings),
+      n, minRun)
   }
 
   /** Within-doc diagonal run assembly over an already-guarded gram

@@ -94,22 +94,6 @@ object MR {
     }
   }
 
-  /** Fold fast path — when the reducer is a commutative fold, partial
-    * (map-side) aggregation beats materializing each group; this is the
-    * `reduceByKey` shape the SURVEY build plan calls for (§7 hard-parts d).
-    */
-  def runFold[K: Encoder, V: Encoder](
-      lines: Dataset[String],
-      mapper: String => IterableOnce[(K, V)],
-      fold: (V, V) => V): Dataset[(K, V)] = {
-    implicit val kvEnc: Encoder[(K, V)] =
-      Encoders.tuple(implicitly[Encoder[K]], implicitly[Encoder[V]])
-    lines.flatMap(mapper)
-      .groupByKey(_._1)
-      .reduceGroups((a, b) => (a._1, fold(a._2, b._2)))
-      .map { case (k, (_, v)) => (k, v) }
-  }
-
   /** djb2 — bit-compatible with the reference's default partitioner
     * (reference `src/mapreduce.c:129-138`), exposed for parity tests.
     * The reference walks the key's raw bytes as C `char` (SIGNED on the

@@ -18,11 +18,16 @@ private[graft] object Par {
 
   /** Evaluate `fa` on the calling thread and `fb` on one helper thread,
     * returning both. Job-description/group properties are thread-local
-    * in Spark, so the helper branch's jobs simply carry none. Exceptions
-    * from either branch propagate (the helper's first, if both).
+    * in Spark, so the helper branch's jobs simply carry none.
+    *
+    * Failures propagate as the branch threw them: if `fa` throws, that
+    * exception propagates and the helper's outcome is never observed;
+    * otherwise a throw from `fb` is rethrown as its original exception,
+    * not wrapped in an `ExecutionException`. A failing branch does not
+    * cancel the other branch's running Spark jobs.
     */
   def both[A, B](fa: => A, fb: => B): (A, B) = {
-    import java.util.concurrent.{Executors, TimeUnit}
+    import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
     val ex = Executors.newSingleThreadExecutor(r => {
       val t = new Thread(r, "graft-par")
       t.setDaemon(true)
@@ -33,7 +38,8 @@ private[graft] object Par {
         override def call(): B = fb
       })
       val a = fa
-      (a, f.get())
+      val b = try f.get() catch { case e: ExecutionException => throw e.getCause }
+      (a, b)
     } finally {
       ex.shutdown()
       ex.awaitTermination(1, TimeUnit.SECONDS)

@@ -770,10 +770,10 @@ object Similarity {
   }
 
   /** LSH-accelerated near-dup pairs: same-(table, bucket) candidates
-    * within the [[LshBucketWindow]] id-sorted window (`window = 0` ⇒
-    * unbounded same-bucket pairs, for ground-truth comparison only),
-    * exact cosine verification ≥ threshold. Verification cost tracks the
-    * candidate set (same contract as [[Dedup.jaccardOfCandidates]]).
+    * within a `window` (≥ 1, default [[LshBucketWindow]]) of salted-hash
+    * order per bucket, exact cosine verification ≥ threshold.
+    * Verification cost tracks the candidate set (same contract as
+    * [[Dedup.jaccardOfCandidates]]); [[cosinePairs]] is the ground truth.
     *
     * `bits` is a FLOOR: the effective bucket-space size is
     * [[derivedBits]] of the corpus count (one count() job, the
@@ -785,39 +785,29 @@ object Similarity {
       tables: Int = 8, bits: Int = 4, dim: Int = 64,
       window: Int = LshBucketWindow): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    require(window >= 1, s"window must be >= 1, got $window")
     val dBits = derivedBits(emb.count(), bits)
     // the bucketing projection (tables × bits × dim multiplies per
     // vector) feeds BOTH sides of the candidate join; checkpoint the
-    // narrow (vec_id, t, bucket[, rn]) result so it runs once
-    val cand =
-      if (window <= 0) {
-        val buckets = Ckpt.narrowLazy(signLshBuckets(emb, tables, dBits, dim))
-        buckets.as("a")
-          .join(buckets.as("b"),
-            col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket") &&
-              col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("i"), col("b.vec_id").as("j"))
-          .distinct()
-      } else {
-        val rn = Ckpt.narrowLazy(signLshBuckets(emb, tables, dBits, dim)
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("t", "bucket").orderBy(
-              expr(Dedup.h60("concat('lshw_', t, '_', vec_id)")),
-              col("vec_id")))))
-        // window pairing as a pure EQUI-join on (t, bucket, rn): the
-        // probe side explodes each row into its `window` successor
-        // ranks, so no per-bucket range scan ever materializes a
-        // quadratic bucket cross product — ≤ tables·window·n rows end
-        // to end. The salted order is not id order, so normalize the
-        // pair AFTER the join (i = min id, j = max id).
-        rn.select(col("t"), col("bucket"), col("vec_id").as("ai"),
-            explode(expr(s"sequence(rn + 1, rn + $window)")).as("rn"))
-          .join(rn.select(col("t"), col("bucket"), col("rn"),
-            col("vec_id").as("bj")), Seq("t", "bucket", "rn"))
-          .select(least(col("ai"), col("bj")).as("i"),
-            greatest(col("ai"), col("bj")).as("j"))
-          .distinct()
-      }
+    // narrow (vec_id, t, bucket, rn) result so it runs once
+    val rn = Ckpt.narrowLazy(signLshBuckets(emb, tables, dBits, dim)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("t", "bucket").orderBy(
+          expr(Dedup.h60("concat('lshw_', t, '_', vec_id)")),
+          col("vec_id")))))
+    // window pairing as a pure EQUI-join on (t, bucket, rn): the probe
+    // side explodes each row into its `window` successor ranks, so no
+    // per-bucket range scan ever materializes a quadratic bucket cross
+    // product — ≤ tables·window·n rows end to end. The salted order is
+    // not id order, so normalize the pair AFTER the join (i = min id,
+    // j = max id).
+    val cand = rn.select(col("t"), col("bucket"), col("vec_id").as("ai"),
+        explode(expr(s"sequence(rn + 1, rn + $window)")).as("rn"))
+      .join(rn.select(col("t"), col("bucket"), col("rn"),
+        col("vec_id").as("bj")), Seq("t", "bucket", "rn"))
+      .select(least(col("ai"), col("bj")).as("i"),
+        greatest(col("ai"), col("bj")).as("j"))
+      .distinct()
     val v = withNorm(emb)
     cand
       .join(v.as("a"), col("i") === col("a.vec_id"))
@@ -839,7 +829,8 @@ object Similarity {
     * quadratic — the semantic-dedup pass a training pipeline runs after
     * lexical dedup has collapsed the near-identical text. `bits` is the
     * [[lshCosinePairs]] floor — the effective bucket space derives from
-    * the corpus count.
+    * the corpus count — and `window` (≥ 1) its within-bucket candidate
+    * window.
     */
   def semanticDedup(
       emb: DataFrame, threshold: Double,

@@ -55,13 +55,6 @@ class MRSpec extends AnyFunSuite {
     assert(viaCustom == expectedCounts)
   }
 
-  test("runFold (partial aggregation) agrees with grouped reduce") {
-    val lines = spark.read.textFile(TestSpark.resource("words.txt"))
-    val viaFold = MR.runFold[String, Int](lines, tokenize, _ + _)
-      .collect().toMap.map { case (k, v) => (k, v.toLong) }
-    assert(viaFold == expectedCounts)
-  }
-
   test("multiplicity law: total reduced count == number of emitted pairs (ScalaCheck)") {
     val wordGen = Gen.nonEmptyListOf(Gen.oneOf("alpha", "beta", "gamma", "x1", "Y_2", "z.z"))
     val prop = Prop.forAll(wordGen) { words =>
