@@ -19,11 +19,26 @@ import graft.operators.MR
   */
 object WordCount {
 
-  /** Reference tokenizer semantics (main.c:17-23, Q1-fixed): whitespace
-    * split, empties dropped, case and punctuation preserved.
+  /** Reference tokenizer semantics (main.c:17-23, Q1-fixed): split on
+    * runs of ' ', '\t', '\n' and '\r' only, empties dropped, case and
+    * punctuation preserved. A plain scan: `String.split` with a
+    * multi-character regex compiles a `Pattern` on every line.
     */
-  def tokenize(line: String): Seq[(String, Int)] =
-    line.split("[ \t\n\r]+").toIndexedSeq.filter(_.nonEmpty).map(w => (w, 1))
+  def tokenize(line: String): Seq[(String, Int)] = {
+    val words = Vector.newBuilder[(String, Int)]
+    val n = line.length
+    var i = 0
+    while (i < n) {
+      while (i < n && isDelimiter(line.charAt(i))) i += 1
+      val start = i
+      while (i < n && !isDelimiter(line.charAt(i))) i += 1
+      if (i > start) words += ((line.substring(start, i), 1))
+    }
+    words.result()
+  }
+
+  private def isDelimiter(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\r'
 
   /** Word counts over the files via the MR facade — 1 reduce partition
     * with the reference's default djb2 partitioner, mirroring

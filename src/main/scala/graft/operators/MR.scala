@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.util.Objects
+import scala.collection.mutable
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,9 +22,14 @@ import org.apache.spark.sql.functions._
   *   - `Partitioner` → optional `K => Int`; when supplied we reproduce
   *     the reference's exact dataflow — the user's id (mod
   *     `numPartitions`) IS the Spark reduce partition id, as the
-  *     reference's id alone picks the reducer (`src/mapreduce.c:115`);
-  *     then sort within partition and a grouped streaming reduce over
-  *     sorted runs (reference `src/mapreduce.c:141-160,215-238`)
+  *     reference's id alone picks the reducer (`src/mapreduce.c:115`)
+  *   - the per-partition `qsort` by `strcmp` plus the distinct-key walk
+  *     (reference `src/mapreduce.c:141-160,215-238`) → a sort within
+  *     each reduce partition on the key's 64-bit `xxhash64` (one LongType
+  *     column, so Spark radix-sorts it with no record comparator) and a
+  *     collision-safe streaming grouper over the equal-hash runs
+  *     ([[hashGroups]]). Departure: the reducer is called in hash order
+  *     within a partition, not in key order
   *   - `num_reducers` → `numPartitions`, without the `MAPS_NUM = 100`
   *     cap (reference `src/mapreduce.h:8`)
   *
@@ -61,7 +68,7 @@ object MR {
     implicit val kvEnc: Encoder[(K, V)] =
       Encoders.tuple(implicitly[Encoder[K]], implicitly[Encoder[V]])
     val kv: Dataset[(K, V)] = lines.flatMap(mapper)
-    partitioner match {
+    val exchanged = partitioner match {
       case None =>
         // Default-partitioner path: hash-partition on the KEY COLUMN to
         // exactly `numPartitions` (the num_reducers contract — R reduce
@@ -69,29 +76,29 @@ object MR {
         // here too, not just under a user partitioner; groupByKey would
         // silently use spark.sql.shuffle.partitions instead, and
         // repartition-then-groupByKey would shuffle twice because the
-        // lambda key is opaque to Catalyst). One exchange + in-partition
-        // sort + streaming grouped reduce — the same physical shape
-        // Catalyst plans for typed mapGroups, with the count pinned.
-        kv.repartition(numPartitions, col("_1"))
-          .sortWithinPartitions(col("_1"))
-          .mapPartitions(it => groupedRuns(it).map { case (k, vs) => reducer(k, vs) })
+        // lambda key is opaque to Catalyst).
+        kv.repartition(numPartitions, col("_1")).toDF()
       case Some(p) =>
         // Reference-faithful path: the user's partition id IS the reduce
-        // partition (reference src/mapreduce.c:115), then sort within
-        // partition (src/mapreduce.c:141-160) and a streaming grouped
-        // reduce over the sorted runs (src/mapreduce.c:215-238).
-        // repartitionById plans a pass-through exchange that routes each
-        // row to partition `_1` as is; hash-partitioning on the id
-        // instead would re-hash it, so distinct ids could collide and
-        // leave reduce partitions empty while one takes most of the rows.
+        // partition (reference src/mapreduce.c:115). repartitionById
+        // plans a pass-through exchange that routes each row to
+        // partition `_1` as is; hash-partitioning on the id instead would
+        // re-hash it, so distinct ids could collide and leave reduce
+        // partitions empty while one takes most of the rows.
         implicit val pkvEnc: Encoder[(Int, K, V)] = Encoders.tuple(
           Encoders.scalaInt, implicitly[Encoder[K]], implicitly[Encoder[V]])
         kv.map { case (k, v) => (math.floorMod(p(k), numPartitions), k, v) }
           .repartitionById(numPartitions, col("_1"))
-          .sortWithinPartitions(col("_2"))
-          .mapPartitions(it => groupedRuns(it.map(t => (t._2, t._3)))
-            .map { case (k, vs) => reducer(k, vs) })
+          .select(col("_2").as("_1"), col("_3").as("_2"))
     }
+    // Both paths: sort each reduce partition on the key's xxhash64, then
+    // a streaming grouped reduce over the equal-hash runs. The hash is
+    // computed after the exchange so the shuffle does not carry it.
+    implicit val kvhEnc: Encoder[(K, V, Long)] = Encoders.tuple(
+      implicitly[Encoder[K]], implicitly[Encoder[V]], Encoders.scalaLong)
+    exchanged.withColumn("_3", xxhash64(col("_1"))).as[(K, V, Long)]
+      .sortWithinPartitions(col("_3"))
+      .mapPartitions(it => hashGroups(it).map { case (k, vs) => reducer(k, vs) })
   }
 
   /** djb2 — bit-compatible with the reference's default partitioner
@@ -107,50 +114,71 @@ object MR {
     * produces one).
     */
   def defaultHashPartition(key: String, numPartitions: Int): Int = {
+    val bytes = key.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     var hash = 5381L
-    key.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      .foreach(b => hash = (hash << 5) + hash + b)
+    var i = 0
+    while (i < bytes.length) {
+      hash = (hash << 5) + hash + bytes(i)
+      i += 1
+    }
     java.lang.Long.remainderUnsigned(hash, numPartitions.toLong).toInt
   }
 
-  /** Group a key-sorted iterator into (key, streaming-values) runs —
-    * the reference's distinct-key walk with its `prev` sentinel
-    * (reference `src/mapreduce.c:220,226-233`), lazily. Each inner
-    * iterator must be consumed before the next run is requested (same
-    * contract as the reference's Getter, SURVEY.md §2.2 Q4) — the outer
-    * iterator drains any unconsumed tail itself, so partial consumption
-    * is safe (no corruption mode).
+  /** Group a hash-sorted iterator of (key, value, key hash) rows into
+    * (key, streaming-values) groups — the reference's distinct-key walk
+    * with its `prev` sentinel (reference `src/mapreduce.c:220,226-233`),
+    * lazily, over runs of equal hash instead of runs of equal key. Each
+    * key comes out exactly once: a run's first key streams its values;
+    * rows of the run whose key differs from it (a 64-bit hash collision,
+    * or keys like `0.0`/`-0.0` that Spark hashes alike) are set aside and
+    * handed out, each key once with its values in input order, after the
+    * run. A collision therefore costs memory, never correctness. Each
+    * inner iterator must be consumed before the next group is requested
+    * (same contract as the reference's Getter, SURVEY.md §2.2 Q4) — the
+    * outer iterator drains any unconsumed tail itself, so partial
+    * consumption is safe (no corruption mode).
     *
-    * Run boundaries use VALUE equality via `Objects.deepEquals`: the
-    * upstream `sortWithinPartitions` orders by the key's Catalyst
-    * representation, under which equal arrays (`Array[Byte]` → BINARY,
-    * `Array[Int]` → ARRAY, …) sort adjacently but compare as distinct
-    * under Scala `==` (JVM reference equality for arrays) — plain `==`
-    * would split every array-keyed group into one run per row. Keys
-    * nested inside a Product that themselves contain arrays keep the
-    * Product's own `equals` and are out of scope (same caveat as any
-    * case class with array fields).
+    * Keys compare by VALUE via `Objects.deepEquals`: equal arrays
+    * (`Array[Byte]` → BINARY, `Array[Int]` → ARRAY, …) hash alike but
+    * compare as distinct under Scala `==` (JVM reference equality for
+    * arrays). Keys nested inside a Product that themselves contain
+    * arrays keep the Product's own `equals` and are out of scope (same
+    * caveat as any case class with array fields).
     */
-  private[graft] def groupedRuns[K, V](it: Iterator[(K, V)]): Iterator[(K, Iterator[V])] =
+  private[graft] def hashGroups[K, V](it: Iterator[(K, V, Long)]): Iterator[(K, Iterator[V])] =
     new Iterator[(K, Iterator[V])] {
       private val buf = it.buffered
       private var current: Iterator[V] = Iterator.empty
+      private val aside = mutable.Queue[(K, mutable.ArrayBuffer[V])]()
       def hasNext: Boolean = {
         while (current.hasNext) current.next() // drain unconsumed tail
-        buf.hasNext
+        aside.nonEmpty || buf.hasNext
       }
       def next(): (K, Iterator[V]) = {
         if (!hasNext) throw new NoSuchElementException
-        val k = buf.head._1
-        current = new Iterator[V] {
-          def hasNext: Boolean =
-            buf.hasNext && java.util.Objects.deepEquals(buf.head._1, k)
-          def next(): V = {
-            if (!hasNext) throw new NoSuchElementException
-            buf.next()._2
+        if (aside.nonEmpty) {
+          val (k, vs) = aside.dequeue()
+          (k, vs.iterator)
+        } else {
+          val (k, _, h) = buf.head
+          current = new Iterator[V] {
+            def hasNext: Boolean = {
+              while (buf.hasNext && buf.head._3 == h && !Objects.deepEquals(buf.head._1, k)) {
+                val (k2, v2, _) = buf.next()
+                aside.find(g => Objects.deepEquals(g._1, k2)) match {
+                  case Some((_, vs)) => vs += v2
+                  case None => aside += ((k2, mutable.ArrayBuffer(v2)))
+                }
+              }
+              buf.hasNext && buf.head._3 == h
+            }
+            def next(): V = {
+              if (!hasNext) throw new NoSuchElementException
+              buf.next()._2
+            }
           }
+          (k, current)
         }
-        (k, current)
       }
     }
 }

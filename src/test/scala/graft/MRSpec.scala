@@ -2,7 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, XxHash64}
+import org.apache.spark.sql.execution.{ProjectExec, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.spark_partition_id
+import org.apache.spark.sql.types.LongType
 import graft.operators.MR
 
 /** The MR facade laws (SURVEY.md §5.2 t3): emit multiplicity is preserved
@@ -26,6 +31,11 @@ object MRSpec {
 
   def bytesCountReducer(k: Array[Byte], vs: Iterator[Int]): (String, Long) =
     (new String(k, java.nio.charset.StandardCharsets.UTF_8), vs.size.toLong)
+
+  def tokenizeDoubles(line: String): Seq[(Double, Int)] =
+    line.split(" ").toIndexedSeq.map(w => (w.toDouble, 1))
+
+  def doubleCountReducer(k: Double, vs: Iterator[Int]): (Double, Long) = (k, vs.size.toLong)
 }
 
 class MRSpec extends AnyFunSuite {
@@ -148,7 +158,7 @@ class MRSpec extends AnyFunSuite {
   }
 
   test("Array[Byte] keys group by VALUE equality on both reduce paths") {
-    // regression: groupedRuns used Scala == (reference equality for JVM
+    // regression: the run walk used Scala == (reference equality for JVM
     // arrays) — each BINARY-keyed row became its own run, one output per
     // row instead of per key, on both the default and user-partitioner
     // paths
@@ -164,21 +174,83 @@ class MRSpec extends AnyFunSuite {
     assert(viaCustom == expectedCounts)
   }
 
-  test("groupedRuns: array keys delimit runs by content") {
+  test("signed-zero Double keys are each reduced once on both reduce paths") {
+    // regression: the key sort ordered 0.0 and -0.0 as equal, keeping an
+    // interleaved input order, and the run walk split them into one run
+    // per row — five outputs of count 1 instead of three keys
+    val lines = spark.createDataset(Seq("0.0 -0.0 0.0 -0.0 1.0"))
+    val expected = Seq(("-0.0", 2L), ("0.0", 2L), ("1.0", 1L))
+    for (partitioner <- Seq(None, Some((_: Double) => 0))) {
+      val got = MR.runOnDataset[Double, Int, (Double, Long)](
+        lines, tokenizeDoubles, doubleCountReducer, 1, partitioner)
+        .collect().map { case (k, n) => (k.toString, n) }.sorted.toSeq
+      assert(got == expected, s"partitioner=$partitioner")
+    }
+  }
+
+  test("both reduce paths sort each partition on the key's xxhash64 alone, above the exchange") {
+    val lines = spark.read.textFile(TestSpark.resource("words.txt"))
+    val viaDefault = MR.runOnDataset[String, Int, (String, Long)](
+      lines, tokenize, countReducer, 4)
+    val viaCustom = MR.runOnDataset[String, Int, (String, Long)](
+      lines, tokenize, countReducer, 4, partitioner = Some(MR.defaultHashPartition(_, 4)))
+    for ((name, ds) <- Seq("default" -> viaDefault.toDF(), "user" -> viaCustom.toDF())) {
+      val planText = TestSpark.finalPlan(ds)
+      val plan = ds.queryExecution.executedPlan
+      val walk = new AdaptiveSparkPlanHelper {}
+      val hashCols = walk.collect(plan) { case p: ProjectExec => p.projectList }.flatten
+        .collect { case a: Alias if a.child.isInstanceOf[XxHash64] => a.exprId }
+      assert(hashCols.size == 1, s"$name: $planText")
+      val sorts = walk.collect(plan) { case s: SortExec => s.sortOrder.map(_.child) }
+      assert(sorts.size == 1, s"$name: $planText")
+      sorts.head match {
+        case Seq(a: Attribute) =>
+          assert(a.dataType == LongType && a.exprId == hashCols.head, s"$name: $planText")
+        case other => fail(s"$name: sort keys $other\n$planText")
+      }
+      val exchanges = walk.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"$name: $planText")
+      assert(!exchanges.head.child.exists(_.expressions.exists(_.exists(_.isInstanceOf[XxHash64]))),
+        s"$name: the exchange carries the hash\n$planText")
+      if (name == "user") {
+        assert(planText.contains("Exchange shufflepartitionidpassthrough("), planText)
+        assert(!planText.contains("hashpartitioning"), planText)
+      }
+    }
+  }
+
+  test("hashGroups: array keys delimit runs by content") {
+    // one hash for all rows, so only deepEquals separates the keys
     val sorted = Seq(
-      (Array[Byte](1, 2), "a"), (Array[Byte](1, 2), "b"), (Array[Byte](3), "c"))
-    val runs = MR.groupedRuns(sorted.iterator)
+      (Array[Byte](1, 2), "a", 7L), (Array[Byte](1, 2), "b", 7L), (Array[Byte](3), "c", 7L))
+    val runs = MR.hashGroups(sorted.iterator)
       .map { case (k, vs) => (k.toSeq, vs.toSeq) }.toSeq
     assert(runs == Seq((Seq[Byte](1, 2), Seq("a", "b")), (Seq[Byte](3), Seq("c"))))
   }
 
-  test("groupedRuns: runs reconstruct the sorted input; partial consumption is safe") {
-    val sorted = Seq(("a", 1), ("a", 2), ("b", 3), ("c", 4), ("c", 5), ("c", 6))
-    val rebuilt = MR.groupedRuns(sorted.iterator)
+  test("hashGroups: runs reconstruct the sorted input; partial consumption is safe") {
+    val sorted = Seq(("a", 1, 1L), ("a", 2, 1L), ("b", 3, 2L), ("c", 4, 3L), ("c", 5, 3L),
+      ("c", 6, 3L))
+    val rebuilt = MR.hashGroups(sorted.iterator)
       .flatMap { case (k, vs) => vs.map((k, _)) }.toSeq
-    assert(rebuilt == sorted)
+    assert(rebuilt == sorted.map { case (k, v, _) => (k, v) })
     // consume only the key, never the values — next run must still be correct
-    val keys = MR.groupedRuns(sorted.iterator).map(_._1).toSeq
+    val keys = MR.hashGroups(sorted.iterator).map(_._1).toSeq
     assert(keys == Seq("a", "b", "c"))
+  }
+
+  test("hashGroups: keys colliding on one hash each come out once, values in input order") {
+    val collided = Seq("a", "b", "a", "c", "b", "a").zipWithIndex.map { case (k, v) => (k, v, 9L) }
+    val rows = collided :+ (("d", 6, 10L))
+    def groups(take: (String, Iterator[Int]) => Seq[Int]) =
+      MR.hashGroups(rows.iterator).map { case (k, vs) => (k, take(k, vs)) }.toSeq
+    assert(groups((_, vs) => vs.toSeq) ==
+      Seq(("a", Seq(0, 2, 5)), ("b", Seq(1, 4)), ("c", Seq(3)), ("d", Seq(6))))
+    // a reducer that reads no values, or only one, leaves the next group correct
+    assert(groups((_, _) => Nil).map(_._1) == Seq("a", "b", "c", "d"))
+    assert(groups((_, vs) => vs.take(1).toSeq) ==
+      Seq(("a", Seq(0)), ("b", Seq(1)), ("c", Seq(3)), ("d", Seq(6))))
+    assert(groups((k, vs) => if (k == "a") vs.take(1).toSeq else vs.toSeq) ==
+      Seq(("a", Seq(0)), ("b", Seq(1, 4)), ("c", Seq(3)), ("d", Seq(6))))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.apache.spark.sql.functions._
 import graft.functions.Aggregators
 import graft.sources.Tables
@@ -70,6 +71,18 @@ class SketchSpec extends AnyFunSuite {
     assert(WordCount.lookup(spark, Seq(file), "Hello").contains(2L))
     assert(WordCount.lookup(spark, Seq(file), "hello").contains(1L))
     assert(WordCount.lookup(spark, Seq(file), "zebra").isEmpty)
+  }
+
+  test("WordCount.tokenize equals a split on runs of space, tab, LF and CR (ScalaCheck)") {
+    // \f, \u000B, \u00A0 and a non-BMP character are not delimiters
+    val piece = Gen.oneOf("a", "B", "z", " ", "\t", "\n", "\r", "\f", "\u000B", "\u00A0",
+      "\uD83D\uDE00")
+    val prop = Prop.forAll(Gen.listOf(piece).map(_.mkString)) { line =>
+      WordCount.tokenize(line) ==
+        line.split("[ \t\n\r]+").toSeq.filter(_.nonEmpty).map(w => (w, 1))
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(500), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("CMS never undercounts, and overestimates stay within the e*T/w bound") {
