@@ -53,7 +53,7 @@ import org.apache.spark.sql.functions._
   * Usage: `IngestBench <outPath> <sfDir> <numBatches>`; set
   * `SPARK_GRAFT_INGEST_TIERS` (comma-separated tier names) to probe a
   * subset — the scale (30×) record targets the heaviest state tiers
-  * rather than paying the full 10-tier sweep at every corpus size.
+  * rather than paying the full 11-tier sweep at every corpus size.
   */
 object IngestBench {
 
@@ -88,7 +88,7 @@ object IngestBench {
         ",\"after_compact\":" + num(after) + "}"
 
     // optional tier subset (comma-separated SPARK_GRAFT_INGEST_TIERS):
-    // a 30x corpus makes the full 10-tier sweep hours long — at scale
+    // a 30x corpus makes the full 11-tier sweep hours long — at scale
     // the record targets the heaviest state tiers, not all of them
     val KnownTiers = Seq("neardup", "ivf", "text", "bloom", "profile",
       "budget", "valuehist", "centroids", "transitions", "hazard",
@@ -336,7 +336,7 @@ object IngestBench {
 
     spark.stop()
     // record WHICH tiers ran: a SPARK_GRAFT_INGEST_TIERS subset sweep
-    // must be distinguishable from a full 10-tier sweep downstream
+    // must be distinguishable from a full 11-tier sweep downstream
     val subsetField = only match {
       case Some(t) =>
         val sel = KnownTiers.filter(t.contains)

@@ -1,9 +1,12 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery}
-import graft.operators.{Dedup, Similarity, Sketches, TextIndex}
+import graft.operators.{Dedup, Multimodal, Prep, Profile, Sessions, Similarity, Sketches, TextIndex}
 
 /** Structured Streaming tier over the `events` dataflow (SURVEY.md §2.5
   * streaming row, §7 step 7).
@@ -130,6 +133,129 @@ object Streams {
         col("p_ts"), col("c_ts"))
   }
 
+  // ——— the exactly-once ingest protocol, shared by every foreachBatch tier ———
+  // A state dir holds batch-scoped frames `<frame>/batch=N` and one
+  // `_committed/N` marker per batch, written LAST. Markers are never
+  // deleted: they are the replay-skip contract. A compaction folds the
+  // committed batches into a canonical base `base/compact=C` (the tier's
+  // standalone artifact layout) and writes `_compacted/C` LAST: every
+  // batch id ≤ C is then read from the base. Readers resolve one
+  // [[State]]: C = max compacted marker, deltas = committed ids above C.
+  // Markers go through the Hadoop FileSystem of the state dir, so the
+  // same code runs against HDFS/object stores, not just local disk
+  // (object-store caveat: marker visibility needs read-after-write
+  // consistency, which S3/GCS/ABFS all provide today).
+
+  private val Committed = "_committed"
+  private val Compacted = "_compacted"
+
+  /** One listing of a state dir: the compaction watermark `c` (-1 =
+    * never compacted) and every committed batch id. A tier's batch step,
+    * reader and compaction each work off ONE State, so a batch that
+    * commits meanwhile is never half-seen.
+    */
+  private[graft] case class State(spark: SparkSession, dir: String, c: Long,
+      committed: Seq[Long]) {
+    /** Committed batches not yet covered by the watermark, ascending. */
+    val ids: Seq[Long] = committed.filter(_ > c).sorted
+    def isEmpty: Boolean = c < 0 && ids.isEmpty
+    def base: Option[String] = if (c >= 0) Some(baseDir(dir, c)) else None
+    /** The base's copy of `frame` (at `baseFrame` under the base), then
+      * every delta batch's, oldest first.
+      */
+    def paths(frame: String, baseFrame: String): Seq[String] =
+      base.map(b => s"$b/$baseFrame").toSeq ++ ids.map(i => s"$dir/$frame/batch=$i")
+    def paths(frame: String): Seq[String] = paths(frame, frame)
+    def read(frame: String, baseFrame: String): DataFrame =
+      spark.read.parquet(paths(frame, baseFrame): _*)
+    def read(frame: String): DataFrame = read(frame, frame)
+  }
+
+  private def state(spark: SparkSession, dir: String): State =
+    State(spark, dir, markers(spark, dir, Compacted).foldLeft(-1L)(math.max),
+      markers(spark, dir, Committed))
+
+  /** A tier's read face: `f` over the current state, None before the
+    * first commit.
+    */
+  private def view[T](spark: SparkSession, dir: String)(f: State => T): Option[T] =
+    Some(state(spark, dir)).filterNot(_.isEmpty).map(f)
+
+  /** The one `foreachBatch` starter: each micro-batch runs `step`, the
+    * same public batch function tests and batch-mode replays call.
+    */
+  private def stream(df: DataFrame, checkpointDir: String)(
+      step: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) => step(batch.toDF(), batchId) }
+      .start()
+
+  /** Commit one batch exactly once. A replayed id that is already
+    * committed is skipped. Otherwise `write` gets the state as listed
+    * before this batch and the batch-scoped dir of each frame
+    * (`<dir>/<frame>/batch=<id>`), and `_committed/<id>` is written
+    * LAST. A batch that crashed mid-write left no marker: its dirs are
+    * simply overwritten on replay, and no reader ever sees them.
+    */
+  private def commitOnce(batch: DataFrame, dir: String, batchId: Long)(
+      write: (State, String => String) => Unit): Unit = {
+    val s = state(batch.sparkSession, dir)
+    if (!s.committed.contains(batchId)) {
+      write(s, frame => s"$dir/$frame/batch=$batchId")
+      mark(s.spark, dir, Committed, batchId)
+    }
+  }
+
+  /** Fold every committed batch (and any prior base) into a fresh
+    * canonical base `base/compact=C`, C = the newest committed id. Takes
+    * ONE listing and `fold`s exactly that state into the base dir it is
+    * handed; `_compacted/C` is written LAST, so a crash mid-fold leaves
+    * readers on the previous view. Safe against a live ingest: a batch
+    * that commits mid-compact is not in the listing, so it stays a delta
+    * until the next cadence run. Then a best-effort GC deletes the
+    * covered `frames` batch dirs and the previous base; a crash mid-GC
+    * only leaves extra files, which the next compaction sweeps (its ids
+    * derive from `_committed`, which is never pruned). Returns C, or
+    * None when there is nothing new to fold.
+    */
+  private[graft] def compact(spark: SparkSession, dir: String, frames: Seq[String])(
+      fold: (State, String) => Unit): Option[Long] = {
+    val s = state(spark, dir)
+    s.ids.lastOption.map { c =>
+      fold(s, baseDir(dir, c))
+      mark(spark, dir, Compacted, c)
+      val fs = fileSystem(spark, dir)
+      def rm(p: String): Unit =
+        try fs.delete(new Path(p), true) catch { case NonFatal(_) => () }
+      for (f <- frames; i <- s.ids) rm(s"$dir/$f/batch=$i")
+      s.base.foreach(rm)
+      c
+    }
+  }
+
+  private def baseDir(dir: String, c: Long): String = s"$dir/base/compact=$c"
+
+  private def fileSystem(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+
+  private def markers(spark: SparkSession, dir: String, kind: String): Seq[Long] = {
+    val fs = fileSystem(spark, dir)
+    val p = new Path(s"$dir/$kind")
+    if (!fs.exists(p)) Nil else fs.listStatus(p).toSeq.map(_.getPath.getName.toLong)
+  }
+
+  private def mark(spark: SparkSession, dir: String, kind: String, id: Long): Unit =
+    fileSystem(spark, dir).create(new Path(s"$dir/$kind/$id"), true).close()
+
+  private def save(df: Dataset[_], path: String): Unit =
+    df.write.mode("overwrite").parquet(path)
+
+  private val Shingles = "shingles"
+  private val Bands = "bands"
+  private val Edges = "edges"
+  private val IndexDir = "index"
+
   /** Streaming ingest near-dup — the `foreachBatch` composition that
     * closes the loop between the streaming tier and the incremental
     * dedup tier: each micro-batch of documents is deduped against the
@@ -158,13 +284,8 @@ object Streams {
       n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4,
       threshold: Double = 0.7,
       maxBucketSize: Int = Dedup.NearDupMaxBucket): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestNearDupBatch(batch.toDF(), stateDir, batchId,
-          n, numHashes, rowsPerBand, threshold, maxBucketSize)
-      }
-      .start()
+    stream(docs, checkpointDir)(ingestNearDupBatch(_, stateDir, _,
+      n, numHashes, rowsPerBand, threshold, maxBucketSize))
 
   /** One ingest step (see [[ingestNearDup]]); public for batch-mode
     * replays and tests — the streaming query calls exactly this.
@@ -173,37 +294,20 @@ object Streams {
       batch: DataFrame, stateDir: String, batchId: Long,
       n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4,
       threshold: Double = 0.7,
-      maxBucketSize: Int = Dedup.NearDupMaxBucket): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed, durable
-    // empty prior index for the first batch: the incremental pass then
-    // returns exactly the batch-internal pairs (every pair "touches the
-    // delta"), so one code path serves bootstrap and steady state
-    val idx = ingestIndex(spark, stateDir, n, numHashes, rowsPerBand)
-      .getOrElse(Dedup.buildIndex(batch.limit(0), n, numHashes, rowsPerBand))
-    Dedup.incrementalNearDupEdgesIndexed(idx, batch, threshold, maxBucketSize)
-      .write.mode("overwrite").parquet(s"$stateDir/edges/batch=$batchId")
-    val sh = Dedup.shingles(batch, n)
-    sh.write.mode("overwrite").parquet(s"$stateDir/shingles/batch=$batchId")
-    Dedup.lshBands(sh, numHashes, rowsPerBand)
-      .write.mode("overwrite").parquet(s"$stateDir/bands/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
-
-  /** Write the `_committed/<batchId>` marker LAST — the ONE definition
-    * of the commit protocol all three ingest tiers share. Goes through
-    * the Hadoop FileSystem of the state dir, so the same code runs
-    * against HDFS/object stores, not just local disk (object-store
-    * caveat: marker visibility needs read-after-write consistency,
-    * which S3/GCS/ABFS all provide today).
-    */
-  private def markCommitted(spark: SparkSession, stateDir: String,
-      batchId: Long): Unit = {
-    val fs = fileSystem(spark, stateDir)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_committed"))
-    fs.create(
-      new org.apache.hadoop.fs.Path(s"$stateDir/_committed/$batchId"), true).close()
-  }
+      maxBucketSize: Int = Dedup.NearDupMaxBucket): Unit =
+    commitOnce(batch, stateDir, batchId) { (s, at) =>
+      // empty prior index for the first batch: the incremental pass then
+      // returns exactly the batch-internal pairs (every pair "touches the
+      // delta"), so one code path serves bootstrap and steady state
+      val idx =
+        if (s.isEmpty) Dedup.buildIndex(batch.limit(0), n, numHashes, rowsPerBand)
+        else nearDupIndex(s, n, numHashes, rowsPerBand)
+      save(Dedup.incrementalNearDupEdgesIndexed(idx, batch, threshold, maxBucketSize),
+        at(Edges))
+      val sh = Dedup.shingles(batch, n)
+      save(sh, at(Shingles))
+      save(Dedup.lshBands(sh, numHashes, rowsPerBand), at(Bands))
+    }
 
   /** The accumulated ingest index over all COMMITTED batches (None
     * before the first commit) — directly searchable by the incremental
@@ -212,39 +316,27 @@ object Streams {
     * uncompacted deltas, so probe cost stays flat in batch count.
     */
   def ingestIndex(spark: SparkSession, stateDir: String,
-      n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4): Option[Dedup.DedupIndex] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      if (c >= 0) {
-        val m = spark.read.parquet(s"${baseDir(stateDir, c)}/index/meta").head
-        require(m.getAs[Int]("n") == n && m.getAs[Int]("num_hashes") == numHashes &&
-            m.getAs[Int]("rows_per_band") == rowsPerBand,
-          s"ingestIndex params ($n,$numHashes,$rowsPerBand) differ from the " +
-            s"compacted base's manifest ($m) — refusing to mix band layouts")
-      }
-      val basePfx = if (c >= 0) Seq(s"${baseDir(stateDir, c)}/index") else Nil
-      Some(Dedup.DedupIndex(
-        spark.read.parquet(basePfx.map(_ + "/shingles") ++
-          ids.map(i => s"$stateDir/shingles/batch=$i"): _*),
-        spark.read.parquet(basePfx.map(_ + "/bands") ++
-          ids.map(i => s"$stateDir/bands/batch=$i"): _*),
-        n, numHashes, rowsPerBand))
+      n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4): Option[Dedup.DedupIndex] =
+    view(spark, stateDir)(nearDupIndex(_, n, numHashes, rowsPerBand))
+
+  private def nearDupIndex(s: State, n: Int, numHashes: Int,
+      rowsPerBand: Int): Dedup.DedupIndex = {
+    s.base.foreach { b =>
+      val m = s.spark.read.parquet(s"$b/$IndexDir/meta").head()
+      require(m.getAs[Int]("n") == n && m.getAs[Int]("num_hashes") == numHashes &&
+          m.getAs[Int]("rows_per_band") == rowsPerBand,
+        s"ingestIndex params ($n,$numHashes,$rowsPerBand) differ from the " +
+          s"compacted base's manifest ($m) — refusing to mix band layouts")
     }
+    Dedup.DedupIndex(s.read(Shingles, s"$IndexDir/$Shingles"),
+      s.read(Bands, s"$IndexDir/$Bands"), n, numHashes, rowsPerBand)
   }
 
   /** All committed near-dup edges of an [[ingestNearDup]] run so far
     * (compacted base edges + uncompacted delta batches).
     */
-  def ingestEdges(spark: SparkSession, stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else Some(spark.read.parquet(
-      (if (c >= 0) Seq(s"${baseDir(stateDir, c)}/edges") else Nil) ++
-        ids.map(i => s"$stateDir/edges/batch=$i"): _*))
-  }
+  def ingestEdges(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    view(spark, stateDir)(_.read(Edges))
 
   /** Fold every committed near-dup ingest batch (and any prior base)
     * into a fresh canonical base: `base/compact=C/index` in the
@@ -253,9 +345,7 @@ object Streams {
     * newest committed batch folded in. The `_compacted/C` marker is
     * written LAST — the same commit protocol as the ingest itself, so a
     * crash mid-compact leaves readers on the previous view. Covered
-    * batch dirs and the previous base are then deleted (set `gc = false`
-    * when long-lived readers may still hold lazy plans over them — a
-    * production job GCs on a delay horizon instead).
+    * batch dirs and the previous base are then deleted.
     *
     * Safe against a live ingest: only batches committed at the time of
     * the listing are folded; a batch that commits mid-compact stays a
@@ -263,23 +353,15 @@ object Streams {
     * None when there is nothing new to fold.
     */
   def compactNearDup(spark: SparkSession, stateDir: String,
-      n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      val idx = ingestIndex(spark, stateDir, n, numHashes, rowsPerBand).get
-      Dedup.compactIndex(idx, s"${baseDir(stateDir, c)}/index")
-      ingestEdges(spark, stateDir).get.write.mode("overwrite")
-        .parquet(s"${baseDir(stateDir, c)}/edges")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids,
-        Seq("shingles", "bands", "edges"))
-      Some(c)
+      n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4): Option[Long] =
+    compact(spark, stateDir, Seq(Shingles, Bands, Edges)) { (s, base) =>
+      Dedup.compactIndex(nearDupIndex(s, n, numHashes, rowsPerBand), s"$base/$IndexDir")
+      save(s.read(Edges), s"$base/$Edges")
     }
-  }
+
+  private val Cents = "cents"
+  private val Meta = "meta"
+  private val Assigned = "assigned"
 
   /** Streaming embedding ingest — the [[ingestNearDup]] shape on the
     * similarity tier: the FIRST micro-batch is the index build job
@@ -300,55 +382,38 @@ object Streams {
     */
   def ingestIvf(emb: DataFrame, stateDir: String,
       checkpointDir: String, iters: Int = 2): StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestIvfBatch(batch.toDF(), stateDir, batchId, iters)
-      }
-      .start()
+    stream(emb, checkpointDir)(ingestIvfBatch(_, stateDir, _, iters))
 
   /** One embedding-ingest step (see [[ingestIvf]]); public for batch-mode
     * replays and tests — the streaming query calls exactly this.
     */
   def ingestIvfBatch(batch: DataFrame, stateDir: String, batchId: Long,
-      iters: Int = 2): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    ingestIvfIndex(spark, stateDir) match {
-      case None => // bootstrap: THIS batch is the index build job
+      iters: Int = 2): Unit =
+    commitOnce(batch, stateDir, batchId) { (s, at) =>
+      if (s.isEmpty) { // bootstrap: THIS batch is the index build job
         val idx = Similarity.ivfTrainedIndex(batch, iters = iters)
-        idx.cents.write.mode("overwrite").parquet(s"$stateDir/cents")
-        spark.range(1).select(lit(idx.stride).as("stride"))
-          .write.mode("overwrite").parquet(s"$stateDir/meta")
-        idx.assigned.write.mode("overwrite")
-          .parquet(s"$stateDir/assigned/batch=$batchId")
-      case Some(idx) => // steady state: one batch-sized scan, q87's law
-        Similarity.ivfAssign(idx, batch).write.mode("overwrite")
-          .parquet(s"$stateDir/assigned/batch=$batchId")
+        save(idx.cents, s"$stateDir/$Cents")
+        save(s.spark.range(1).select(lit(idx.stride).as("stride")), s"$stateDir/$Meta")
+        save(idx.assigned, at(Assigned))
+      } else // steady state: one batch-sized scan, q87's law
+        save(Similarity.ivfAssign(ivfIndex(s), batch), at(Assigned))
     }
-    markCommitted(spark, stateDir, batchId)
-  }
 
   /** The accumulated streamed index over all COMMITTED batches (None
     * before bootstrap commits) — directly [[Similarity.ivfSearch]]-able.
     * After a [[compactIvf]] the base's canonical artifact stands in for
     * the assignment deltas it folded.
     */
-  def ingestIvfIndex(spark: SparkSession, stateDir: String): Option[Similarity.IvfIndex] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      // cents/stride never change after bootstrap; read them from the
-      // base when one exists so the base alone is the full artifact
-      val pfx = if (c >= 0) baseDir(stateDir, c) else stateDir
-      Some(Similarity.ivfIndexFrom(
-        spark.read.parquet(s"$pfx/meta").head.getAs[Int]("stride"),
-        spark.read.parquet(s"$pfx/cents"),
-        spark.read.parquet(
-          (if (c >= 0) Seq(s"${baseDir(stateDir, c)}/assigned") else Nil) ++
-            ids.map(i => s"$stateDir/assigned/batch=$i"): _*)))
-    }
+  def ingestIvfIndex(spark: SparkSession, stateDir: String): Option[Similarity.IvfIndex] =
+    view(spark, stateDir)(ivfIndex)
+
+  private def ivfIndex(s: State): Similarity.IvfIndex = {
+    // cents/stride never change after bootstrap; read them from the
+    // base when one exists so the base alone is the full artifact
+    val pfx = s.base.getOrElse(s.dir)
+    Similarity.ivfIndexFrom(
+      s.spark.read.parquet(s"$pfx/$Meta").head().getAs[Int]("stride"),
+      s.spark.read.parquet(s"$pfx/$Cents"), s.read(Assigned))
   }
 
   /** Fold every committed IVF assignment delta (and any prior base) into
@@ -357,24 +422,17 @@ object Streams {
     * stride manifest, loadable by [[Similarity.loadIvfIndex]] as a
     * standalone artifact. Same commit/GC protocol as [[compactNearDup]]
     * (`_compacted/C` marker written last; covered `assigned/batch=N`
-    * dirs and the previous base deleted when `gc`). The bootstrap
+    * dirs and the previous base then deleted). The bootstrap
     * `cents`/`meta` at the state root are kept — they are the build
     * job's artifact and stay byte-identical to the base's copy.
     */
-  def compactIvf(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      Similarity.writeIvfIndex(
-        ingestIvfIndex(spark, stateDir).get, baseDir(stateDir, c))
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("assigned"))
-      Some(c)
-    }
-  }
+  def compactIvf(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq(Assigned))((s, base) =>
+      Similarity.writeIvfIndex(ivfIndex(s), base))
+
+  private val Postings = "postings"
+  private val Doclens = "doclens"
+  private val Stats = "stats"
 
   /** Streaming inverted-index ingest — the [[ingestNearDup]] shape on
     * the retrieval tier: each micro-batch of documents tokenizes ONLY
@@ -393,58 +451,36 @@ object Streams {
     */
   def ingestTextIndex(docs: DataFrame, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestTextIndexBatch(batch.toDF(), stateDir, batchId)
-      }
-      .start()
+    stream(docs, checkpointDir)(ingestTextIndexBatch(_, stateDir, _))
 
   /** One text-index ingest step (see [[ingestTextIndex]]); public for
     * batch-mode replays and tests — the streaming query calls exactly
     * this.
     */
   def ingestTextIndexBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    val idx = TextIndex.build(batch)
-    idx.postings.repartition(col("word")).write.mode("overwrite")
-      .parquet(s"$stateDir/postings/batch=$batchId")
-    idx.doclens.write.mode("overwrite")
-      .parquet(s"$stateDir/doclens/batch=$batchId")
-    spark.range(1)
-      .select(lit(idx.nDocs).as("n_docs"),
-        lit(idx.totalTokens).as("total_tokens"))
-      .write.mode("overwrite").parquet(s"$stateDir/stats/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+      batchId: Long): Unit =
+    commitOnce(batch, stateDir, batchId) { (s, at) =>
+      val idx = TextIndex.build(batch)
+      save(idx.postings.repartition(col("word")), at(Postings))
+      save(idx.doclens, at(Doclens))
+      save(s.spark.range(1).select(lit(idx.nDocs).as("n_docs"),
+        lit(idx.totalTokens).as("total_tokens")), at(Stats))
+    }
 
   /** The accumulated streamed inverted index over all COMMITTED batches
     * (None before the first commit) — directly
     * [[graft.operators.TextIndex.bm25]]/`lookup`-servable.
     */
   def ingestTextIndexRead(spark: SparkSession,
-      stateDir: String): Option[TextIndex.Index] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      // the base's stats manifest is the already-summed fold of the
-      // batches it covers — summing it WITH the delta manifests keeps
-      // stats mergeable across compactions
-      val basePfx = if (c >= 0) Seq(baseDir(stateDir, c)) else Nil
-      val s = spark.read
-        .parquet(basePfx.map(_ + "/stats") ++
-          ids.map(i => s"$stateDir/stats/batch=$i"): _*)
-        .agg(sum("n_docs"), sum("total_tokens")).head
-      Some(TextIndex.Index(
-        spark.read.parquet(basePfx.map(_ + "/postings") ++
-          ids.map(i => s"$stateDir/postings/batch=$i"): _*),
-        spark.read.parquet(basePfx.map(_ + "/doclens") ++
-          ids.map(i => s"$stateDir/doclens/batch=$i"): _*),
-        s.getLong(0), s.getLong(1)))
-    }
+      stateDir: String): Option[TextIndex.Index] =
+    view(spark, stateDir)(textIndex)
+
+  private def textIndex(s: State): TextIndex.Index = {
+    // the base's stats manifest is the already-summed fold of the
+    // batches it covers — summing it WITH the delta manifests keeps
+    // stats mergeable across compactions
+    val st = s.read(Stats).agg(sum("n_docs"), sum("total_tokens")).head()
+    TextIndex.Index(s.read(Postings), s.read(Doclens), st.getLong(0), st.getLong(1))
   }
 
   /** Fold every committed text-index ingest batch (and any prior base)
@@ -456,28 +492,18 @@ object Streams {
     * cost flat: without it a term probe touches one posting file group
     * PER BATCH forever.
     */
-  def compactTextIndex(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      TextIndex.compact(
-        ingestTextIndexRead(spark, stateDir).get, baseDir(stateDir, c))
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids,
-        Seq("postings", "doclens", "stats"))
-      Some(c)
-    }
-  }
+  def compactTextIndex(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq(Postings, Doclens, Stats))((s, base) =>
+      TextIndex.compact(textIndex(s), base))
 
-  /** Streaming ingest Bloom — the FOURTH `foreachBatch` composition:
-    * the membership front door ([[Sketches.bloomMembership]]) built
+  private val Bits = "bits"
+
+  /** Streaming ingest Bloom — a `foreachBatch` composition of the
+    * membership front door ([[Sketches.bloomMembership]]) built
     * incrementally. Per batch the arriving docs' occupied-bucket set
     * (distinct, ≤ m rows) lands under `bits/batch=N` with the (k, m)
     * meta written at bootstrap; the same marker-last commit protocol
-    * as the other three tiers. Bloom state is a pure SET UNION — bits
+    * as the other tiers. Bloom state is a pure SET UNION — bits
     * only ever turn on — so the fold over committed batches is
     * associative, replay-safe, and order-independent: the streamed
     * filter is bit-identical to a batch [[Sketches.bloomBuild]] over
@@ -485,62 +511,47 @@ object Streams {
     */
   def ingestBloom(docs: DataFrame, stateDir: String, checkpointDir: String,
       k: Int = 4, m: Int = 131072): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestBloomBatch(batch.toDF(), stateDir, batchId, k, m)
-      }
-      .start()
+    stream(docs, checkpointDir)(ingestBloomBatch(_, stateDir, _, k, m))
 
   /** One Bloom ingest step (see [[ingestBloom]]); public for batch-mode
     * replays and tests — the streaming query calls exactly this.
     */
   def ingestBloomBatch(batch: DataFrame, stateDir: String, batchId: Long,
-      k: Int = 4, m: Int = 131072): Unit = {
-    val spark = batch.sparkSession
-    val prior = committedBatches(spark, stateDir)
-    if (prior.contains(batchId)) return // replayed
-    // (k, m) drift gate: bucket sets hashed under different moduli must
-    // never be unioned — a mixed filter can yield FALSE NEGATIVES, the
-    // one failure a Bloom filter's contract forbids. On any non-first
-    // batch the pinned meta is authoritative; fail loudly on mismatch
-    // (the profile tier gates the same drift class via pp_version).
-    if (prior.nonEmpty || compactedUpTo(spark, stateDir) >= 0) {
-      val meta = spark.read.parquet(s"$stateDir/meta").head
-      val (k0, m0) = (meta.getAs[Long]("k").toInt, meta.getAs[Long]("m").toInt)
-      require(k0 == k && m0 == m,
-        s"Bloom ingest (k=$k, m=$m) conflicts with the pinned state " +
-          s"(k=$k0, m=$m0) at $stateDir — mixed-modulus bucket unions " +
-          "break the no-false-negatives contract")
+      k: Int = 4, m: Int = 131072): Unit =
+    commitOnce(batch, stateDir, batchId) { (s, at) =>
+      // (k, m) drift gate: bucket sets hashed under different moduli must
+      // never be unioned — a mixed filter can yield FALSE NEGATIVES, the
+      // one failure a Bloom filter's contract forbids. On any non-first
+      // batch the pinned meta is authoritative; fail loudly on mismatch
+      // (the profile tier gates the same drift class via pp_version).
+      if (!s.isEmpty) {
+        val (_, k0, m0) = bloom(s)
+        require(k0 == k && m0 == m,
+          s"Bloom ingest (k=$k, m=$m) conflicts with the pinned state " +
+            s"(k=$k0, m=$m0) at $stateDir — mixed-modulus bucket unions " +
+            "break the no-false-negatives contract")
+      }
+      save(Sketches.bloomBuild(batch, k, m), at(Bits))
+      // (k, m) pin: every batch writes the same one-row frame (the
+      // foreachBatch loop is serial, and identical content makes the
+      // overwrite idempotent under replay)
+      save(bloomMeta(s.spark, k, m), s"$stateDir/$Meta")
     }
-    Sketches.bloomBuild(batch, k, m).write.mode("overwrite")
-      .parquet(s"$stateDir/bits/batch=$batchId")
-    // (k, m) pin: every batch writes the same one-row frame (the
-    // foreachBatch loop is serial, and identical content makes the
-    // overwrite idempotent under replay)
-    spark.range(1)
-      .select(lit(k.toLong).as("k"), lit(m.toLong).as("m"))
-      .write.mode("overwrite").parquet(s"$stateDir/meta")
-    markCommitted(spark, stateDir, batchId)
-  }
+
+  private def bloomMeta(spark: SparkSession, k: Int, m: Int): DataFrame =
+    spark.range(1).select(lit(k.toLong).as("k"), lit(m.toLong).as("m"))
 
   /** The accumulated streamed filter over all COMMITTED batches (and
     * any compacted base): the distinct union of their occupied-bucket
     * sets, with the pinned (k, m). None before the first commit.
     */
   def ingestBloomRead(spark: SparkSession,
-      stateDir: String): Option[(DataFrame, Int, Int)] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      val meta = spark.read.parquet(s"$stateDir/meta").head
-      val basePfx = if (c >= 0) Seq(baseDir(stateDir, c) + "/bits") else Nil
-      Some((
-        spark.read.parquet(
-          basePfx ++ ids.map(i => s"$stateDir/bits/batch=$i"): _*).distinct(),
-        meta.getAs[Long]("k").toInt, meta.getAs[Long]("m").toInt))
-    }
+      stateDir: String): Option[(DataFrame, Int, Int)] =
+    view(spark, stateDir)(bloom)
+
+  private def bloom(s: State): (DataFrame, Int, Int) = {
+    val meta = s.spark.read.parquet(s"${s.dir}/$Meta").head()
+    (s.read(Bits).distinct(), meta.getAs[Long]("k").toInt, meta.getAs[Long]("m").toInt)
   }
 
   /** Probe the streamed filter — verdict-only rows, the ingest
@@ -561,25 +572,16 @@ object Streams {
     * uncompacted probe unions one bucket-set file group per batch
     * forever.
     */
-  def compactBloom(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      val (occ, k, m) = ingestBloomRead(spark, stateDir).get
-      occ.write.mode("overwrite").parquet(baseDir(stateDir, c) + "/bits")
-      spark.range(1)
-        .select(lit(k.toLong).as("k"), lit(m.toLong).as("m"))
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/meta")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("bits"))
-      Some(c)
+  def compactBloom(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq(Bits)) { (s, base) =>
+      val (occ, k, m) = bloom(s)
+      save(occ, s"$base/$Bits")
+      save(bloomMeta(spark, k, m), s"$base/$Meta")
     }
-  }
 
-  /** Streaming data-quality profile — the sixth `foreachBatch` ingest
+  private val ProfilePart = "profile"
+
+  /** Streaming data-quality profile — a `foreachBatch` ingest
     * composition: each micro-batch writes its MERGEABLE per-column
     * profile partial ([[graft.operators.Profile.profilePartial]]:
     * counts + portable min/max + a KMV distinct sketch) under
@@ -594,58 +596,46 @@ object Streams {
     */
   def ingestProfile(rows: DataFrame, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestProfileBatch(batch.toDF(), stateDir, batchId)
-      }
-      .start()
+    stream(rows, checkpointDir)(ingestProfileBatch(_, stateDir, _))
 
   /** One profile ingest step (see [[ingestProfile]]); public for
     * batch-mode replays and tests.
     */
   def ingestProfileBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    graft.operators.Profile.profilePartial(batch)
-      .write.mode("overwrite").parquet(s"$stateDir/profile/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+      batchId: Long): Unit =
+    commitOnce(batch, stateDir, batchId)((_, at) =>
+      save(Profile.profilePartial(batch), at(ProfilePart)))
 
   /** The accumulated profile over all COMMITTED batches (None before
     * the first commit): (column_name, n_rows, n_nulls, n_distinct_est,
     * min_str, max_str).
     */
   def ingestProfileRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val ids = committedBatches(spark, stateDir).sorted
-    if (ids.isEmpty) None
-    else {
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir) { s =>
       // mergeSchema + an explicit version gate: a state dir written by
       // an older partial format must FAIL here, not silently mis-merge
       // (v1 rendered integral extrema as strings — coalescing them
       // under the v2 schema would discard them)
       val partials = spark.read.option("mergeSchema", "true")
-        .parquet(ids.map(i => s"$stateDir/profile/batch=$i"): _*)
+        .parquet(s.paths(ProfilePart): _*)
       val ok = partials.columns.contains("pp_version") && {
         // coalesce BEFORE min: rows from a version-less partial read
         // under the merged schema carry NULL, which a bare min() would
         // skip right past
-        val r = partials.agg(org.apache.spark.sql.functions.min(
-          coalesce(col("pp_version"), lit(-1L)))).head
-        !r.isNullAt(0) &&
-          r.getLong(0) == graft.operators.Profile.ProfilePartialVersion
+        val r = partials.agg(min(coalesce(col("pp_version"), lit(-1L)))).head()
+        !r.isNullAt(0) && r.getLong(0) == Profile.ProfilePartialVersion
       }
       if (!ok) throw new IllegalStateException(
         s"profile state under $stateDir carries partials from an older " +
           "format version — re-ingest (mixed-version folds would " +
           "silently mis-merge integral extrema)")
-      Some(graft.operators.Profile.mergeProfile(partials))
+      Profile.mergeProfile(partials)
     }
-  }
 
-  /** Streaming value histogram — the SEVENTH `foreachBatch` ingest
+  private val Hist = "hist"
+
+  /** Streaming value histogram — a `foreachBatch` ingest
     * composition: each micro-batch writes its (grp, cents, c)
     * histogram partial ([[graft.operators.Profile.valueHist]] — a pure
     * mergeable: partials from disjoint batches fold by summing `c`,
@@ -659,41 +649,26 @@ object Streams {
     */
   def ingestValueHist(rows: DataFrame, stateDir: String, checkpointDir: String,
       groupCol: String, valueCol: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestValueHistBatch(batch.toDF(), stateDir, batchId, groupCol, valueCol)
-      }
-      .start()
+    stream(rows, checkpointDir)(ingestValueHistBatch(_, stateDir, _, groupCol, valueCol))
 
   /** One histogram ingest step (see [[ingestValueHist]]); public for
     * batch-mode replays and tests.
     */
   def ingestValueHistBatch(batch: DataFrame, stateDir: String, batchId: Long,
-      groupCol: String, valueCol: String): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    graft.operators.Profile.valueHist(batch, groupCol, valueCol)
-      .write.mode("overwrite").parquet(s"$stateDir/hist/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+      groupCol: String, valueCol: String): Unit =
+    commitOnce(batch, stateDir, batchId)((_, at) =>
+      save(Profile.valueHist(batch, groupCol, valueCol), at(Hist)))
 
   /** The folded histogram over all COMMITTED batches (and any compacted
     * base): one row per (grp, cents) with the summed count. None before
     * the first commit.
     */
   def ingestValueHistRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      val basePfx = if (c >= 0) Seq(baseDir(stateDir, c) + "/hist") else Nil
-      Some(spark.read
-        .parquet(basePfx ++ ids.map(i => s"$stateDir/hist/batch=$i"): _*)
-        .groupBy("grp", "cents").agg(sum("c").as("c")))
-    }
-  }
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir)(valueHist)
+
+  private def valueHist(s: State): DataFrame =
+    s.read(Hist).groupBy("grp", "cents").agg(sum("c").as("c"))
 
   /** The robust outlier audit over the streamed state — the ingest-side
     * face of q138. None before the first commit.
@@ -701,28 +676,18 @@ object Streams {
   def ingestRobustOutliers(spark: SparkSession, stateDir: String,
       kNum: Long = 3L, kDen: Long = 1L): Option[DataFrame] =
     ingestValueHistRead(spark, stateDir)
-      .map(graft.operators.Profile.robustOutliersFromHist(_, kNum, kDen))
+      .map(Profile.robustOutliersFromHist(_, kNum, kDen))
 
   /** Fold every committed histogram batch (and any prior base) into a
     * fresh canonical base — same commit/GC protocol as [[compactBloom]];
     * keeps read cost flat as batch count grows.
     */
-  def compactValueHist(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      ingestValueHistRead(spark, stateDir).get
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/hist")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("hist"))
-      Some(c)
-    }
-  }
+  def compactValueHist(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq(Hist))((s, base) => save(valueHist(s), s"$base/$Hist"))
 
-  /** Streaming per-label embedding-centroid state — the TENTH
+  private val Cent = "cent"
+
+  /** Streaming per-label embedding-centroid state — a
     * `foreachBatch` ingest composition: each micro-batch of embedding
     * rows writes its per-label quantized component-sum partial
     * ([[graft.operators.Similarity.centroidPartial]] — a pure
@@ -737,64 +702,37 @@ object Streams {
     */
   def ingestCentroids(emb: DataFrame, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestCentroidsBatch(batch.toDF(), stateDir, batchId)
-      }
-      .start()
+    stream(emb, checkpointDir)(ingestCentroidsBatch(_, stateDir, _))
 
   /** One centroid ingest step (see [[ingestCentroids]]); public for
     * batch-mode replays and tests.
     */
   def ingestCentroidsBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    graft.operators.Similarity.centroidPartial(batch)
-      .write.mode("overwrite").parquet(s"$stateDir/cent/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+      batchId: Long): Unit =
+    commitOnce(batch, stateDir, batchId)((_, at) =>
+      save(Similarity.centroidPartial(batch), at(Cent)))
 
   /** The finished per-label centroids over all COMMITTED batches (and
     * any compacted base): (label, cnt, ce). None before the first
     * commit.
     */
   def ingestCentroidsRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      val basePfx = if (c >= 0) Seq(baseDir(stateDir, c) + "/cent") else Nil
-      Some(graft.operators.Similarity.finishCentroids(
-        graft.operators.Similarity.mergeCentroidPartials(spark.read
-          .parquet(basePfx ++ ids.map(i => s"$stateDir/cent/batch=$i"): _*))))
-    }
-  }
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir)(s => Similarity.finishCentroids(centroidSums(s)))
+
+  private def centroidSums(s: State): DataFrame =
+    Similarity.mergeCentroidPartials(s.read(Cent))
 
   /** Fold the committed centroid partials into one base (the shared
     * compact/GC protocol) — merged SUMS are stored, not finished
     * centroids, so later deltas keep folding losslessly.
     */
-  def compactCentroids(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      val basePfx = if (c0 >= 0) Seq(baseDir(stateDir, c0) + "/cent") else Nil
-      graft.operators.Similarity.mergeCentroidPartials(spark.read
-          .parquet(basePfx ++ ids.map(i => s"$stateDir/cent/batch=$i"): _*))
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/cent")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("cent"))
-      Some(c)
-    }
-  }
+  def compactCentroids(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq(Cent))((s, base) => save(centroidSums(s), s"$base/$Cent"))
 
-  /** Streaming training-token budget — the ELEVENTH `foreachBatch`
+  private val Budget = "budget"
+
+  /** Streaming training-token budget — a `foreachBatch`
     * ingest composition: each micro-batch of documents writes its
     * per-(source, split) doc/token partial
     * ([[graft.operators.Prep.budgetPartial]] — split assignment is the
@@ -813,62 +751,38 @@ object Streams {
     */
   def ingestBudget(docs: DataFrame, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestBudgetBatch(batch.toDF(), stateDir, batchId)
-      }
-      .start()
+    stream(docs, checkpointDir)(ingestBudgetBatch(_, stateDir, _))
 
   /** One budget ingest step (see [[ingestBudget]]); public for
     * batch-mode replays and tests.
     */
   def ingestBudgetBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    graft.operators.Prep.budgetPartial(batch)
-      .write.mode("overwrite").parquet(s"$stateDir/budget/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+      batchId: Long): Unit =
+    commitOnce(batch, stateDir, batchId)((_, at) =>
+      save(Prep.budgetPartial(batch), at(Budget)))
 
   /** The folded (source, split, n_docs, ws_tokens) budget over all
     * COMMITTED batches (and any compacted base). None before the first
     * commit.
     */
   def ingestBudgetRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      val basePfx = if (c >= 0) Seq(baseDir(stateDir, c) + "/budget") else Nil
-      Some(graft.operators.Prep.mergeBudgetPartials(spark.read
-        .parquet(basePfx ++ ids.map(i => s"$stateDir/budget/batch=$i"): _*)))
-    }
-  }
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir)(budget)
+
+  private def budget(s: State): DataFrame = Prep.mergeBudgetPartials(s.read(Budget))
 
   /** Fold the committed budget partials into one base (the shared
     * compact/GC protocol) — merged integer sums, so later deltas keep
     * folding losslessly.
     */
-  def compactBudget(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      ingestBudgetRead(spark, stateDir).get
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/budget")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("budget"))
-      Some(c)
-    }
-  }
+  def compactBudget(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq(Budget))((s, base) => save(budget(s), s"$base/$Budget"))
 
-  /** Streaming Markov transition matrix — the EIGHTH `foreachBatch`
-    * ingest composition, and the first ORDER-SENSITIVE one: transition
+  private val Trans = "trans"
+  private val Frontier = "frontier"
+
+  /** Streaming Markov transition matrix — the first ORDER-SENSITIVE
+    * `foreachBatch` ingest composition: transition
     * counts are NOT a pure mergeable (the pair spanning two batches
     * belongs to neither batch alone), so each micro-batch carries a
     * per-user FRONTIER — the last (ts, event_id, type) seen per user —
@@ -891,112 +805,78 @@ object Streams {
     */
   def ingestTransitions(events: DataFrame, stateDir: String,
       checkpointDir: String, gapSeconds: Long = 1800L): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestTransitionsBatch(batch.toDF(), stateDir, batchId, gapSeconds)
-      }
-      .start()
+    stream(events, checkpointDir)(ingestTransitionsBatch(_, stateDir, _, gapSeconds))
 
   /** One transition ingest step (see [[ingestTransitions]]); public for
     * batch-mode replays and tests.
     */
   def ingestTransitionsBatch(batch: DataFrame, stateDir: String,
-      batchId: Long, gapSeconds: Long = 1800L): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    val ev = batch.select(col("user_id"), col("ts"), col("event_id"),
-      col("event_type"))
-    val all = latestTransitionFrontier(spark, stateDir) match {
-      case None => ev
-      case Some(f) =>
-        val firsts = ev.groupBy("user_id")
-          .agg(min(struct(unix_micros(col("ts")).as("ts_us"),
-            col("event_id").as("event_id"))).as("first"))
-        val viol = firsts
-          .join(f.select(col("user_id"),
-            struct(col("ts_us"), col("event_id")).as("last")), "user_id")
-          .filter(!(col("first") > col("last")))
-        val bad = viol.limit(1).collect()
-        if (bad.nonEmpty) throw new IllegalStateException(
-          s"ingestTransitions: batch $batchId carries an event at-or-" +
-            s"before the stored frontier for user ${bad.head.get(0)} — " +
-            "out-of-order ingest would silently mis-pair transitions; " +
-            "this tier requires per-user event-time monotone batches")
-        ev.unionByName(f.select(col("user_id"),
-          expr("timestamp_micros(ts_us)").as("ts"), col("event_id"),
-          col("event_type")))
+      batchId: Long, gapSeconds: Long = 1800L): Unit =
+    commitOnce(batch, stateDir, batchId) { (s, at) =>
+      val ev = batch.select(col("user_id"), col("ts"), col("event_id"),
+        col("event_type"))
+      val all = frontier(s) match {
+        case None => ev
+        case Some(f) =>
+          val firsts = ev.groupBy("user_id")
+            .agg(min(struct(unix_micros(col("ts")).as("ts_us"),
+              col("event_id").as("event_id"))).as("first"))
+          val viol = firsts
+            .join(f.select(col("user_id"),
+              struct(col("ts_us"), col("event_id")).as("last")), "user_id")
+            .filter(!(col("first") > col("last")))
+          val bad = viol.limit(1).collect()
+          if (bad.nonEmpty) throw new IllegalStateException(
+            s"ingestTransitions: batch $batchId carries an event at-or-" +
+              s"before the stored frontier for user ${bad.head.get(0)} — " +
+              "out-of-order ingest would silently mis-pair transitions; " +
+              "this tier requires per-user event-time monotone batches")
+          ev.unionByName(f.select(col("user_id"),
+            expr("timestamp_micros(ts_us)").as("ts"), col("event_id"),
+            col("event_type")))
+      }
+      save(Sessions.transitionCounts(all, gapSeconds), at(Trans))
+      save(all.groupBy("user_id")
+        .agg(max(struct(unix_micros(col("ts")).as("ts_us"),
+          col("event_id").as("event_id"),
+          col("event_type").as("event_type"))).as("m"))
+        .select(col("user_id"), col("m.ts_us").as("ts_us"),
+          col("m.event_id").as("event_id"),
+          col("m.event_type").as("event_type")), at(Frontier))
     }
-    graft.operators.Sessions.transitionCounts(all, gapSeconds)
-      .write.mode("overwrite").parquet(s"$stateDir/trans/batch=$batchId")
-    all.groupBy("user_id")
-      .agg(max(struct(unix_micros(col("ts")).as("ts_us"),
-        col("event_id").as("event_id"),
-        col("event_type").as("event_type"))).as("m"))
-      .select(col("user_id"), col("m.ts_us").as("ts_us"),
-        col("m.event_id").as("event_id"),
-        col("m.event_type").as("event_type"))
-      .write.mode("overwrite").parquet(s"$stateDir/frontier/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
 
-  /** The newest committed frontier snapshot (one row per user), from
-    * the highest delta batch or, failing that, the compacted base.
+  /** The newest frontier snapshot (one row per user): the highest delta
+    * batch's or, failing that, the compacted base's.
     */
-  private def latestTransitionFrontier(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (ids.nonEmpty)
-      Some(spark.read.parquet(s"$stateDir/frontier/batch=${ids.max}"))
-    else if (c >= 0)
-      Some(spark.read.parquet(baseDir(stateDir, c) + "/frontier"))
-    else None
-  }
+  private def frontier(s: State): Option[DataFrame] =
+    s.paths(Frontier).lastOption.map(s.spark.read.parquet(_))
+
+  private def transitionCounts(s: State): DataFrame =
+    s.read(Trans).groupBy("from_type", "to_type").agg(sum("n").as("n"))
 
   /** The row-normalized transition matrix over all committed batches
     * (and any compacted base) — the ingest-side face of q151. None
     * before the first commit.
     */
   def ingestTransitionsRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      val basePfx = if (c >= 0) Seq(baseDir(stateDir, c) + "/trans") else Nil
-      Some(graft.operators.Sessions.normalizeTransitions(spark.read
-        .parquet(basePfx ++ ids.map(i => s"$stateDir/trans/batch=$i"): _*)
-        .groupBy("from_type", "to_type").agg(sum("n").as("n"))))
-    }
-  }
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir)(s => Sessions.normalizeTransitions(transitionCounts(s)))
 
   /** Fold every committed transition partial (and any prior base) into
     * a fresh canonical base, carrying the newest frontier forward —
     * same commit/GC protocol as [[compactValueHist]]; keeps read cost
     * flat as batch count grows.
     */
-  def compactTransitions(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      val basePfx = if (c0 >= 0) Seq(baseDir(stateDir, c0) + "/trans") else Nil
-      spark.read
-        .parquet(basePfx ++ ids.map(i => s"$stateDir/trans/batch=$i"): _*)
-        .groupBy("from_type", "to_type").agg(sum("n").as("n"))
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/trans")
-      latestTransitionFrontier(spark, stateDir).get
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/frontier")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("trans", "frontier"))
-      Some(c)
+  def compactTransitions(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq(Trans, Frontier)) { (s, base) =>
+      save(transitionCounts(s), s"$base/$Trans")
+      save(frontier(s).get, s"$base/$Frontier")
     }
-  }
 
-  /** Streaming survival analysis — the NINTH `foreachBatch` ingest
+  private val Firsts = "firsts"
+  private val Horizon = "hz"
+
+  /** Streaming survival analysis — a `foreachBatch` ingest
     * composition: the Nelson–Aalen repurchase hazard (batch face q165,
     * [[graft.operators.Sessions.repurchaseHazard]]) over an event
     * stream. Unlike the order-sensitive transitions tier, this state IS
@@ -1014,53 +894,38 @@ object Streams {
     */
   def ingestHazard(events: DataFrame, stateDir: String,
       checkpointDir: String, eventType: String = "purchase"): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestHazardBatch(batch.toDF(), stateDir, batchId, eventType)
-      }
-      .start()
+    stream(events, checkpointDir)(ingestHazardBatch(_, stateDir, _, eventType))
 
   /** One hazard ingest step (see [[ingestHazard]]); public for
     * batch-mode replays and tests.
     */
   def ingestHazardBatch(batch: DataFrame, stateDir: String, batchId: Long,
-      eventType: String = "purchase"): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    val sec = "((unix_micros(ts) - pmod(unix_micros(ts), 1000000)) div 1000000)"
-    val p = batch.filter(col("event_type") === eventType
-        && col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("user_id"), col("event_id"), expr(sec).as("s"))
-    val byUser = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("s"), col("event_id"))
-    p.withColumn("rn", row_number().over(byUser)).filter(col("rn") <= 2)
-      .drop("rn")
-      .write.mode("overwrite").parquet(s"$stateDir/firsts/batch=$batchId")
-    p.agg(max(col("s")).as("tmax"))
-      .write.mode("overwrite").parquet(s"$stateDir/hz/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+      eventType: String = "purchase"): Unit =
+    commitOnce(batch, stateDir, batchId) { (_, at) =>
+      val sec = "((unix_micros(ts) - pmod(unix_micros(ts), 1000000)) div 1000000)"
+      val p = batch.filter(col("event_type") === eventType
+          && col("user_id").isNotNull && col("ts").isNotNull)
+        .select(col("user_id"), col("event_id"), expr(sec).as("s"))
+      save(twoEarliest(p), at(Firsts))
+      save(p.agg(max(col("s")).as("tmax")), at(Horizon))
+    }
+
+  /** Each user's two earliest (s, event_id) purchase rows. */
+  private def twoEarliest(p: DataFrame): DataFrame =
+    p.withColumn("rn", row_number().over(
+        Window.partitionBy("user_id").orderBy(col("s"), col("event_id"))))
+      .filter(col("rn") <= 2).drop("rn")
+
+  private def horizon(s: State): DataFrame =
+    s.read(Horizon).agg(max(col("tmax")).as("tmax"))
 
   /** The Nelson–Aalen hazard frame over everything ingested (and any
     * compacted base) — hash-identical to batch q165 over the union of
     * the batches. None before the first commit.
     */
   def ingestHazardRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else {
-      def frames(f: String) =
-        (if (c >= 0) Seq(baseDir(stateDir, c) + s"/$f") else Nil) ++
-          ids.map(i => s"$stateDir/$f/batch=$i")
-      val firsts = spark.read.parquet(frames("firsts"): _*)
-      val horizon = spark.read.parquet(frames("hz"): _*)
-        .agg(max(col("tmax")).as("tmax"))
-      Some(graft.operators.Sessions.hazardFromPurchases(firsts, horizon))
-    }
-  }
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir)(s => Sessions.hazardFromPurchases(s.read(Firsts), horizon(s)))
 
   /** Fold every committed hazard batch (and any prior base) into a
     * fresh canonical base: candidates re-ranked back to ≤ 2 rows per
@@ -1068,38 +933,21 @@ object Streams {
     * other tiers; keeps BOTH read cost and state size flat as batch
     * count grows.
     */
-  def compactHazard(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      def frames(f: String) =
-        (if (c0 >= 0) Seq(baseDir(stateDir, c0) + s"/$f") else Nil) ++
-          ids.map(i => s"$stateDir/$f/batch=$i")
-      val byUser = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("s"), col("event_id"))
-      spark.read.parquet(frames("firsts"): _*)
-        .withColumn("rn", row_number().over(byUser)).filter(col("rn") <= 2)
-        .drop("rn")
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/firsts")
-      spark.read.parquet(frames("hz"): _*)
-        .agg(max(col("tmax")).as("tmax"))
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/hz")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("firsts", "hz"))
-      Some(c)
+  def compactHazard(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq(Firsts, Horizon)) { (s, base) =>
+      save(twoEarliest(s.read(Firsts)), s"$base/$Firsts")
+      save(horizon(s), s"$base/$Horizon")
     }
-  }
 
-  /** Streaming ingest of IMAGE FEATURES — the TWELFTH `foreachBatch`
-    * composition, joining the multimodal tier to the ingest protocol:
+  private val Features = "features"
+
+  /** Streaming ingest of IMAGE FEATURES — the `foreachBatch`
+    * composition joining the multimodal tier to the ingest protocol:
     * as payload blobs arrive, ONLY the new batch pays the codec pass
     * ([[graft.operators.Multimodal.extractImageFeatures]] — the q215
     * per-partition `javax.imageio` decode), and its integer-exact
     * feature rows land under `features/batch=N` with the same
-    * marker-last exactly-once contract as the other eleven tiers.
+    * marker-last exactly-once contract as the other tiers.
     * Feature rows are pure per-doc derivations of append-only doc_ids,
     * so batch frames are disjoint and the fold over committed batches
     * is row-identical to a batch decode over everything ingested — the
@@ -1111,124 +959,33 @@ object Streams {
     */
   def ingestImageFeatures(blobs: DataFrame, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    blobs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestImageFeaturesBatch(batch.toDF(), stateDir, batchId)
-      }
-      .start()
+    stream(blobs, checkpointDir)(ingestImageFeaturesBatch(_, stateDir, _))
 
   /** One image-feature ingest step (see [[ingestImageFeatures]]);
     * public for batch-mode replays and tests. `batch` carries the
     * [[graft.operators.Multimodal.Blob]] schema (doc_id, bytes).
     */
   def ingestImageFeaturesBatch(batch: DataFrame, stateDir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (committedBatches(spark, stateDir).contains(batchId)) return // replayed
-    graft.operators.Multimodal
-      .extractImageFeatures(batch.as[graft.operators.Multimodal.Blob](
-        Encoders.product[graft.operators.Multimodal.Blob]))
-      .write.mode("overwrite").parquet(s"$stateDir/features/batch=$batchId")
-    markCommitted(spark, stateDir, batchId)
-  }
+      batchId: Long): Unit =
+    commitOnce(batch, stateDir, batchId)((_, at) =>
+      save(Multimodal.extractImageFeatures(
+        batch.as[Multimodal.Blob](Encoders.product[Multimodal.Blob])), at(Features)))
 
   /** The accumulated feature table over all COMMITTED batches (None
     * before the first commit): (doc_id, width, height, lum_hist).
     */
   def ingestImageFeaturesRead(spark: SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val c = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c)
-    if (c < 0 && ids.isEmpty) None
-    else Some(spark.read.parquet(
-      (if (c >= 0) Seq(baseDir(stateDir, c) + "/features") else Nil) ++
-        ids.map(i => s"$stateDir/features/batch=$i"): _*))
-  }
+      stateDir: String): Option[DataFrame] =
+    view(spark, stateDir)(_.read(Features))
 
   /** Fold committed image-feature batches (and any prior base) into one
     * canonical base — same commit/GC protocol as [[compactNearDup]];
     * keeps a feature probe reading one file group instead of one per
     * batch forever. The fold is a plain disjoint union: no re-decode.
     */
-  def compactImageFeatures(spark: SparkSession, stateDir: String,
-      gc: Boolean = true): Option[Long] = {
-    val c0 = compactedUpTo(spark, stateDir)
-    val ids = deltaBatches(spark, stateDir, c0)
-    if (ids.isEmpty) None
-    else {
-      val c = ids.max
-      ingestImageFeaturesRead(spark, stateDir).get
-        .write.mode("overwrite").parquet(baseDir(stateDir, c) + "/features")
-      markCompacted(spark, stateDir, c)
-      if (gc) gcCovered(spark, stateDir, c0, ids, Seq("features"))
-      Some(c)
-    }
-  }
-
-  private def fileSystem(
-      spark: SparkSession, dir: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def committedBatches(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val fs = fileSystem(spark, stateDir)
-    val dir = new org.apache.hadoop.fs.Path(s"$stateDir/_committed")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName.toLong).sorted
-  }
-
-  // ——— compaction protocol, shared by all three ingest tiers ———
-  // `_compacted/C` = every batch id ≤ C is folded into `base/compact=C`
-  // (the tier's canonical standalone artifact layout). Markers in
-  // `_committed` are never deleted — they are the replay-skip contract —
-  // so readers resolve: C = max compacted marker, deltas = committed ids
-  // greater than C.
-
-  private def baseDir(stateDir: String, c: Long): String =
-    s"$stateDir/base/compact=$c"
-
-  /** Newest compaction watermark, or -1 when never compacted. */
-  private def compactedUpTo(spark: SparkSession, stateDir: String): Long = {
-    val fs = fileSystem(spark, stateDir)
-    val dir = new org.apache.hadoop.fs.Path(s"$stateDir/_compacted")
-    if (!fs.exists(dir)) -1L
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName.toLong).foldLeft(-1L)(math.max)
-  }
-
-  /** Committed batches NOT yet covered by the compaction watermark. */
-  private def deltaBatches(spark: SparkSession, stateDir: String,
-      compacted: Long): Seq[Long] =
-    committedBatches(spark, stateDir).filter(_ > compacted)
-
-  /** Write the `_compacted/<c>` marker — LAST, after the base's frames
-    * are all durable (the same marker-last protocol as [[markCommitted]]).
-    */
-  private def markCompacted(spark: SparkSession, stateDir: String,
-      c: Long): Unit = {
-    val fs = fileSystem(spark, stateDir)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_compacted"))
-    fs.create(
-      new org.apache.hadoop.fs.Path(s"$stateDir/_compacted/$c"), true).close()
-  }
-
-  /** Best-effort post-marker GC: delete the batch dirs the new base
-    * covers (under each of `frames`) and the previous base. Runs AFTER
-    * the marker commit, so a crash mid-GC only leaves extra files — the
-    * next compaction's GC sweeps them (ids derive from `_committed`,
-    * which is never pruned).
-    */
-  private def gcCovered(spark: SparkSession, stateDir: String,
-      prevBase: Long, coveredIds: Seq[Long], frames: Seq[String]): Unit = {
-    val fs = fileSystem(spark, stateDir)
-    def rm(p: String): Unit =
-      try fs.delete(new org.apache.hadoop.fs.Path(p), true)
-      catch { case _: Throwable => () }
-    for (f <- frames; i <- coveredIds) rm(s"$stateDir/$f/batch=$i")
-    if (prevBase >= 0) rm(baseDir(stateDir, prevBase))
-  }
+  def compactImageFeatures(spark: SparkSession, stateDir: String): Option[Long] =
+    compact(spark, stateDir, Seq(Features))((s, base) =>
+      save(s.read(Features), s"$base/$Features"))
 
   /** Typed event row for the stateful API (subset of the events schema). */
   case class UserEvent(user_id: Long, event_type: String, value: Double,

@@ -1318,4 +1318,64 @@ class StreamingSpec extends AnyFunSuite {
     try q2.processAllAvailable() finally q2.stop()
     assert(canon(Streams.ingestImageFeaturesRead(spark, state).get) == want)
   }
+
+  test("compaction folds exactly the state it listed: a batch that commits mid-fold stays a delta, counted once") {
+    import graft.operators.Prep
+    val root = java.nio.file.Files.createTempDirectory("graft_compact_race_").toFile
+    val state = new java.io.File(root, "state").getAbsolutePath
+    val docs = Tables.load(spark, TestSpark.Sf0001, "documents")
+    def slice(i: Int) = docs.filter(pmod(col("doc_id"), lit(4)) === i)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("source", "split").collect().toSeq
+    (0 until 3).foreach(i => Streams.ingestBudgetBatch(slice(i), state, i.toLong))
+    // a live ingest commits batch 3 AFTER the compaction took its
+    // listing; the fold must see only the listed batches 0..2
+    val c = Streams.compact(spark, state, Seq("budget")) { (s, base) =>
+      Streams.ingestBudgetBatch(slice(3), state, 3L)
+      assert(s.ids == Seq(0L, 1L, 2L))
+      Prep.mergeBudgetPartials(s.read("budget"))
+        .write.mode("overwrite").parquet(s"$base/budget")
+    }
+    assert(c == Some(2L), "the watermark is the listed max, not the mid-fold commit")
+    assert(new java.io.File(s"$state/budget/batch=3").exists,
+      "the mid-fold batch is not covered by the base and must survive GC")
+    assert(!new java.io.File(s"$state/budget/batch=0").exists)
+    // base (0..2) + delta (3) = every batch exactly once
+    val all = rows(Prep.budgetPartial(docs))
+    assert(rows(Streams.ingestBudgetRead(spark, state).get) == all)
+    // the next cadence run folds the straggler
+    assert(Streams.compactBudget(spark, state) == Some(3L))
+    assert(rows(Streams.ingestBudgetRead(spark, state).get) == all)
+    assert(!new java.io.File(s"$state/budget/batch=3").exists)
+    org.apache.commons.io.FileUtils.deleteDirectory(root)
+  }
+
+  test("compaction writes its marker last: a fold that dies mid-base keeps the previous view, and a retry succeeds") {
+    val root = java.nio.file.Files.createTempDirectory("graft_compact_crash_").toFile
+    val state = new java.io.File(root, "state").getAbsolutePath
+    val events = Tables.load(spark, TestSpark.Sf0001, "events")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("week").collect().toSeq
+    (0 until 3).foreach(i => Streams.ingestHazardBatch(
+      events.filter(pmod(col("user_id"), lit(3)) === i), state, i.toLong))
+    val before = rows(Streams.ingestHazardRead(spark, state).get)
+    // the fold writes one of the base's two frames, then dies
+    val ex = intercept[IllegalStateException] {
+      Streams.compact(spark, state, Seq("firsts", "hz")) { (s, base) =>
+        s.read("firsts").write.mode("overwrite").parquet(s"$base/firsts")
+        throw new IllegalStateException("fold died mid-base")
+      }
+    }
+    assert(ex.getMessage.contains("mid-base"))
+    val compacted = new java.io.File(s"$state/_compacted")
+    assert(!compacted.exists || compacted.list().isEmpty, "no marker may be written")
+    for (f <- Seq("firsts", "hz"); i <- 0 until 3)
+      assert(new java.io.File(s"$state/$f/batch=$i").exists, s"$f/batch=$i was deleted")
+    assert(rows(Streams.ingestHazardRead(spark, state).get) == before)
+    // a retried compaction overwrites the partial base and commits
+    assert(Streams.compactHazard(spark, state) == Some(2L))
+    assert(rows(Streams.ingestHazardRead(spark, state).get) == before)
+    assert(!new java.io.File(s"$state/firsts/batch=0").exists)
+    org.apache.commons.io.FileUtils.deleteDirectory(root)
+  }
 }
