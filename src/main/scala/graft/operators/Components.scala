@@ -36,9 +36,10 @@ object Components {
     // both union branches (and every loop round) read the edge list; cut
     // its lineage ONCE up front — otherwise an expensive producer (the
     // LSH verification pipeline feeding q47/q48) runs once per branch.
-    // LAZY (r15): round 1's convergence count materializes it — block
-    // locks dedup the two union branches' first computes, so the
-    // producer still runs exactly once, minus the eager count() job
+    // LAZY (r15): the producer's shuffle stages run at the cut; its last
+    // stage runs inside round 1's convergence count, where block locks
+    // dedup the two union branches' first computes, so the producer
+    // still runs exactly once and no separate count() job reruns it
     val e = Ckpt.narrowLazy(edges)
     val sym = e.select(col("i").as("src"), col("j").as("dst"))
       .union(e.select(col("j").as("src"), col("i").as("dst")))

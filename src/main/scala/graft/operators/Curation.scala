@@ -42,11 +42,12 @@ object Curation {
 
   private def gates(docs: DataFrame, minQuality: Double): Gates = {
     val base = docs.select(col("doc_id"), col("text"))
-    // LAZY cuts (r15, guide §1.5): blocks persist when the first
-    // consumer computes them — same multi-consumer sharing as the eager
-    // form without the two up-front count() jobs, and the gate chain
-    // now materializes inside the near-dup tier's first action instead
-    // of as serial driver steps
+    // LAZY cuts (r15, guide §1.5): the shuffle stages below each cut
+    // run at the cut, and only its last stage waits — blocks persist
+    // when the first consumer computes them, the same multi-consumer
+    // sharing as the eager form without its two count() jobs, and the
+    // gate chain's last stages run inside the near-dup tier's first
+    // action
     val quality = Ckpt.narrowLazy(
       TextAnalysis.qualityScores(docs).select("doc_id", "quality"))
     val passed = Ckpt.narrowLazy(base

@@ -161,11 +161,12 @@ object Dedup {
       tNum: Long = 4L, tDen: Long = 5L): DataFrame = {
     require(tNum > 0 && tNum <= tDen, s"threshold must be in (0,1]: $tNum/$tDen")
     import org.apache.spark.sql.expressions.Window
-    // LAZY cuts (r15, guide §1.5): a lazy localCheckpoint persists its
-    // blocks the first time ANY consumer computes it — multi-consumer
-    // sharing is identical to the eager form, but the per-cut eager
-    // count() job disappears and the whole chain materializes in the
-    // query's own action. Applied to every non-loop cut in this file.
+    // LAZY cuts (r15, guide §1.5): a lazy localCheckpoint runs the
+    // shuffle stages below it at the cut and persists its blocks the
+    // first time ANY consumer computes its last stage — multi-consumer
+    // sharing is identical to the eager form, but the per-cut count()
+    // job disappears and each chain's last stage runs in the query's
+    // own action. Applied to every non-loop cut in this file.
     val sh = Ckpt.narrowLazy(shingles(docs, n))
     val freq = sh.groupBy("gh").agg(count(lit(1)).as("df"))
     val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("m"))
@@ -408,17 +409,6 @@ object Dedup {
         concat_ws(" ", slice(reverse(col("w")), 1, 4))))
       .distinct()
     jaccardOfCandidates(Ckpt.narrowLazy(shingles(docs, n)), cand, threshold)
-  }
-
-  /** MinHash signatures in long form: (doc_id, s, minh) — the classic
-    * rendering, unpivoted from [[minhashWide]]'s single aggregation pass.
-    */
-  def minhashSignatures(sh: DataFrame, numHashes: Int = 16): DataFrame = {
-    val sm = (0 until numHashes).map(s =>
-      struct(lit(s.toLong).as("s"), col(s"m$s").as("minh")))
-    minhashWide(sh, numHashes)
-      .select(col("doc_id"), explode(array(sm: _*)).as("sm"))
-      .select(col("doc_id"), col("sm.s").as("s"), col("sm.minh").as("minh"))
   }
 
   /** LSH band keys: (doc_id, b, band_key) with band_key = md5 of the
@@ -1152,7 +1142,7 @@ object Dedup {
     * than `maxPostings` times FIRST (boilerplate n-grams; occurrence
     * count, not doc count, so a pathological "word word word ..." doc
     * cannot fan out against itself either). Then detection joins at
-    * MINRUN-TOKEN super-gram grain ([[crossRunsOf]]) — a join row needs
+    * MINRUN-TOKEN super-gram grain ([[runsOf]]) — a join row needs
     * minRun consecutive shared tokens, not n, so the match volume
     * tracks ANSWER volume instead of Σ postings² over every
     * coincidentally-shared trigram (measured at the 30× ScaleGen
@@ -1170,17 +1160,35 @@ object Dedup {
     * leaves the initial scan.
     */
   def sharedRuns(docs: DataFrame, n: Int = 3, minRun: Long = 15L,
-      maxPostings: Long = 1000L): DataFrame = {
+      maxPostings: Long = 1000L): DataFrame =
+    guardedRuns(docs, n, minRun, maxPostings).filter(col("i") < col("j"))
+
+  /** The span tier's one argument door: the super-gram frame below needs
+    * j = minRun − n + 1 >= 1, and a stop-gram cap under 2 would drop
+    * every gram any pair could share.
+    */
+  private def requireSpanArgs(n: Int, minRun: Long, maxPostings: Long): Unit = {
     require(minRun >= n, s"minRun must be >= n = $n, got $minRun")
     require(maxPostings >= 2, s"maxPostings must be >= 2, got $maxPostings")
-    crossRunsOf(Blocking.cap(positionalShingles(docs, n), Seq("gh"), maxPostings),
+  }
+
+  /** [[runsOf]] over `docs`' stop-gram-guarded positional grams. */
+  private def guardedRuns(docs: DataFrame, n: Int, minRun: Long,
+      maxPostings: Long): DataFrame = {
+    requireSpanArgs(n, minRun, maxPostings)
+    runsOf(Blocking.cap(positionalShingles(docs, n), Seq("gh"), maxPostings),
       n, minRun)
   }
 
-  /** Cross-doc diagonal run assembly over an already-guarded positional
-    * gram frame (doc_id, pos, gh) — the core of [[sharedRuns]], shared
-    * with [[scrubRunsFixpoint]] so one round computes the gram state
-    * once for all three span families.
+  /** Diagonal run assembly over an already-guarded positional gram frame
+    * (doc_id, pos, gh) — the one core of [[sharedRuns]], [[selfRuns]] and
+    * every scrub round. One self-join pairs each super-gram occurrence
+    * with every LATER one in (doc_id, pos) order, so a single pass emits
+    * both families: rows with i < j are cross-doc runs, rows with i = j
+    * within-doc runs (start_i the earlier copy). A filter on i/j over the
+    * result is pushed into the join condition by the optimizer (i = j
+    * becomes a second equi-key), so each public face joins only its own
+    * pairs.
     *
     * Detection runs at MINRUN-TOKEN grain, not n-gram grain: j =
     * minRun − n + 1 consecutive kept grams fold into one "super-gram"
@@ -1190,22 +1198,23 @@ object Dedup {
     * super-gram island of length m − j + 1 at the same start (an
     * n'-gram match at p IS n-gram matches at p..p+j−1), so the output
     * is IDENTICAL to joining raw grams — run_tokens = count + (n+j−1)
-    * − 1 = m + n − 1, starts unchanged — while a junk match now needs
-    * minRun consecutive shared tokens instead of n. Measured at the
-    * 30× ScaleGen corpus (minRun 10): raw-gram matches 344.7M rows,
-    * super-gram matches track answer volume — the difference between
-    * an OOM at 100× in one JVM and a linear pass. Runs SHORTER than
-    * minRun produce no super-gram match, exactly as the old filter
-    * discarded them; islands that do form always satisfy the filter.
-    * Super-grams inherit the stop-gram cap structurally: every
-    * occurrence of a super-gram is an occurrence of each constituent
-    * kept gram, so its posting list is ≤ the cap with no second cap
-    * (and no oracle change — the oracle computes the same result the
-    * straightforward way, which is the point of the hash gate).
+    * − 1 = m + n − 1 >= minRun, starts unchanged — while a junk match
+    * now needs minRun consecutive shared tokens instead of n. Measured
+    * at the 30× ScaleGen corpus (minRun 10): raw-gram matches 344.7M
+    * rows, super-gram matches track answer volume — the difference
+    * between an OOM at 100× in one JVM and a linear pass. Runs SHORTER
+    * than minRun produce no super-gram match. Super-grams inherit the
+    * stop-gram cap structurally: every occurrence of a super-gram is an
+    * occurrence of each constituent kept gram, so its posting list is ≤
+    * the cap with no second cap (and no oracle change — the oracle
+    * computes the same result the straightforward way, which is the
+    * point of the hash gate). A periodic tandem repeat matches its own
+    * shifted super-gram sequence, so [[selfRuns]]' primitive-tail
+    * contract holds at this grain too.
     */
-  private def crossRunsOf(kept: DataFrame, n: Int, minRun: Long): DataFrame = {
+  private def runsOf(kept: DataFrame, n: Int, minRun: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val j = (minRun - n + 1).toInt // callers require minRun >= n, so j >= 1
+    val j = (minRun - n + 1).toInt // requireSpanArgs: minRun >= n, so j >= 1
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
     // j consecutive KEPT positions → one super-gram; a hole (dropped
     // stop-gram) or doc end yields lead ≠ pos + j − 1 and no row, which
@@ -1219,8 +1228,9 @@ object Dedup {
     // is unique and the islands row_number is deterministic without a
     // tie-break column.
     val matches = sup.as("a")
-      .join(sup.as("b"),
-        col("a.ghs") === col("b.ghs") && col("a.doc_id") < col("b.doc_id"))
+      .join(sup.as("b"), col("a.ghs") === col("b.ghs") &&
+        (col("a.doc_id") < col("b.doc_id") ||
+          col("a.doc_id") === col("b.doc_id") && col("a.pos") < col("b.pos")))
       .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"),
         col("a.pos").as("pi"), col("b.pos").as("pj"))
       .withColumn("diag", col("pi") - col("pj"))
@@ -1230,10 +1240,16 @@ object Dedup {
       .groupBy("i", "j", "diag", "island")
       .agg(min(col("pi")).as("start_i"), min(col("pj")).as("start_j"),
         (count(lit(1)) + lit(n + j - 2).cast("long")).as("run_tokens"))
-      .filter(col("run_tokens") >= minRun)
       .select(col("i"), col("j"), col("start_i"), col("start_j"),
         col("run_tokens"))
   }
+
+  /** Cut spans (doc_id, s, e) of a [[runsOf]] frame: each run's later
+    * copy, [start_j, start_j + run_tokens) in doc j.
+    */
+  private def laterCopies(runs: DataFrame): DataFrame =
+    runs.select(col("j").as("doc_id"), col("start_j").as("s"),
+      (col("start_j") + col("run_tokens")).as("e"))
 
   /** Span-scrub remediation over [[sharedRuns]] — the rewrite step of
     * exact substring dedup: every DETECTED shared run keeps its FIRST
@@ -1267,10 +1283,7 @@ object Dedup {
     */
   def scrubSharedRuns(docs: DataFrame, n: Int = 3, minRun: Long = 15L,
       maxPostings: Long = 1000L): DataFrame =
-    applyCutSpans(docs,
-      sharedRuns(docs, n, minRun, maxPostings)
-        .select(col("j").as("doc_id"), col("start_j").as("s"),
-          (col("start_j") + col("run_tokens")).as("e")))
+    applyCutSpans(docs, laterCopies(sharedRuns(docs, n, minRun, maxPostings)))
 
   /** Apply token-position cut spans (doc_id, s, e) to the corpus:
     * interval-merge per doc, drop covered positions, rejoin kept tokens
@@ -1315,62 +1328,23 @@ object Dedup {
   }
 
   /** Maximal verbatim runs repeated WITHIN a single document — the
-    * self-diagonal [[sharedRuns]] misses by construction (it pairs
-    * doc_id < doc_id only). Same machinery on the same positional
-    * grams: match a doc's grams against themselves at pos_i < pos_j,
-    * assemble islands per (doc, diagonal). Output one row per maximal
-    * repeat: (doc_id, start_i, start_j, run_tokens) with start_i the
-    * earlier occurrence. Tandem periodic repeats (offset < run length)
-    * surface as one long overlapping pair — the cut side [start_j,
-    * start_j + run) is exactly the non-primitive tail, so scrubbing it
-    * collapses "w w w ... w" to its primitive prefix. Cost shape is
-    * [[sharedRuns]]': the gram self-join is occurrence-bounded by the
-    * same stop-gram guard; per-(doc, diag) island windows are bounded
+    * self-diagonal [[sharedRuns]] leaves out (it keeps i < j only): the
+    * i = j rows of the same [[runsOf]] join, islands per (doc,
+    * diagonal). Output one row per maximal repeat: (doc_id, start_i,
+    * start_j, run_tokens) with start_i the earlier occurrence. Tandem
+    * periodic repeats (offset < run length) surface as one long
+    * overlapping pair — the cut side [start_j, start_j + run) is exactly
+    * the non-primitive tail, so scrubbing it collapses "w w w ... w" to
+    * its primitive prefix. Cost shape is [[sharedRuns]]': the gram
+    * self-join is occurrence-bounded by the same stop-gram guard (and
+    * joins on (ghs, doc_id)); per-(doc, diag) island windows are bounded
     * by document length.
     */
   def selfRuns(docs: DataFrame, n: Int = 3, minRun: Long = 15L,
-      maxPostings: Long = 1000L): DataFrame = {
-    require(minRun >= n, s"minRun must be >= n = $n, got $minRun")
-    require(maxPostings >= 2, s"maxPostings must be >= 2, got $maxPostings")
-    selfRunsOf(Blocking.cap(positionalShingles(docs, n), Seq("gh"), maxPostings),
-      n, minRun)
-  }
-
-  /** Within-doc diagonal run assembly over an already-guarded gram
-    * frame — [[selfRuns]]' core, shared with [[scrubRunsFixpoint]].
-    * Detection runs at minRun-token super-gram grain exactly as in
-    * [[crossRunsOf]] (same 1:1 island correspondence, same structural
-    * cap inheritance — see that scaladoc); a periodic tandem repeat
-    * matches its own shifted super-gram sequence, so the
-    * primitive-tail contract is unchanged.
-    */
-  private def selfRunsOf(kept: DataFrame, n: Int, minRun: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val j = (minRun - n + 1).toInt // callers require minRun >= n
-    val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    val sup = kept
-      .withColumn("ghs", collect_list(col("gh")).over(byDoc.rowsBetween(0, j - 1)))
-      .withColumn("endp", lead(col("pos"), j - 1).over(byDoc))
-      .filter(col("endp") === col("pos") + (j - 1))
-      .select(col("doc_id"), col("pos"), col("ghs"))
-    // within a (doc, diag) partition pi determines pj (pj = pi - diag),
-    // so pi is unique and the islands row_number is deterministic.
-    val matches = sup.as("a")
-      .join(sup.as("b"),
-        col("a.ghs") === col("b.ghs") && col("a.doc_id") === col("b.doc_id") &&
-          col("a.pos") < col("b.pos"))
-      .select(col("a.doc_id").as("doc_id"),
-        col("a.pos").as("pi"), col("b.pos").as("pj"))
-      .withColumn("diag", col("pi") - col("pj"))
-    val island = Window.partitionBy("doc_id", "diag").orderBy("pi")
-    matches
-      .withColumn("island", col("pi") - row_number().over(island))
-      .groupBy("doc_id", "diag", "island")
-      .agg(min(col("pi")).as("start_i"), min(col("pj")).as("start_j"),
-        (count(lit(1)) + lit(n + j - 2).cast("long")).as("run_tokens"))
-      .filter(col("run_tokens") >= minRun)
-      .select(col("doc_id"), col("start_i"), col("start_j"), col("run_tokens"))
-  }
+      maxPostings: Long = 1000L): DataFrame =
+    guardedRuns(docs, n, minRun, maxPostings).filter(col("i") === col("j"))
+      .select(col("i").as("doc_id"), col("start_i"), col("start_j"),
+        col("run_tokens"))
 
   /** Cut spans for duplicated HOT segments — the remediation pass for
     * the stop-gram guard's blind spot. Grams in > `maxPostings`
@@ -1409,7 +1383,7 @@ object Dedup {
   }
 
   /** Hot-segment fingerprint cuts over an already-selected hot gram
-    * frame — [[hotSegmentCuts]]' core, shared with [[scrubRunsFixpoint]].
+    * frame — [[hotSegmentCuts]]' core, shared with [[scrubRound]].
     */
   private def hotCutsOf(hot: DataFrame, n: Int, minRun: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1457,6 +1431,47 @@ object Dedup {
     dupCuts.unionByName(fragCuts).distinct()
   }
 
+  /** One scrub round over the current text `cur`: its cut spans (doc_id,
+    * s, e) and the gram-state cuts it made, for the caller to release.
+    * One gram state serves all three span families — the positional
+    * shingling and the occurrence count are the round's dominant linear
+    * passes, and paying them once per family measured 10.3s against
+    * 6.4s at sf0.1. Grams at or under the cap feed the one [[runsOf]]
+    * join (cross-doc and within-doc runs together, each cut at its later
+    * copy); grams over it feed [[hotCutsOf]].
+    */
+  private[graft] def scrubRound(cur: DataFrame, n: Int, minRun: Long,
+      maxPostings: Long): (DataFrame, Seq[DataFrame]) = {
+    // ps and occ each feed two consumers below, so both are cut; lazy
+    // cuts, so only their last stage waits for the loop's first action
+    val ps = Ckpt.narrowLazy(positionalShingles(cur, n))
+    val occ = Ckpt.narrowLazy(ps.groupBy("gh").agg(count(lit(1)).as("_occ")))
+    val kept = ps.join(occ.filter(col("_occ") <= maxPostings).select("gh"), "gh")
+    val hot = ps.join(occ.filter(col("_occ") > maxPostings).select("gh"), "gh")
+    (laterCopies(runsOf(kept, n, minRun)).unionByName(hotCutsOf(hot, n, minRun)),
+      Seq(ps, occ))
+  }
+
+  /** Cumulative (doc_id, n_dropped) after one more [[applyCutSpans]]
+    * round `scrubbed`; `dropped` is the total so far (null before the
+    * first round).
+    */
+  private def droppedAfter(dropped: DataFrame, scrubbed: DataFrame): DataFrame = {
+    val nd = scrubbed.select(col("doc_id"), col("n_dropped"))
+    if (dropped == null) nd
+    else dropped.as("d").join(nd.withColumnRenamed("n_dropped", "_nd"), "doc_id")
+      .select(col("doc_id"), (col("d.n_dropped") + col("_nd")).as("n_dropped"))
+  }
+
+  /** The scrub loops' output: the input's token counts ⋈ the cumulative
+    * drops ⋈ the final text.
+    */
+  private def scrubbedCorpus(orig: DataFrame, dropped: DataFrame,
+      cur: DataFrame): DataFrame =
+    orig.join(dropped, "doc_id")
+      .join(cur.select(col("doc_id"), col("text").as("text_clean")), "doc_id")
+      .select(col("doc_id"), col("n_tokens"), col("n_dropped"), col("text_clean"))
+
   /** Fixpoint span scrub — iterates cut-and-rescan until NO duplicated
     * run >= `minRun` remains detectable, delivering the corpus-level
     * invariant a single [[scrubSharedRuns]] pass cannot (cuts create
@@ -1478,14 +1493,14 @@ object Dedup {
     * adversary keeps hot across every round.
     *
     * Scale shape: the driver loop holds only an iteration counter and
-    * an is-empty probe per round; each round's frame is
-    * localCheckpoint'ed (plan-growth cut — text is rewritten, lineage
-    * would otherwise stack a full scrub pipeline per round), and a
-    * round RETIRES the previous round's checkpoint blocks as soon as
-    * its own are materialized ([[Ckpt.release]]), so pinned executor
-    * storage stays O(1) in rounds — an adversarial many-round corpus
-    * would otherwise hold one full rewritten-text copy per round until
-    * the run boundary. Rounds in practice: 1 detection round + 1 empty
+    * a span count per round; each round's frame is localCheckpoint'ed
+    * (plan-growth cut — text is rewritten, lineage would otherwise
+    * stack a full scrub pipeline per round), and a round RETIRES the
+    * previous round's checkpoint blocks as soon as its own are
+    * materialized ([[Ckpt.release]]), so pinned executor storage stays
+    * O(1) in rounds — an adversarial many-round corpus would otherwise
+    * hold one full rewritten-text copy per round until the run
+    * boundary. Rounds in practice: 1 detection round + 1 empty
     * confirmation on clean corpora, 2–3 on adversarial ones.
     *
     * Output: (doc_id, n_tokens — ORIGINAL count, n_dropped —
@@ -1494,35 +1509,7 @@ object Dedup {
   def scrubRunsFixpoint(docs: DataFrame, n: Int = 3, minRun: Long = 15L,
       maxPostings: Long = 1000L, maxIters: Int = 8): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    // crossRunsOf/selfRunsOf build a rowsBetween(0, j-1) super-gram
-    // frame with j = minRun - n + 1; minRun < n would make the frame
-    // bound negative — fail loudly here like sharedRuns/selfRuns do
-    require(minRun >= n, s"minRun must be >= n = $n, got $minRun")
-    val spark = docs.sparkSession
-    // one gram state per round, shared by all three families: the
-    // positional shingling and the occurrence count are the round's
-    // dominant linear passes, and the un-shared rendering paid them
-    // three times each (measured 10.3s -> 6.4s at sf0.1 from this)
-    def spansAndState(cur: DataFrame): (DataFrame, Seq[DataFrame]) = {
-      // LAZY cuts (r15): the round's one materialization is the
-      // spans.count() convergence check below — it cascades through
-      // spans → kept → occ → ps, persisting each, so the shared gram
-      // state still computes exactly once per round but the four
-      // per-frame eager count() jobs are gone
-      val ps = Ckpt.narrowLazy(positionalShingles(cur, n))
-      val occ = Ckpt.narrowLazy(ps.groupBy("gh").agg(count(lit(1)).as("_occ")))
-      val kept = Ckpt.narrowLazy(
-        ps.join(occ.filter(col("_occ") <= maxPostings).select("gh"), "gh"))
-      val hot = ps.join(occ.filter(col("_occ") > maxPostings).select("gh"), "gh")
-      val spans = Ckpt.narrowLazy(crossRunsOf(kept, n, minRun)
-        .select(col("j").as("doc_id"), col("start_j").as("s"),
-          (col("start_j") + col("run_tokens")).as("e"))
-        .unionByName(selfRunsOf(kept, n, minRun)
-          .select(col("doc_id"), col("start_j").as("s"),
-            (col("start_j") + col("run_tokens")).as("e")))
-        .unionByName(hotCutsOf(hot, n, minRun)))
-      (spans, Seq(ps, occ, kept, spans))
-    }
+    requireSpanArgs(n, minRun, maxPostings)
     var cur = docs.select(col("doc_id"), col("text"))
     var curCk: DataFrame = null // checkpoint backing cur (null = raw input)
     var dropped: DataFrame = null // cumulative (doc_id, n_dropped), own ckpt
@@ -1530,7 +1517,10 @@ object Dedup {
     var iters = 0
     var converged = false
     while (iters < maxIters && !converged) {
-      val (spans, roundState) = spansAndState(cur)
+      val (found, gramState) = scrubRound(cur, n, minRun, maxPostings)
+      // spans is counted, then applied: cut it so the apply reads blocks
+      val spans = Ckpt.narrowLazy(found)
+      val roundState = gramState :+ spans
       // count, not isEmpty: the one action that materializes the whole
       // lazy round state (isEmpty's limit-1 would leave the checkpoints
       // partially materialized and pay a backfill job per frame)
@@ -1543,12 +1533,7 @@ object Dedup {
         // rounds' full-text frames can retire below
         if (orig == null)
           orig = Ckpt.narrow(scrubbed.select(col("doc_id"), col("n_tokens")))
-        val newDropped = Ckpt.narrow(
-          if (dropped == null) scrubbed.select(col("doc_id"), col("n_dropped"))
-          else dropped.as("d")
-            .join(scrubbed.select(col("doc_id"),
-              col("n_dropped").as("_nd")), "doc_id")
-            .select(col("doc_id"), (col("d.n_dropped") + col("_nd")).as("n_dropped")))
+        val newDropped = Ckpt.narrow(droppedAfter(dropped, scrubbed))
         // everything this round read is materialized downstream now:
         // retire the round's gram state + spans, the previous round's
         // text frame, and the superseded cumulative audit
@@ -1568,9 +1553,7 @@ object Dedup {
           size(expr(TextAnalysis.WordsExpr))
             .cast("long").as("n_tokens"), lit(0L).as("n_dropped"),
           col("text").as("text_clean"))
-      else orig.join(dropped, "doc_id")
-        .join(cur.select(col("doc_id"), col("text").as("text_clean")), "doc_id")
-        .select(col("doc_id"), col("n_tokens"), col("n_dropped"), col("text_clean"))
+      else scrubbedCorpus(orig, dropped, cur)
     base.withColumn("n_iters", lit(iters.toLong))
       .withColumn("converged", lit(converged))
   }
@@ -1589,46 +1572,25 @@ object Dedup {
     * property-tested in DedupSpec on the adversarial corpora.
     *
     * Output: (doc_id, n_tokens — ORIGINAL count, n_dropped — cumulative,
-    * text_clean). Scale shape per round is the fixpoint's (shared gram
-    * state, checkpointed rewrites, O(1)-in-rounds pinned storage);
-    * total cost is exactly `rounds` rounds — no is-empty probe.
+    * text_clean). Each round is the fixpoint's [[scrubRound]] with a lazy
+    * cut on the rewritten text and nothing released; total cost is
+    * exactly `rounds` rounds — no span count.
     */
   def scrubRunsFixed(docs: DataFrame, n: Int = 3, minRun: Long = 15L,
       maxPostings: Long = 1000L, rounds: Int = 2): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    require(minRun >= n, s"minRun must be >= n = $n, got $minRun")
-    def spansOf(cur: DataFrame): DataFrame = {
-      // all-lazy rounds (r15): no convergence probe exists in the fixed
-      // variant, so nothing here needs a driver action — the caller's
-      // one action materializes every round's state in a single cascade
-      val ps = Ckpt.narrowLazy(positionalShingles(cur, n))
-      val occ = Ckpt.narrowLazy(ps.groupBy("gh").agg(count(lit(1)).as("_occ")))
-      val kept = ps.join(occ.filter(col("_occ") <= maxPostings).select("gh"), "gh")
-      val hot = ps.join(occ.filter(col("_occ") > maxPostings).select("gh"), "gh")
-      crossRunsOf(kept, n, minRun)
-        .select(col("j").as("doc_id"), col("start_j").as("s"),
-          (col("start_j") + col("run_tokens")).as("e"))
-        .unionByName(selfRunsOf(kept, n, minRun)
-          .select(col("doc_id"), col("start_j").as("s"),
-            (col("start_j") + col("run_tokens")).as("e")))
-        .unionByName(hotCutsOf(hot, n, minRun))
-    }
+    requireSpanArgs(n, minRun, maxPostings)
     var cur = docs.select(col("doc_id"), col("text"))
     var dropped: DataFrame = null
     var orig: DataFrame = null
     for (_ <- 1 to rounds) {
-      val scrubbed = Ckpt.narrowLazy(applyCutSpans(cur, spansOf(cur)))
+      val scrubbed = Ckpt.narrowLazy(
+        applyCutSpans(cur, scrubRound(cur, n, minRun, maxPostings)._1))
       if (orig == null)
         orig = scrubbed.select(col("doc_id"), col("n_tokens"))
-      dropped =
-        if (dropped == null) scrubbed.select(col("doc_id"), col("n_dropped"))
-        else dropped.as("d")
-          .join(scrubbed.select(col("doc_id"), col("n_dropped").as("_nd")), "doc_id")
-          .select(col("doc_id"), (col("d.n_dropped") + col("_nd")).as("n_dropped"))
+      dropped = droppedAfter(dropped, scrubbed)
       cur = scrubbed.select(col("doc_id"), col("text_clean").as("text"))
     }
-    orig.join(dropped, "doc_id")
-      .join(cur.select(col("doc_id"), col("text").as("text_clean")), "doc_id")
-      .select(col("doc_id"), col("n_tokens"), col("n_dropped"), col("text_clean"))
+    scrubbedCorpus(orig, dropped, cur)
   }
 }

@@ -37,8 +37,9 @@ object Graphs {
     // e.g. the full LSH verify chain feeding q142 — re-executes per
     // consumer and the plan tree grows multiplicatively (measured:
     // 5689-node plan, 26 jobs, 9.9 s at sf0.1 before; the [[Components]]
-    // precedent). LAZY cuts (r15): blocks persist at first consumer
-    // compute — identical sharing, no eager count() job per cut
+    // precedent). LAZY cuts (r15): shuffle stages below a cut run at
+    // the cut, its blocks persist at first consumer compute — identical
+    // sharing, no eager count() job per cut
     val e = Ckpt.narrowLazy(edges.select(col("i"), col("j")))
     val sym = e.union(e.select(col("j").as("i"), col("i").as("j")))
     val deg = sym.groupBy(col("i").as("node")).agg(count(lit(1)).as("d"))
@@ -93,11 +94,11 @@ object Graphs {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = edges.select(col("i"), col("j"))
     // ALL-LAZY rounds (r15, guide §1.5): the loop has no driver-side
-    // convergence probe and never releases mid-loop, so nothing needs
-    // an eager materialization — each cut still flattens the plan to a
-    // LogicalRDD (bounded plan depth in rounds) and the caller's one
-    // action materializes the whole peel cascade, replacing the 4
-    // eager count() jobs per round (20 jobs at the default 5 rounds)
+    // convergence probe and never releases mid-loop, so no cut needs an
+    // eager count() — each cut still flattens the plan to a LogicalRDD
+    // (bounded plan depth in rounds). The shuffle stages below each cut
+    // still run at the cut, while the loop is built; only each cut's
+    // last stage waits for the caller's action
     var sym = Ckpt.narrowLazy(
       e.union(e.select(col("j").as("i"), col("i").as("j"))).toDF("u", "v"))
     var alive = Ckpt.narrowLazy(sym.select(col("u").as("node")).distinct())
@@ -191,7 +192,8 @@ object Graphs {
   def labelPropagate(edges: DataFrame, rounds: Int = 5): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = edges.select(col("i"), col("j"))
-    // all-lazy rounds — the [[kCorePeel]] rationale
+    // all-lazy rounds — the [[kCorePeel]] rationale (shuffle stages
+    // below each cut run at the cut)
     val sym = Ckpt.narrowLazy(
       e.union(e.select(col("j").as("i"), col("i").as("j"))).toDF("u", "v"))
     var lab = Ckpt.narrowLazy(sym.select(col("u").as("node")).distinct()

@@ -40,9 +40,10 @@ object PageRank {
       s"scale below 1e6 floors small in-flows to zero, got $scale")
     // LAZY cuts + ONE fused setup action (r15, guide §1.5): node count
     // and dangling-node count come from a single crossJoin of two 1-row
-    // aggregates, whose job also materializes the e and deg checkpoints
-    // — replacing three driver actions (eager e, eager deg + count,
-    // dangling isEmpty) with one
+    // aggregates, whose job also runs the last stages of the e and deg
+    // checkpoints (their shuffle stages run at the cuts) — replacing
+    // three driver actions (eager e, eager deg + count, dangling
+    // isEmpty) with one
     val e = Ckpt.narrowLazy(edges.select(col("src"), col("dst")))
     val deg = Ckpt.narrowLazy(
       e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))

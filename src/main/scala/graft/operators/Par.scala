@@ -17,17 +17,24 @@ package graft.operators
 private[graft] object Par {
 
   /** Evaluate `fa` on the calling thread and `fb` on one helper thread,
-    * returning both. Job-description/group properties are thread-local
-    * in Spark, so the helper branch's jobs simply carry none.
+    * returning both. The helper is created by the calling thread, so it
+    * inherits the caller's Spark local properties (job group,
+    * description, any custom span label); its jobs additionally carry
+    * one job tag private to this call.
     *
-    * Failures propagate as the branch threw them: if `fa` throws, that
-    * exception propagates and the helper's outcome is never observed;
-    * otherwise a throw from `fb` is rethrown as its original exception,
-    * not wrapped in an `ExecutionException`. A failing branch does not
-    * cancel the other branch's running Spark jobs.
+    * Failures propagate as the branch threw them: if `fa` throws, the
+    * helper's running Spark jobs are cancelled through that tag, `both`
+    * waits for the helper to stop, and `fa`'s exception propagates (the
+    * helper's outcome is never observed); otherwise a throw from `fb` is
+    * rethrown as its original exception, not wrapped in an
+    * `ExecutionException`.
     */
   def both[A, B](fa: => A, fb: => B): (A, B) = {
-    import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+    import java.util.concurrent.{ExecutionException, Executors, TimeUnit, TimeoutException}
+    import org.apache.spark.sql.SparkSession
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val tag = s"graft-par-${java.util.UUID.randomUUID}"
     val ex = Executors.newSingleThreadExecutor(r => {
       val t = new Thread(r, "graft-par")
       t.setDaemon(true)
@@ -35,9 +42,19 @@ private[graft] object Par {
     })
     try {
       val f = ex.submit(new java.util.concurrent.Callable[B] {
-        override def call(): B = fb
+        override def call(): B = { sc.foreach(_.addJobTag(tag)); fb }
       })
-      val a = fa
+      val a = try fa catch {
+        case e: Throwable =>
+          // re-cancel until the helper stops: a job it starts after one
+          // cancel is caught by the next
+          while (!f.isDone) {
+            sc.foreach(_.cancelJobsWithTag(tag, "Par.both: the sibling branch failed"))
+            try f.get(100, TimeUnit.MILLISECONDS)
+            catch { case _: TimeoutException | _: ExecutionException => () }
+          }
+          throw e
+      }
       val b = try f.get() catch { case e: ExecutionException => throw e.getCause }
       (a, b)
     } finally {

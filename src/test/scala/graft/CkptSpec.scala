@@ -86,4 +86,33 @@ class CkptSpec extends AnyFunSuite {
     Ckpt.releaseGraftStorage(spark)
     assert((sc.getPersistentRDDs.keySet -- base).isEmpty)
   }
+
+  test("narrowLazy over a shuffle runs the stages below the cut at the cut") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    val sc = spark.sparkContext
+    val group = s"ckpt-spec-lazy-${System.nanoTime}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val a = spark.range(200000).groupBy((col("id") % 1000).as("k"))
+      .agg(count(lit(1)).as("n"))
+    val b = spark.range(200000).groupBy((col("id") % 700).as("k"))
+      .agg(sum("id").as("s"))
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "narrowLazy over a join of two aggregates")
+    val cut = try Ckpt.narrowLazy(a.join(b, "k")) finally sc.clearJobGroup()
+    // listener delivery is asynchronous: give the bus time to catch up
+    val deadline = System.nanoTime + 10000000000L
+    while (jobs.get == 0 && System.nanoTime < deadline) Thread.sleep(20)
+    sc.removeSparkListener(listener)
+    assert(jobs.get > 0, "a lazy cut over shuffles must run their stages at the cut")
+    // the last stage still waits for the first action
+    assert(cut.count() == 700)
+    Ckpt.release(cut)
+  }
 }

@@ -613,6 +613,24 @@ class DedupSpec extends AnyFunSuite {
     }).filter(_._5 >= minRun).toSet
   }
 
+  /** The within-doc extension of [[bruteRuns]] — ground truth for
+    * [[Dedup.selfRuns]]: all (doc_id, start_i, start_j, len) with
+    * start_i < start_j, len >= minRun, the two token slices equal and the
+    * run extending neither left nor right.
+    */
+  private def bruteSelfRuns(docs: Seq[(Long, String)], minRun: Int): Set[(Long, Long, Long, Long)] =
+    (for {
+      (id, t) <- docs
+      a = t.trim.split("\\s+").filter(_.nonEmpty).toVector
+      si <- a.indices; sj <- (si + 1) until a.length
+      if a(si) == a(sj)
+      if si == 0 || a(si - 1) != a(sj - 1) // maximal-left only
+    } yield {
+      var len = 0
+      while (sj + len < a.length && a(si + len) == a(sj + len)) len += 1
+      (id, si.toLong, sj.toLong, len.toLong)
+    }).filter(_._4 >= minRun).toSet
+
   test("sharedRuns == brute-force maximal verbatim runs on a crafted corpus") {
     import spark.implicits._
     val run = (1 to 20).map(k => s"shared$k").mkString(" ") // 20-token run
@@ -649,6 +667,14 @@ class DedupSpec extends AnyFunSuite {
       val len = 20 + rnd.nextInt(25)
       id -> Vector.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
     }
+    // within-doc ground truth: the same corpus plus docs that plant one
+    // random segment twice, apart or back to back (a tandem repeat)
+    def words(k: Int) = Vector.fill(k)(vocab(rnd.nextInt(vocab.size)))
+    val selfDocs = docs ++ (15L to 20L).map { id =>
+      val seg = words(15 + rnd.nextInt(8))
+      id -> (if (id % 2 == 0) words(3) ++ seg ++ words(4) ++ seg ++ words(2)
+        else words(2) ++ seg ++ seg ++ words(3)).mkString(" ")
+    }
     for (minRun <- Seq(3, 6, 15)) { // 3 = degenerate j=1 (raw-gram path)
       val got = Dedup.sharedRuns(docs.toDF("doc_id", "text"),
           n = 3, minRun = minRun.toLong, maxPostings = 1000000L)
@@ -658,6 +684,16 @@ class DedupSpec extends AnyFunSuite {
       val want = bruteRuns(docs, minRun)
       assert(got == want,
         s"minRun=$minRun missed: ${want -- got}, spurious: ${got -- want}")
+      // the i = j rows of the same run join: within-doc repeats
+      val gotSelf = Dedup.selfRuns(selfDocs.toDF("doc_id", "text"),
+          n = 3, minRun = minRun.toLong, maxPostings = 1000000L)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      val wantSelf = bruteSelfRuns(selfDocs, minRun)
+      assert(wantSelf.exists(_._1 >= 15L), s"minRun=$minRun: the planted repeats are ground truth")
+      assert(gotSelf == wantSelf,
+        s"selfRuns minRun=$minRun missed: ${wantSelf -- gotSelf}, " +
+          s"spurious: ${gotSelf -- wantSelf}")
     }
   }
 
@@ -775,6 +811,22 @@ class DedupSpec extends AnyFunSuite {
     rows.values.foreach { case (nt, nd, txt, _, _) =>
       assert(txt.split("\\s+").count(_.nonEmpty).toLong == nt - nd,
         "cumulative audit conserves tokens")
+    }
+  }
+
+  test("scrub loops cut the larger doc_id's copy even where it sits earlier") {
+    // the run join orders pairs on (doc_id, pos): a cross-doc run whose
+    // later doc holds it at a SMALLER position must still be cut there,
+    // never in the keeper
+    val run = (1 to 18).map(k => s"r$k").mkString(" ")
+    val seq = Seq((1L, s"a b c d e f $run"), (2L, s"$run g h"))
+    val df = seq.toDF("doc_id", "text")
+    for (out <- Seq(
+        Dedup.scrubRunsFixpoint(df, n = 3, minRun = 15L, maxPostings = 1000L),
+        Dedup.scrubRunsFixed(df, n = 3, minRun = 15L, maxPostings = 1000L))) {
+      val got = out.select("doc_id", "text_clean").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got == Map(1L -> seq.head._2, 2L -> "g h"), got)
     }
   }
 
@@ -1104,7 +1156,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("scrub/run entry points reject minRun < n loudly (invalid super-gram frame)") {
-    // crossRunsOf/selfRunsOf build a rowsBetween(0, j-1) frame with
+    // the run join builds a rowsBetween(0, j-1) frame with
     // j = minRun - n + 1; minRun < n would make the bound negative at
     // runtime — every entry point must fail at the door instead
     val df = Seq((0L, "a b c d e")).toDF("doc_id", "text")
@@ -1116,6 +1168,50 @@ class DedupSpec extends AnyFunSuite {
       val ex = intercept[IllegalArgumentException](f(df))
       assert(ex.getMessage.contains("minRun"), ex.getMessage)
     }
+    // a stop-gram cap under 2 would drop every gram a pair could share:
+    // the same door rejects it for all five entry points
+    for (f <- Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+        d => Dedup.sharedRuns(d, n = 3, minRun = 3L, maxPostings = 1L),
+        d => Dedup.selfRuns(d, n = 3, minRun = 3L, maxPostings = 1L),
+        d => Dedup.scrubSharedRuns(d, n = 3, minRun = 3L, maxPostings = 1L),
+        d => Dedup.scrubRunsFixpoint(d, n = 3, minRun = 3L, maxPostings = 1L),
+        d => Dedup.scrubRunsFixed(d, n = 3, minRun = 3L, maxPostings = 1L))) {
+      val ex = intercept[IllegalArgumentException](f(df))
+      assert(ex.getMessage.contains("maxPostings"), ex.getMessage)
+    }
+  }
+
+  test("span tier: one ghs join per scrub round; the run filters sit inside it") {
+    import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, LessThan}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case x => Seq(x)
+    }
+    def equi(c: Expression, name: String): Boolean = conjuncts(c).exists {
+      case EqualTo(l: Attribute, r: Attribute) => l.name == name && r.name == name
+      case _ => false
+    }
+    // the optimized super-gram self-joins of a frame (equi-key ghs)
+    def ghsJoins(df: org.apache.spark.sql.DataFrame): Seq[Expression] =
+      df.queryExecution.optimizedPlan.collect {
+        case j: Join if j.condition.exists(equi(_, "ghs")) => j.condition.get
+      }
+    val run = (1 to 16).map(k => s"w$k").mkString(" ")
+    val df = Seq((1L, s"$run x $run"), (2L, s"y $run")).toDF("doc_id", "text")
+    val (spans, state) = Dedup.scrubRound(df, 3, 15L, 1000L)
+    assert(ghsJoins(spans).size == 1, "cross-doc and within-doc runs share one join")
+    state.foreach(graft.operators.Ckpt.release)
+    // sharedRuns: the doc-order filter i < j is a join condition
+    val cross = ghsJoins(Dedup.sharedRuns(df, n = 3, minRun = 15L))
+    assert(cross.size == 1)
+    assert(conjuncts(cross.head).exists {
+      case LessThan(l: Attribute, r: Attribute) => l.name == "doc_id" && r.name == "doc_id"
+      case _ => false
+    }, cross.head.sql)
+    // selfRuns: i = j makes doc_id a second equi-key of the same join
+    val self = ghsJoins(Dedup.selfRuns(df, n = 3, minRun = 15L))
+    assert(self.size == 1 && equi(self.head, "doc_id"), self.map(_.sql))
   }
 
   test("oracle minhashCandSql rejects nSeeds < 16 (band pool takes the first 16)") {

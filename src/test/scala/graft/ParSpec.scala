@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Par
 
 /** `Par.both` failure reporting: a branch's exception reaches the caller
-  * as that branch threw it.
+  * as that branch threw it, and a failing calling branch cancels the
+  * helper's Spark jobs.
   */
 class ParSpec extends AnyFunSuite {
 
@@ -22,5 +23,57 @@ class ParSpec extends AnyFunSuite {
       Par.both[Int, Int](throw boom, throw new IllegalStateException("helper failed"))
     }
     assert(got eq boom)
+  }
+
+  test("calling-branch failure cancels the helper's running Spark job and waits for it") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicReference
+    import org.apache.spark.TaskContext
+    import org.apache.spark.scheduler.{JobResult, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = TestSpark.spark.sparkContext
+    val desc = s"par-spec-long-${System.nanoTime}"
+    val jobId = new AtomicReference[Integer]()
+    val result = new AtomicReference[JobResult]()
+    val started = new CountDownLatch(1)
+    val ended = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.job.description") == desc)) {
+          jobId.set(js.jobId)
+          started.countDown()
+        }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (jobId.get != null && je.jobId == jobId.get.intValue) {
+          result.set(je.jobResult)
+          ended.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val boom = new IllegalArgumentException("caller failed")
+      val jobSeconds = 60
+      val t0 = System.nanoTime
+      val got = intercept[IllegalArgumentException] {
+        Par.both[Int, Long]({
+          assert(started.await(30, TimeUnit.SECONDS), "helper job never started")
+          throw boom
+        }, {
+          sc.setJobDescription(desc)
+          // two tasks that poll for a kill and otherwise run jobSeconds
+          sc.parallelize(1 to 2, 2).map { x =>
+            val end = System.nanoTime + jobSeconds * 1000000000L
+            while (!TaskContext.get.isInterrupted() && System.nanoTime < end)
+              Thread.sleep(20)
+            x
+          }.count()
+        })
+      }
+      val took = (System.nanoTime - t0) / 1e9
+      assert(got eq boom)
+      assert(took < jobSeconds / 3.0, s"both returned after $took s")
+      assert(ended.await(10, TimeUnit.SECONDS), "the helper job never ended")
+      assert(result.get != org.apache.spark.scheduler.JobSucceeded)
+      assert(result.get.toString.contains("cancelled"), result.get.toString)
+    } finally sc.removeSparkListener(listener)
   }
 }
