@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an undirected edge list — the transitive-
@@ -9,18 +12,44 @@ import org.apache.spark.storage.StorageLevel
   * [[Similarity]]) into dedup clusters: if a~b and b~c, all three are one
   * group even when a~c was never emitted.
   *
-  * Algorithm: iterative min-label propagation (the MapReduce-era
-  * hash-to-min shape). Each round every node takes the minimum label
-  * among itself and its neighbors; convergence when no label changes.
-  * Rounds are bounded by the component diameter — near-dup clusters are
-  * stars/cliques around a source document, so 2–3 rounds in practice;
-  * `maxIter` caps adversarial chains. Every round is two shuffles (join
-  * edges with labels, min-aggregate by neighbor) at O(|E|) — no
-  * all-pairs, no driver-side graph. Labels persist per round and the
-  * lineage is cut with a local checkpoint every few rounds so plans stay
-  * flat no matter how many iterations run.
+  * Two paths, one answer (component = minimum node id):
+  *
+  *  - Small edge lists close on the driver. After the edge cut, one
+  *    bounded collect fetches at most `SmallEdges + 1` (2^18 + 1) edges.
+  *    When the list fits under `SmallEdges`, both ids are `LongType` or
+  *    both `IntegerType`, and no endpoint is null, a breadth-first sweep
+  *    over the nodes in ascending id order labels every component with
+  *    its minimum (each sweep starts at the smallest unvisited node) and
+  *    returns a local relation. The cap bounds driver memory: the
+  *    fetched edges and the output nodes are boxed rows (on the order of
+  *    100 bytes each) next to a few primitive arrays per endpoint, about
+  *    100 MB for 2^18 edges over 2^19 distinct nodes. Near-dup edge lists
+  *    are a few hundred to a few thousand rows, so this is the common
+  *    path; it replaces one to four label-propagation rounds of about 15
+  *    AQE stage-jobs each.
+  *  - Anything else runs iterative min-label propagation (the
+  *    MapReduce-era hash-to-min shape). Each round every node takes the
+  *    minimum label among itself and its neighbors; convergence when no
+  *    label changes. Every round is two shuffles (join edges with
+  *    labels, min-aggregate by neighbor) at O(|E|) — no all-pairs and no
+  *    driver-side graph. Labels are cut per round, so plans stay flat no
+  *    matter how many iterations run.
+  *
+  * `maxIter` means the same on both paths. Let D be the largest distance
+  * from a component's minimum node to any of its members. The fixpoint
+  * needs max(1, ceil(D / 2)) double-hop rounds and may run
+  * `maxIter / 2`, so both paths throw the same `IllegalStateException`
+  * exactly when `2 * max(1, ceil(D / 2)) > maxIter`; the driver path
+  * measures D during its sweep.
+  *
+  * Every Spark job this operator starts carries a job description
+  * (`Components.connected: edge cut`, `fetch |E|<=262144`, `round <r>`);
+  * the caller's description is restored afterwards.
   */
 object Components {
+
+  /** Largest edge list closed on the driver (see the class doc). */
+  private val SmallEdges = 1 << 18
 
   /** (node, component) for every endpoint of `edges` (columns i, j);
     * component = minimum node id reachable through the edge set.
@@ -29,18 +58,110 @@ object Components {
     * rounds has propagated `round * 2 + 1` hops, which is the figure the
     * non-convergence error reports.
     */
-  def connected(edges: DataFrame, maxIter: Int = 25): DataFrame = {
+  def connected(edges: DataFrame, maxIter: Int = 25): DataFrame =
+    connected(edges, maxIter, SmallEdges)
+
+  /** [[connected]] with the driver-path cap as a parameter, so tests can
+    * force either path (a cap of -1 always takes the fixpoint).
+    */
+  private[graft] def connected(edges: DataFrame, maxIter: Int,
+      smallEdges: Int): DataFrame = {
     // the loop advances two hops per round, so a budget below one round
     // could never observe convergence — even on an already-converged graph
     require(maxIter >= 2, s"maxIter must be >= 2 (one double-hop round), got $maxIter")
-    // both union branches (and every loop round) read the edge list; cut
+    // the fetch reads the edge list, and a list that falls back to the
+    // fixpoint is read again by every round and both union branches; cut
     // its lineage ONCE up front — otherwise an expensive producer (the
-    // LSH verification pipeline feeding q47/q48) runs once per branch.
-    // LAZY (r15): the producer's shuffle stages run at the cut; its last
-    // stage runs inside round 1's convergence count, where block locks
-    // dedup the two union branches' first computes, so the producer
-    // still runs exactly once and no separate count() job reruns it
-    val e = Ckpt.narrowLazy(edges)
+    // LSH verification pipeline feeding q47/q48) runs once per read.
+    // Lazy: the producer's shuffle stages run at the cut and its last
+    // stage inside the fetch.
+    val e = labelled(edges, "edge cut")(Ckpt.narrowLazy(edges))
+    val idType = e.schema("i").dataType
+    val small =
+      if (idType != e.schema("j").dataType || (idType != LongType && idType != IntegerType))
+        None
+      else {
+        val rows = labelled(e, s"fetch |E|<=$smallEdges")(
+          e.select(col("i").cast("long"), col("j").cast("long"))
+            .limit(smallEdges + 1).collect())
+        Some(rows).filter(rs => rs.length <= smallEdges &&
+          !rs.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      }
+    small match {
+      case Some(rows) =>
+        Ckpt.release(e)
+        closeOnDriver(e, rows, idType, maxIter)
+      case None => fixpoint(e, maxIter)
+    }
+  }
+
+  /** The driver path: components of the fetched (non-null, Long-cast)
+    * edges as a local relation with the fixpoint's schema.
+    */
+  private def closeOnDriver(e: DataFrame, rows: Array[Row], idType: DataType,
+      maxIter: Int): DataFrame = {
+    val ends = new Array[Long](2 * rows.length)
+    for (k <- rows.indices) {
+      ends(2 * k) = rows(k).getLong(0)
+      ends(2 * k + 1) = rows(k).getLong(1)
+    }
+    // node index order = id order, so a sweep in index order starts each
+    // component at its minimum (a primitive sort, then dedupe in place)
+    val sorted = ends.sorted
+    var n = 0
+    for (x <- sorted if n == 0 || x != sorted(n - 1)) { sorted(n) = x; n += 1 }
+    val ids = sorted.take(n)
+    val at = ends.map(java.util.Arrays.binarySearch(ids, _))
+    // undirected adjacency in CSR form: each edge lists b under a and a
+    // under b, so the degree of v is its count among the endpoints
+    val off = new Array[Int](n + 1)
+    at.foreach(v => off(v + 1) += 1)
+    for (v <- 0 until n) off(v + 1) += off(v)
+    val next = off.clone()
+    val adj = new Array[Int](at.length)
+    for (k <- rows.indices) {
+      val (a, b) = (at(2 * k), at(2 * k + 1))
+      adj(next(a)) = b; next(a) += 1
+      adj(next(b)) = a; next(b) += 1
+    }
+    val root = Array.fill(n)(-1)
+    val depth = new Array[Int](n)
+    val queue = new Array[Int](n)
+    var tail = 0
+    var far = 0 // D: the deepest BFS level over every component
+    for (s <- 0 until n if root(s) < 0) {
+      root(s) = s
+      var head = tail
+      queue(tail) = s; tail += 1
+      while (head < tail) {
+        val v = queue(head); head += 1
+        for (k <- off(v) until off(v + 1)) {
+          val w = adj(k)
+          if (root(w) < 0) {
+            root(w) = s
+            depth(w) = depth(v) + 1
+            far = math.max(far, depth(w))
+            queue(tail) = w; tail += 1
+          }
+        }
+      }
+    }
+    val rounds = math.max(1, (far + 1) / 2)
+    if (2 * rounds > maxIter) throw nonConvergence(2 * (maxIter / 2) + 1, maxIter)
+    val out = (0 until n).map { v =>
+      if (idType == IntegerType) Row(ids(v).toInt, ids(root(v)).toInt)
+      else Row(ids(v), ids(root(v)))
+    }
+    // the fixpoint's columns: node is an endpoint, component a least()
+    // over endpoints, so both are nullable exactly when i or j is
+    val nullable = e.schema("i").nullable || e.schema("j").nullable
+    e.sparkSession.createDataFrame(out.asJava, StructType(Seq(
+      StructField("node", idType, nullable),
+      StructField("component", idType, nullable))))
+  }
+
+  /** The distributed min-label fixpoint over the cut edge list `e`. */
+  private def fixpoint(e: DataFrame, maxIter: Int): DataFrame = {
     val sym = e.select(col("i").as("src"), col("j").as("dst"))
       .union(e.select(col("j").as("src"), col("i").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -78,10 +199,13 @@ object Components {
       // per action, halving the count of job-launching convergence
       // checks — the dominant cost for small graphs, harmless for big
       // ones. A no-change double hop implies the single-hop fixed point.
-      val next = Ckpt.narrowLazy(hop(hop(labels)))
       // count (not isEmpty): isEmpty's limit-1 would leave the persist
       // only partially materialized and the next round would recompute
-      converged = next.filter(col("_chg")).count() == 0
+      val (next, changed) = labelled(e, s"round ${round + 1}") {
+        val next = Ckpt.narrowLazy(hop(hop(labels)))
+        (next, next.filter(col("_chg")).count())
+      }
+      converged = changed == 0
       // round 1's labels is a plain persist (Dataset.unpersist frees it);
       // every later snapshot is checkpointed, whose RDD-level storage
       // only Ckpt.release can free — call both, each no-ops on the other
@@ -99,11 +223,23 @@ object Components {
     if (!converged) {
       labels.unpersist()
       Ckpt.release(labels)
-      throw new IllegalStateException(
-        s"Components.connected did not converge within ${round * 2 + 1} " +
-          s"label-propagation hops (maxIter=$maxIter); raise maxIter for " +
-          "graphs with longer chain diameters")
+      throw nonConvergence(round * 2 + 1, maxIter)
     }
     labels.drop("_chg")
+  }
+
+  private def nonConvergence(hops: Int, maxIter: Int) = new IllegalStateException(
+    s"Components.connected did not converge within $hops " +
+      s"label-propagation hops (maxIter=$maxIter); raise maxIter for " +
+      "graphs with longer chain diameters")
+
+  /** Run `body` under this operator's job description `what`, then
+    * restore the caller's (null removes it again).
+    */
+  private def labelled[T](df: DataFrame, what: String)(body: => T): T = {
+    val (sc, key) = (df.sparkSession.sparkContext, "spark.job.description")
+    val prev = sc.getLocalProperty(key)
+    sc.setJobDescription(s"Components.connected: $what")
+    try body finally sc.setLocalProperty(key, prev)
   }
 }

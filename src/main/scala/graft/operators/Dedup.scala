@@ -1218,8 +1218,13 @@ object Dedup {
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
     // j consecutive KEPT positions → one super-gram; a hole (dropped
     // stop-gram) or doc end yields lead ≠ pos + j − 1 and no row, which
-    // is exactly where raw-gram islands break too
-    val sup = kept
+    // is exactly where raw-gram islands break too. A null doc_id never
+    // satisfies the join's order predicate, so the filter drops no
+    // match; it keeps the two join sides identical so AQE shuffles
+    // `kept` by doc_id once for both. Without it, a doc_id join above
+    // (a scrub round's cut apply) lets the optimizer infer the filter
+    // on one side only, and that side got its own exchange.
+    val sup = kept.filter(col("doc_id").isNotNull)
       .withColumn("ghs", collect_list(col("gh")).over(byDoc.rowsBetween(0, j - 1)))
       .withColumn("endp", lead(col("pos"), j - 1).over(byDoc))
       .filter(col("endp") === col("pos") + (j - 1))

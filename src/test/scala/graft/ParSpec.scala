@@ -76,4 +76,61 @@ class ParSpec extends AnyFunSuite {
       assert(result.get.toString.contains("cancelled"), result.get.toString)
     } finally sc.removeSparkListener(listener)
   }
+
+  test("helper-branch failure cancels the calling branch's running Spark job") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicReference
+    import org.apache.spark.TaskContext
+    import org.apache.spark.scheduler.{JobResult, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = TestSpark.spark.sparkContext
+    val desc = s"par-spec-caller-long-${System.nanoTime}"
+    val jobId = new AtomicReference[Integer]()
+    val result = new AtomicReference[JobResult]()
+    val started = new CountDownLatch(1)
+    val ended = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.job.description") == desc)) {
+          jobId.set(js.jobId)
+          started.countDown()
+        }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (jobId.get != null && je.jobId == jobId.get.intValue) {
+          result.set(je.jobResult)
+          ended.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    val tagsBefore = sc.getJobTags()
+    try {
+      val boom = new IllegalStateException("helper failed")
+      val jobSeconds = 60
+      val t0 = System.nanoTime
+      val got = intercept[IllegalStateException] {
+        Par.both[Long, Int]({
+          sc.setJobDescription(desc)
+          try {
+            // two tasks that poll for a kill and otherwise run jobSeconds
+            sc.parallelize(1 to 2, 2).map { x =>
+              val end = System.nanoTime + jobSeconds * 1000000000L
+              while (!TaskContext.get.isInterrupted() && System.nanoTime < end)
+                Thread.sleep(20)
+              x
+            }.count()
+          } finally sc.setJobDescription(null)
+        }, {
+          assert(started.await(30, TimeUnit.SECONDS), "calling-branch job never started")
+          throw boom
+        })
+      }
+      val took = (System.nanoTime - t0) / 1e9
+      assert(got eq boom)
+      assert(took < jobSeconds / 3.0, s"both returned after $took s")
+      assert(ended.await(10, TimeUnit.SECONDS), "the calling-branch job never ended")
+      assert(result.get != org.apache.spark.scheduler.JobSucceeded)
+      assert(result.get.toString.contains("cancelled"), result.get.toString)
+      // only the per-call tag is removed again; the caller's tags stay
+      assert(sc.getJobTags() == tagsBefore)
+    } finally sc.removeSparkListener(listener)
+  }
 }
