@@ -1,0 +1,88 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.Random
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+
+import graft.operators.{Ckpt, Dedup}
+
+/** Times `Dedup.nearDupEdges` on both sides of its driver-path bound:
+  * the gated call (bound `GATE`, default 131072) against the forced
+  * distributed plan (bound -1), alternating which runs first, on
+  * synthetic corpora of `n` docs (40–60 words over a 20,000-word
+  * vocabulary; every 20th doc is a one-word edit of another, so a tenth
+  * of the docs are near-dup candidates). A doc has 4 band rows. Each
+  * size also reports the driver heap that a band fetch of that size and
+  * its buckets hold after a full GC.
+  *
+  * Not part of the build. Compile it with the Scala compiler from the
+  * Spark install (`scala.tools.nsc.Main`, classpath: the Spark jars plus
+  * `target/scala-2.13/classes`) into `target/neardup-gate`, then run
+  * `graft.NearDupGate` with `dev/run.sh`'s JVM flags and classpath plus
+  * that directory, for example with the arguments
+  * `/tmp/ndgate 5 16384 24576 32768 40960`.
+  *
+  * Arguments: a directory for the generated parquet corpora (reused
+  * across runs), timed reps per path (one untimed warm-up rep runs
+  * first), then the corpus sizes in docs. Prints one `RESULT` line per
+  * call (wall seconds, jobs, edges, whether the result is a local
+  * relation, i.e. the driver path completed) and one `HEAP` line per
+  * size.
+  */
+object NearDupGate {
+  def textOf(id: Long): String = {
+    val base = if (id % 20 == 19) id - 7 else id
+    val r = new Random(base * 7919L + 17)
+    val len = 40 + r.nextInt(21)
+    val ws = Array.fill(len)(s"w${r.nextInt(20000)}")
+    if (base != id) { val q = new Random(id); ws(q.nextInt(len)) = s"x${q.nextInt(1000)}" }
+    ws.mkString(" ")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = Graft.session(master = "local[4]", shufflePartitions = 4, appName = "ndgate")
+    import spark.implicits._
+    val (root, reps, sizes) = (args(0), args(1).toInt, args.drop(2).map(_.toLong))
+    val gate = sys.env.getOrElse("GATE", "131072").toInt
+    val jobs = new AtomicInteger()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    })
+    for (n <- sizes) {
+      val dir = s"$root/docs_$n"
+      if (!new java.io.File(dir).exists())
+        spark.range(0, n, 1, 4).map(id => (id.longValue, textOf(id))).toDF("doc_id", "text")
+          .write.parquet(dir)
+      val docs = spark.read.parquet(dir)
+      val paths = Seq("gated" -> gate, "distributed" -> -1)
+      for (rep <- 0 to reps; (tag, bound) <- if (rep % 2 == 0) paths else paths.reverse) {
+        Ckpt.releaseGraftStorage(spark); System.gc(); Thread.sleep(500)
+        jobs.set(0)
+        val t0 = System.nanoTime
+        val out = Dedup.nearDupEdges(docs, bound)
+        val local = out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+        val edges = out.collect().length
+        val s = (System.nanoTime - t0) / 1e9
+        Thread.sleep(300) // let the listener see the last job
+        println(f"RESULT n=$n bandRows=${n * 4} path=$tag rep=$rep wall=$s%.3f " +
+          s"jobs=${jobs.get} edges=$edges local=$local gate=$bound")
+      }
+      val bands = Dedup.lshBands(Ckpt.narrowLazy(Dedup.shingles(docs, 3)))
+      val mx = java.lang.management.ManagementFactory.getMemoryMXBean
+      def used() = { for (_ <- 1 to 3) { System.gc(); Thread.sleep(300) }; mx.getHeapMemoryUsage.getUsed }
+      bands.limit(1).collect()
+      val before = used()
+      val fetched = bands.select($"doc_id".cast("long"), $"b".cast("long"), $"band_key")
+        .limit(gate + 1).collect()
+      val buckets = fetched.groupMap(r => (r.getLong(1), r.getString(2)))(_.getLong(0))
+      val after = used()
+      println(f"HEAP n=$n rows=${fetched.length} buckets=${buckets.size} " +
+        f"retainedMB=${(after - before) / 1e6}%.1f")
+      Ckpt.releaseGraftStorage(spark)
+    }
+    spark.stop()
+  }
+}

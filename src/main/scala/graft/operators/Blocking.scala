@@ -20,6 +20,13 @@ import org.apache.spark.sql.functions._
   *
   * Rows are keyed by `doc_id`; the overlap steps read (doc_id, gh) set
   * frames.
+  *
+  * These are the distributed renderings. The canonical MinHash paths of
+  * [[Dedup]] (`minhashPairs`, `nearDupEdges` and the incremental edge
+  * unions) apply the same three rules on the driver when their band
+  * frame has at most 2^17 rows — same cap, same i < j pairs, same
+  * (c, n_i, n_j) counts — and fall back to these operators, with their
+  * plans unchanged, for anything larger.
   */
 private[graft] object Blocking {
 

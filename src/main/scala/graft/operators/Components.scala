@@ -3,6 +3,7 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -15,7 +16,9 @@ import org.apache.spark.storage.StorageLevel
   * Two paths, one answer (component = minimum node id):
   *
   *  - Small edge lists close on the driver. After the edge cut, one
-  *    bounded collect fetches at most `SmallEdges + 1` (2^18 + 1) edges.
+  *    bounded collect fetches at most `SmallEdges + 1` (2^18 + 1) edges
+  *    (one job for a local-relation edge list, which is cut as one
+  *    partition).
   *    When the list fits under `SmallEdges`, both ids are `LongType` or
   *    both `IntegerType`, and no endpoint is null, a breadth-first sweep
   *    over the nodes in ascending id order labels every component with
@@ -51,6 +54,9 @@ object Components {
   /** Largest edge list closed on the driver (see the class doc). */
   private val SmallEdges = 1 << 18
 
+  /** Prefix of this operator's job descriptions. */
+  private val Op = "Components.connected"
+
   /** (node, component) for every endpoint of `edges` (columns i, j);
     * component = minimum node id reachable through the edge set.
     * `maxIter` bounds the double-hop rounds (`round * 2 + 2 <= maxIter`);
@@ -74,14 +80,20 @@ object Components {
     // its lineage ONCE up front — otherwise an expensive producer (the
     // LSH verification pipeline feeding q47/q48) runs once per read.
     // Lazy: the producer's shuffle stages run at the cut and its last
-    // stage inside the fetch.
-    val e = labelled(edges, "edge cut")(Ckpt.narrowLazy(edges))
+    // stage inside the fetch. A local relation (a driver-built edge
+    // list, such as Dedup's driver-verified near-dup edges) is cut as one
+    // partition: its rows are on the driver already, and the bounded
+    // fetch is then one job instead of a limit scan that widens over the
+    // partitions in rounds (three jobs for q47's 25 edges).
+    val local = edges.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    val e = Labelled(edges, s"$Op: edge cut")(
+      Ckpt.narrowLazy(if (local) edges.coalesce(1) else edges))
     val idType = e.schema("i").dataType
     val small =
       if (idType != e.schema("j").dataType || (idType != LongType && idType != IntegerType))
         None
       else {
-        val rows = labelled(e, s"fetch |E|<=$smallEdges")(
+        val rows = Labelled(e, s"$Op: fetch |E|<=$smallEdges")(
           e.select(col("i").cast("long"), col("j").cast("long"))
             .limit(smallEdges + 1).collect())
         Some(rows).filter(rs => rs.length <= smallEdges &&
@@ -201,7 +213,7 @@ object Components {
       // ones. A no-change double hop implies the single-hop fixed point.
       // count (not isEmpty): isEmpty's limit-1 would leave the persist
       // only partially materialized and the next round would recompute
-      val (next, changed) = labelled(e, s"round ${round + 1}") {
+      val (next, changed) = Labelled(e, s"$Op: round ${round + 1}") {
         val next = Ckpt.narrowLazy(hop(hop(labels)))
         (next, next.filter(col("_chg")).count())
       }
@@ -229,17 +241,7 @@ object Components {
   }
 
   private def nonConvergence(hops: Int, maxIter: Int) = new IllegalStateException(
-    s"Components.connected did not converge within $hops " +
+    s"$Op did not converge within $hops " +
       s"label-propagation hops (maxIter=$maxIter); raise maxIter for " +
       "graphs with longer chain diameters")
-
-  /** Run `body` under this operator's job description `what`, then
-    * restore the caller's (null removes it again).
-    */
-  private def labelled[T](df: DataFrame, what: String)(body: => T): T = {
-    val (sc, key) = (df.sparkSession.sparkContext, "spark.job.description")
-    val prev = sc.getLocalProperty(key)
-    sc.setJobDescription(s"Components.connected: $what")
-    try body finally sc.setLocalProperty(key, prev)
-  }
 }

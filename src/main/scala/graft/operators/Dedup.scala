@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 
 /** Document deduplication suite — the LLM-training-pipeline tier the
   * engine adds on top of the reference's MapReduce surface (the
@@ -575,25 +578,247 @@ object Dedup {
   /** Full MinHash-LSH near-dup pipeline: shingle → signature → band →
     * same-bucket candidates → exact Jaccard verification ≥ `threshold`.
     *
-    * The hashed shingle frame feeds four consumers (signature build,
-    * candidate-doc semi-join, both sides of the intersection join), so it
-    * is locally checkpointed ONCE — 16 bytes/doc/shingle of RDD blocks —
-    * and every consumer reads blocks instead of re-deriving the text
-    * scan + shingle distinct. A/B at sf0.1 (warm, checkpoint build inside
-    * the timer): q27 2.49s vs 2.72s re-derive, q29 3.08s vs 3.70s, and
-    * q48 — where this frame's lineage is deepest — 7.7s stable vs 11.7s+
-    * degrading run-over-run. The round-2 measurement that rejected
-    * operator-internal persists predated the narrow-frame layout: a
-    * checkpoint of 8-byte hashes costs almost nothing to build, so the
-    * re-derive tradeoff flips.
+    * The hashed shingle frame feeds every later step (signature build,
+    * candidate-doc fetch or semi-join, both sides of the intersection
+    * join), so it is locally checkpointed ONCE — 16 bytes/doc/shingle of
+    * RDD blocks — and every consumer reads blocks instead of re-deriving
+    * the text scan + shingle distinct. A/B at sf0.1 (warm, checkpoint
+    * build inside the timer): q27 2.49s vs 2.72s re-derive, q29 3.08s vs
+    * 3.70s, and q48 — where this frame's lineage is deepest — 7.7s
+    * stable vs 11.7s+ degrading run-over-run.
+    *
+    * Two paths, one answer (rows, column types and nullability):
+    *
+    *  - Small band frames are capped, paired and verified on the driver.
+    *    The band frame is cut (lazily), and one bounded collect fetches at
+    *    most `SmallBands + 1` (2^17 + 1) band rows (doc_id, b, band_key)
+    *    from the cut. When they fit, doc_id is `LongType` or
+    *    `IntegerType` and no doc_id is null, the driver drops every bucket
+    *    of more than `maxBucketSize` rows, forms the distinct i < j pairs
+    *    of the surviving buckets, fetches the candidate docs' shingle
+    *    rows with one more bounded collect, and counts (i, j, c, n_i,
+    *    n_j) exactly as [[Blocking.overlapOf]] does.
+    *    Those rows go through [[jaccardAtLeast]] as a local relation, so
+    *    the division, threshold and rounding stay Spark's own, and the
+    *    result is a local relation (its consumers never re-run the
+    *    chain). Driver memory is bounded by the same constant: at most
+    *    2^17 band rows, 2^17 distinct candidates and 2^17 shingle rows.
+    *    The fetched band rows and their buckets hold about 240 bytes a
+    *    band row (31 MB at the bound, measured). Near-dup band frames are
+    *    bands × docs rows (2,000 at sf0.01 with 25 candidates), so this
+    *    is the common path; it replaces a chain of about 30 AQE
+    *    stage-jobs with the band cut and two fetches, one job each at
+    *    sf0.01.
+    *  - Anything else (more band rows, candidates or shingle rows than
+    *    the bound, another id type, a null doc_id) runs the distributed
+    *    plan over the same band cut, so its signatures are not computed
+    *    again: [[Blocking.cap]] drops hot buckets as a broadcast
+    *    anti-join, [[Blocking.pairs]] self-joins the rest,
+    *    [[Blocking.overlapOf]] verifies. The rows the driver path fetched
+    *    before it fell back are thrown away.
+    *
+    * The bound is where the driver path stops winning. On synthetic
+    * corpora of 40–60-word docs with a tenth of them in near-dup pairs
+    * (4-core host, `local[4]`), it took 1.3 s against the distributed
+    * plan's 2.2 s at 2^15 band rows and 3.3 s against 4.9 s at 98,304.
+    * Such corpora fetch about 5 candidate shingle rows a doc against 4
+    * band rows, so near 2^17 band rows the verify fetch overflows and
+    * the call falls back, 0.3 s slower than the distributed plan alone;
+    * under a bound of 2^18 that overflow cost 2 s.
+    *
+    * The cut and the fetches carry job descriptions (`Dedup.minhash:
+    * band cut`, `fetch bands |B|<=131072`, then `verify <k> candidates over <d> docs; cap <max>
+    * dropped <h> buckets, <r> band rows`), so the skew guard's drops are
+    * counted in the job that follows them. With no candidate left there
+    * is nothing to verify and no job runs.
     */
   def minhashPairs(
       docs: DataFrame, n: Int = 3, numHashes: Int = 16,
       rowsPerBand: Int = 4, threshold: Double = 0.7,
-      maxBucketSize: Int = NearDupMaxBucket): DataFrame = {
+      maxBucketSize: Int = NearDupMaxBucket): DataFrame =
+    minhashPairs(docs, n, numHashes, rowsPerBand, threshold, maxBucketSize, SmallBands)
+
+  /** [[minhashPairs]] with the driver-path bound as a parameter, so tests
+    * can force either path (a bound of -1 always takes the distributed
+    * plan).
+    */
+  private[graft] def minhashPairs(
+      docs: DataFrame, n: Int, numHashes: Int, rowsPerBand: Int,
+      threshold: Double, maxBucketSize: Int, smallBands: Int): DataFrame = {
     val sh = Ckpt.narrowLazy(shingles(docs, n))
-    jaccardOfCandidates(sh,
-      minhashCandidates(sh, numHashes, rowsPerBand, maxBucketSize), threshold)
+    val bands = bandCut(lshBands(sh, numHashes, rowsPerBand))
+    val local = for {
+      bk <- fetchBands(bands, maxBucketSize, smallBands)
+      cand <- bounded(bk.pairs, smallBands)
+      edges <- verifyOnDriver(sh, cand, bk, maxBucketSize, threshold, smallBands)
+    } yield edges
+    releasedOr(local, sh, bands)(jaccardOfCandidates(sh,
+      candidatesOfBands(bands, maxBucketSize, cut = false), threshold))
+  }
+
+  /** The lazy cut of a band frame that both paths read (the driver
+    * path's fetch, or the distributed plan's cap and self-join), under
+    * its own job description: the signature shuffle runs at the cut.
+    */
+  private def bandCut(bands: DataFrame): DataFrame =
+    Labelled(bands, "Dedup.minhash: band cut")(Ckpt.narrowLazy(bands))
+
+  /** Largest band frame (rows) that [[minhashPairs]] and the incremental
+    * renderings close on the driver; the same bound caps each of that
+    * path's other fetches and its distinct candidates.
+    */
+  private val SmallBands = 1 << 17
+
+  /** A band frame fetched and capped on the driver: the surviving
+    * buckets' distinct member ids (Long-cast, ascending), the skew
+    * guard's counters, and the doc_id field (type and nullability).
+    */
+  private final case class DriverBands(
+      buckets: Seq[Array[Long]], overCap: Int, droppedRows: Long, id: StructField) {
+
+    /** A Long-cast id back in the id column's type. */
+    def asId(x: Long): Any = if (id.dataType == IntegerType) x.toInt else x
+
+    /** (i, j), i < j, for every two docs sharing a bucket. */
+    def pairs: Iterator[(Long, Long)] = buckets.iterator.flatMap(m =>
+      m.indices.iterator.flatMap(x => (x + 1 until m.length).iterator.map(y => (m(x), m(y)))))
+
+    /** (least, greatest) for every delta doc and other doc sharing a
+      * bucket — [[deltaEdgesOf]]'s candidate join.
+      */
+    def deltaPairs(delta: Set[Long]): Iterator[(Long, Long)] = buckets.iterator.flatMap(m =>
+      m.iterator.filter(delta).flatMap(d =>
+        m.iterator.filter(_ != d).map(a => (math.min(a, d), math.max(a, d)))))
+
+    /** The distinct `stored` pairs whose ends still share a surviving
+      * bucket — [[unionEdgesOf]]'s re-validation join.
+      */
+    def revalidated(stored: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+      val ends = stored.flatMap(p => Seq(p._1, p._2)).toSet
+      val at = scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.BitSet]
+      for ((m, k) <- buckets.zipWithIndex; d <- m if ends(d))
+        at.getOrElseUpdate(d, scala.collection.mutable.BitSet.empty) += k
+      stored.distinct.filter { case (i, j) =>
+        at.get(i).exists(bi => at.get(j).exists(bj => (bi & bj).nonEmpty))
+      }
+    }
+  }
+
+  private def isIdType(t: DataType): Boolean = t == LongType || t == IntegerType
+
+  /** The driver path's first step: one bounded collect of the band
+    * frame, then [[Blocking.cap]]'s rule on the driver (a bucket of more
+    * than `maxBucketSize` rows is dropped; `maxBucketSize <= 0` keeps
+    * all). None when the rows do not fit under `small`, doc_id is not
+    * Long/Int, or a doc_id is null. A row with a null b or band_key
+    * joins nothing and is never capped on either path, so it is skipped.
+    */
+  private def fetchBands(bands: DataFrame, maxBucketSize: Int,
+      small: Int): Option[DriverBands] = {
+    val id = bands.schema("doc_id")
+    if (!isIdType(id.dataType)) None
+    else {
+      val rows = Labelled(bands, s"Dedup.minhash: fetch bands |B|<=$small")(
+        bands.select(col("doc_id").cast("long"), col("b").cast("long"), col("band_key"))
+          .limit(small + 1).collect())
+      if (rows.length > small || rows.exists(_.isNullAt(0))) None
+      else {
+        val buckets = rows.filter(r => !r.isNullAt(1) && !r.isNullAt(2))
+          .groupMap(r => (r.getLong(1), r.getString(2)))(_.getLong(0)).values.toSeq
+        val (hot, kept) = buckets.partition(m => maxBucketSize > 0 && m.length > maxBucketSize)
+        Some(DriverBands(kept.map(_.distinct.sorted), hot.size, hot.map(_.length.toLong).sum, id))
+      }
+    }
+  }
+
+  /** The id columns `cols` of `df` (Long-cast) with one bounded collect;
+    * None when more than `small` rows come back, a value is null or a
+    * column is not Long/Int.
+    */
+  private def fetchIds(df: DataFrame, cols: Seq[String], small: Int,
+      what: String): Option[Array[Row]] =
+    if (!cols.forall(c => isIdType(df.schema(c).dataType))) None
+    else {
+      val rows = Labelled(df, s"Dedup.minhash: fetch $what <=$small")(
+        df.select(cols.map(c => col(c).cast("long")): _*).limit(small + 1).collect())
+      Some(rows).filter(rs => rs.length <= small && !rs.exists(r => cols.indices.exists(r.isNullAt)))
+    }
+
+  /** The distinct pairs of `it`, sorted; None once more than `small`. */
+  private def bounded(it: Iterator[(Long, Long)], small: Int): Option[Array[(Long, Long)]] = {
+    val out = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    while (it.hasNext && out.size <= small) out += it.next()
+    if (out.size <= small) Some(out.toArray.sorted) else None
+  }
+
+  /** The driver path's verify step: one bounded fetch of the candidate
+    * docs' rows of `sh`, then per candidate c = matching (gh) row pairs,
+    * n = each doc's row count — [[Blocking.overlapOf]]'s counts, pairs
+    * with c = 0 absent — as a local relation through [[jaccardAtLeast]].
+    * None when the rows do not fit under `small`. The fetch's job
+    * description carries the candidate and skew-guard counters.
+    */
+  private def verifyOnDriver(sh: DataFrame, cand: Array[(Long, Long)],
+      bk: DriverBands, maxBucketSize: Int, threshold: Double,
+      small: Int): Option[DataFrame] = {
+    val docs = cand.flatMap(p => Array(p._1, p._2)).distinct
+    // every banded doc has a shingle row, so more docs than `small`
+    // cannot fit: fall back without the fetch
+    val fetched =
+      if (docs.isEmpty) Some(Array.empty[Row])
+      else if (docs.length > small) None
+      else Some(Labelled(sh, s"Dedup.minhash: verify ${cand.length} candidates over " +
+          s"${docs.length} docs; cap $maxBucketSize dropped ${bk.overCap} buckets, " +
+          s"${bk.droppedRows} band rows")(
+        sh.filter(col("doc_id").cast("long").isInCollection(docs.toSeq))
+          .select(col("doc_id").cast("long"), col("gh").cast("long"))
+          .limit(small + 1).collect())).filter(_.length <= small)
+    fetched.map { rows =>
+      val size = rows.groupMapReduce(_.getLong(0))(_ => 1L)(_ + _)
+      val sets = rows.filter(!_.isNullAt(1))
+        .groupMap(_.getLong(0))(_.getLong(1)).view.mapValues(_.sorted).toMap
+      val none = Array.empty[Long]
+      val counted = cand.iterator.flatMap { case (i, j) =>
+        val c = sharedRows(sets.getOrElse(i, none), sets.getOrElse(j, none))
+        if (c > 0) Some(Row(bk.asId(i), bk.asId(j), c, size(i), size(j))) else None
+      }.toSeq
+      val t = bk.id.dataType
+      jaccardAtLeast(sh.sparkSession.createDataFrame(counted.asJava, StructType(Seq(
+        StructField("i", t, bk.id.nullable), StructField("j", t, bk.id.nullable),
+        StructField("c", LongType, nullable = false),
+        StructField("n_i", LongType, nullable = false),
+        StructField("n_j", LongType, nullable = false)))), threshold)
+    }
+  }
+
+  /** Matching row pairs of two ascending gh arrays (an equi-join count:
+    * a value held r times on one side and s times on the other adds r·s).
+    */
+  private def sharedRows(a: Array[Long], b: Array[Long]): Long = {
+    var (x, y, c) = (0, 0, 0L)
+    while (x < a.length && y < b.length) {
+      if (a(x) < b(y)) x += 1
+      else if (a(x) > b(y)) y += 1
+      else {
+        val v = a(x)
+        val x0 = x
+        val y0 = y
+        while (x < a.length && a(x) == v) x += 1
+        while (y < b.length && b(y) == v) y += 1
+        c += (x - x0).toLong * (y - y0)
+      }
+    }
+    c
+  }
+
+  /** The driver path's frame when it produced one (releasing the
+    * shingle and band cuts: nothing reads them again), else
+    * `distributed`, which reads both cuts.
+    */
+  private def releasedOr(local: Option[DataFrame], sh: DataFrame, bands: DataFrame)(
+      distributed: => DataFrame): DataFrame = local match {
+    case Some(df) => Ckpt.release(sh); Ckpt.release(bands); df
+    case None => distributed
   }
 
   /** The engine's ONE canonical near-dup edge definition — every surface
@@ -603,10 +828,19 @@ object Dedup {
     * apart between them. The [[NearDupMaxBucket]] guard is ON here: this
     * is the path a 100 TB curation run takes, so it runs with the
     * bucket cap a 100 TB corpus needs (and the oracle mirrors).
+    *
+    * It takes [[minhashPairs]]' two paths: a band frame of at most 2^17
+    * rows with Long/Int ids and no null doc_id is capped, paired and
+    * verified on the driver (two bounded fetches, a local-relation
+    * result); anything else runs the distributed plan.
     */
-  def nearDupEdges(docs: DataFrame): DataFrame =
-    minhashPairs(docs, n = 3, numHashes = 16, rowsPerBand = 4, threshold = 0.7,
-      maxBucketSize = NearDupMaxBucket)
+  def nearDupEdges(docs: DataFrame): DataFrame = nearDupEdges(docs, SmallBands)
+
+  /** [[nearDupEdges]] with the driver-path bound as a parameter (-1
+    * forces the distributed plan).
+    */
+  private[graft] def nearDupEdges(docs: DataFrame, smallBands: Int): DataFrame =
+    minhashPairs(docs, 3, 16, 4, 0.7, NearDupMaxBucket, smallBands)
 
   /** Incremental near-dup edges: the ingest-time rendering of
     * [[nearDupEdges]]. Given the existing `corpus` and a `delta` of new
@@ -627,29 +861,59 @@ object Dedup {
     * plus bucket-local joins. Same skew cap, threshold and verification
     * as the canonical path, so verdicts never drift from what a
     * from-scratch run would say.
+    *
+    * Same two paths as [[minhashPairs]]: the driver path also fetches the
+    * delta's ids (under the same 2^17 bound, none null) and pairs each
+    * delta doc with every other member of its surviving buckets.
     */
   def incrementalNearDupEdges(
       corpus: DataFrame, delta: DataFrame, n: Int = 3, numHashes: Int = 16,
       rowsPerBand: Int = 4, threshold: Double = 0.7,
-      maxBucketSize: Int = NearDupMaxBucket): DataFrame = {
+      maxBucketSize: Int = NearDupMaxBucket): DataFrame =
+    incrementalNearDupEdges(corpus, delta, n, numHashes, rowsPerBand, threshold,
+      maxBucketSize, SmallBands)
+
+  /** [[incrementalNearDupEdges]] with the driver-path bound as a
+    * parameter (-1 forces the distributed plan).
+    */
+  private[graft] def incrementalNearDupEdges(
+      corpus: DataFrame, delta: DataFrame, n: Int, numHashes: Int,
+      rowsPerBand: Int, threshold: Double, maxBucketSize: Int,
+      smallBands: Int): DataFrame = {
     // per-doc derivations, so union-of-shingles == shingles-of-union
     val shAll = Ckpt.narrowLazy(shingles(corpus, n).union(shingles(delta, n)))
-    incrementalEdgesOf(shAll,
-      Ckpt.narrowLazy(lshBands(shAll, numHashes, rowsPerBand)),
-      delta.select("doc_id"), threshold, maxBucketSize)
+    incrementalEdgesOf(shAll, bandCut(lshBands(shAll, numHashes, rowsPerBand)),
+      delta.select("doc_id"), threshold, maxBucketSize, smallBands)
   }
 
   /** The delta-side candidate join + verification shared by the
     * recompute-in-query and stored-index renderings of incremental
-    * near-dup: cap the combined band frame, restrict one join side to
-    * the delta's bands, verify exact Jaccard over the combined shingles.
+    * near-dup: cap the combined band frame (cut), restrict one join
+    * side to the delta's bands, verify exact Jaccard over the combined
+    * shingles — on the driver when the frames fit, else distributed.
     */
   private def incrementalEdgesOf(
       shAll: DataFrame, bandsAll: DataFrame, deltaIds: DataFrame,
-      threshold: Double, maxBucketSize: Int,
-      ckptPruned: Boolean = false): DataFrame =
-    deltaEdgesOf(shAll, Blocking.cap(bandsAll, BandKey, maxBucketSize), deltaIds,
-      threshold, ckptPruned)
+      threshold: Double, maxBucketSize: Int, smallBands: Int,
+      ckptPruned: Boolean = false): DataFrame = {
+    val local = deltaOnDriver(shAll, bandsAll, deltaIds, threshold, maxBucketSize,
+      smallBands).map(_._2)
+    releasedOr(local, shAll, bandsAll)(deltaEdgesOf(shAll,
+      Blocking.cap(bandsAll, BandKey, maxBucketSize), deltaIds,
+      threshold, ckptPruned))
+  }
+
+  /** The driver path's delta side: the capped buckets and the verified
+    * (i, j, jaccard) pairs that touch a `deltaIds` doc.
+    */
+  private def deltaOnDriver(shAll: DataFrame, bandsAll: DataFrame,
+      deltaIds: DataFrame, threshold: Double, maxBucketSize: Int,
+      smallBands: Int): Option[(DriverBands, DataFrame)] = for {
+    bk <- fetchBands(bandsAll, maxBucketSize, smallBands)
+    delta <- fetchIds(deltaIds, Seq("doc_id"), smallBands, "delta ids")
+    cand <- bounded(bk.deltaPairs(delta.map(_.getLong(0)).toSet), smallBands)
+    edges <- verifyOnDriver(shAll, cand, bk, maxBucketSize, threshold, smallBands)
+  } yield (bk, edges)
 
   private def deltaEdgesOf(
       shAll: DataFrame, cappedBands: DataFrame, deltaIds: DataFrame,
@@ -689,14 +953,31 @@ object Dedup {
     * Contract: `corpusEdges` must be `nearDupEdges(corpus)` (same
     * parameters); re-validation cost is |edges| × bands-per-doc equi-join
     * rows — edge-proportional, never corpus-quadratic.
+    *
+    * Same two paths as [[minhashPairs]]. The driver path also fetches the
+    * delta's ids and the stored edges under the same 2^17 bound (ids
+    * Long/Int and none null; the stored ends of the band frame's id
+    * type), keeps each stored pair that still shares a surviving bucket,
+    * and returns those rows followed by the verified delta-touching
+    * pairs as one local relation with the distributed union's schema.
     */
   def revalidatedUnionEdges(
       corpus: DataFrame, delta: DataFrame, corpusEdges: DataFrame,
       n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4,
-      threshold: Double = 0.7, maxBucketSize: Int = NearDupMaxBucket): DataFrame = {
+      threshold: Double = 0.7, maxBucketSize: Int = NearDupMaxBucket): DataFrame =
+    revalidatedUnionEdges(corpus, delta, corpusEdges, n, numHashes, rowsPerBand,
+      threshold, maxBucketSize, SmallBands)
+
+  /** [[revalidatedUnionEdges]] with the driver-path bound as a parameter
+    * (-1 forces the distributed plan).
+    */
+  private[graft] def revalidatedUnionEdges(
+      corpus: DataFrame, delta: DataFrame, corpusEdges: DataFrame,
+      n: Int, numHashes: Int, rowsPerBand: Int, threshold: Double,
+      maxBucketSize: Int, smallBands: Int): DataFrame = {
     val shAll = Ckpt.narrowLazy(shingles(corpus, n).union(shingles(delta, n)))
-    unionEdgesOf(shAll, Ckpt.narrowLazy(lshBands(shAll, numHashes, rowsPerBand)),
-      delta.select("doc_id"), corpusEdges, threshold, maxBucketSize)
+    unionEdgesOf(shAll, bandCut(lshBands(shAll, numHashes, rowsPerBand)),
+      delta.select("doc_id"), corpusEdges, threshold, maxBucketSize, smallBands)
   }
 
   /** [[revalidatedUnionEdges]] over a stored [[DedupIndex]] — the corpus
@@ -704,29 +985,57 @@ object Dedup {
     */
   def revalidatedUnionEdgesIndexed(
       index: DedupIndex, delta: DataFrame, corpusEdges: DataFrame,
-      threshold: Double = 0.7, maxBucketSize: Int = NearDupMaxBucket): DataFrame = {
+      threshold: Double = 0.7, maxBucketSize: Int = NearDupMaxBucket): DataFrame =
+    revalidatedUnionEdgesIndexed(index, delta, corpusEdges, threshold, maxBucketSize,
+      SmallBands)
+
+  /** [[revalidatedUnionEdgesIndexed]] with the driver-path bound as a
+    * parameter (-1 forces the distributed plan).
+    */
+  private[graft] def revalidatedUnionEdgesIndexed(
+      index: DedupIndex, delta: DataFrame, corpusEdges: DataFrame,
+      threshold: Double, maxBucketSize: Int, smallBands: Int): DataFrame = {
     val (shAll, bandsAll) = indexedUnionFrames(index, delta)
     unionEdgesOf(shAll, bandsAll,
-      delta.select("doc_id"), corpusEdges, threshold, maxBucketSize,
+      delta.select("doc_id"), corpusEdges, threshold, maxBucketSize, smallBands,
       ckptPruned = true)
   }
 
   private def unionEdgesOf(
       shAll: DataFrame, bandsAll: DataFrame, deltaIds: DataFrame,
       corpusEdges: DataFrame, threshold: Double, maxBucketSize: Int,
-      ckptPruned: Boolean = false): DataFrame = {
-    val bands = Blocking.cap(bandsAll, BandKey, maxBucketSize)
-    // stored pairs that still share a surviving bucket (class doc above)
-    val revalidated = corpusEdges.select(col("i"), col("j"))
-      .join(bands.as("x"), col("i") === col("x.doc_id"))
-      .join(bands.as("y"),
-        col("j") === col("y.doc_id") && col("x.b") === col("y.b") &&
-          col("x.band_key") === col("y.band_key"))
-      .select(col("i"), col("j"))
-      .distinct()
-    revalidated.union(
-      deltaEdgesOf(shAll, bands, deltaIds, threshold, ckptPruned)
-        .select(col("i"), col("j")))
+      smallBands: Int, ckptPruned: Boolean = false): DataFrame = {
+    val idType = bandsAll.schema("doc_id").dataType
+    val local = for {
+      stored <- Some(corpusEdges)
+        .filter(e => Seq("i", "j").forall(c => e.schema(c).dataType == idType))
+        .flatMap(fetchIds(_, Seq("i", "j"), smallBands, "stored edges"))
+      (bk, fresh) <- deltaOnDriver(shAll, bandsAll, deltaIds, threshold, maxBucketSize,
+        smallBands)
+    } yield {
+      val kept = bk.revalidated(stored.toSeq.map(r => (r.getLong(0), r.getLong(1))))
+        .map { case (i, j) => Row(bk.asId(i), bk.asId(j)) }
+      // a union column is nullable when either side's is
+      def field(c: String) = StructField(c, bk.id.dataType,
+        corpusEdges.schema(c).nullable || bk.id.nullable)
+      shAll.sparkSession.createDataFrame(
+        (kept ++ fresh.select("i", "j").collect()).asJava,
+        StructType(Seq(field("i"), field("j"))))
+    }
+    releasedOr(local, shAll, bandsAll) {
+      val bands = Blocking.cap(bandsAll, BandKey, maxBucketSize)
+      // stored pairs that still share a surviving bucket (class doc above)
+      val revalidated = corpusEdges.select(col("i"), col("j"))
+        .join(bands.as("x"), col("i") === col("x.doc_id"))
+        .join(bands.as("y"),
+          col("j") === col("y.doc_id") && col("x.b") === col("y.b") &&
+            col("x.band_key") === col("y.band_key"))
+        .select(col("i"), col("j"))
+        .distinct()
+      revalidated.union(
+        deltaEdgesOf(shAll, bands, deltaIds, threshold, ckptPruned)
+          .select(col("i"), col("j")))
+    }
   }
 
   /** A persisted near-dup index: the hashed-shingle and band frames the
@@ -816,7 +1125,7 @@ object Dedup {
     val (shAll, bandsAll) = indexedUnionFrames(index, delta)
     // shAll is a LAZY parquet union here — verify on the pruned ckpt
     incrementalEdgesOf(shAll, bandsAll,
-      delta.select("doc_id"), threshold, maxBucketSize, ckptPruned = true)
+      delta.select("doc_id"), threshold, maxBucketSize, SmallBands, ckptPruned = true)
   }
 
   /** (index ∪ delta) shingle and band frames for the incremental
@@ -831,15 +1140,15 @@ object Dedup {
     * checkpoints THAT (`jaccardOfCandidates(ckptPruned = true)`), so
     * the only corpus-proportional work left is single narrow parquet
     * scans. The band union is checkpointed as before — it is two
-    * orders of magnitude narrower (bands/doc rows, no gh sets) and
-    * feeds the skew-cap agg plus both candidate-join sides.
+    * orders of magnitude narrower (bands/doc rows, no gh sets) and feeds
+    * the driver path's band fetch, or the skew-cap agg plus both
+    * candidate-join sides.
     */
   private def indexedUnionFrames(
       index: DedupIndex, delta: DataFrame): (DataFrame, DataFrame) = {
     val shD = Ckpt.narrowLazy(shingles(delta, index.n))
     (index.shingles.union(shD),
-      Ckpt.narrowLazy(index.bands.union(
-        lshBands(shD, index.numHashes, index.rowsPerBand))))
+      bandCut(index.bands.union(lshBands(shD, index.numHashes, index.rowsPerBand))))
   }
 
   /** Estimated-Jaccard near-dup pairs: the pure-sketch tier above

@@ -414,4 +414,75 @@ class PlanSpec extends AnyFunSuite {
         s"$name executed plan has $nodes nodes — the multi-consumer cut regressed")
     }
   }
+
+  test("forced-distributed near-dup paths keep the quadratic-join and skew-guard gates") {
+    // the driver path turns q27/q62's frames into local relations, so the
+    // gates above would pass on them vacuously; the distributed plan that
+    // larger inputs take is gated here with the driver path forced off
+    // (the hot-key broadcast guard is gated above through
+    // minhashCandidates, which the driver path does not touch)
+    import org.apache.spark.sql.functions.col
+    import graft.operators.Dedup
+    val Forced = -1
+    def noQuadratic(label: String, plan: String): Unit =
+      assert(!plan.contains("BroadcastNestedLoopJoin BuildRight, Inner") &&
+        !plan.contains("BroadcastNestedLoopJoin BuildLeft, Inner") &&
+        !plan.contains("CartesianProduct"),
+        s"$label plans a quadratic join:\n${plan.take(2000)}")
+    def noShuffledAnti(label: String, plan: String): Unit = {
+      val bad = plan.linesIterator.filter(l =>
+        l.contains("LeftAnti") &&
+          (l.contains("SortMergeJoin") || l.contains("ShuffledHashJoin"))).toSeq
+      assert(bad.isEmpty,
+        s"$label skew guard shuffles instead of broadcasting: ${bad.mkString("; ")}")
+    }
+    val docs = graft.sources.Tables.load(spark, TestSpark.Sf0001, "documents")
+    val pairs = executedPlan(
+      Dedup.minhashPairs(docs, 3, 16, 4, 0.7, Dedup.NearDupMaxBucket, Forced))
+    noQuadratic("minhashPairs", pairs)
+    noShuffledAnti("minhashPairs", pairs)
+    val nf = 400L
+    noQuadratic("incrementalNearDupEdges", executedPlan(Dedup.incrementalNearDupEdges(
+      docs.filter(col("doc_id") < nf), docs.filter(col("doc_id") >= nf),
+      3, 16, 4, 0.7, Dedup.NearDupMaxBucket, Forced)))
+  }
+
+  test("Spread reads planned splits: no job for a derived pipeline, same decisions") {
+    import org.apache.spark.sql.functions.{col, md5, min}
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    import graft.operators.Spread
+    val p = spark.sparkContext.defaultParallelism
+    def spreadTo(df: DataFrame): Option[Int] =
+      df.queryExecution.analyzed.collectFirst { case r: Repartition => r.numPartitions }
+    // a one-split parquet scan, alone and semi-joined against keeper ids
+    // (the corpusKept shape): both spread, and the semi-join runs nothing
+    val docs = graft.sources.Tables.load(spark, TestSpark.Sf0001, "documents")
+      .select("doc_id", "text")
+    val keepers = docs.groupBy(md5(col("text"))).agg(min("doc_id").as("doc_id"))
+    val kept = docs.join(keepers, Seq("doc_id"), "left_semi")
+    val (scan, scanJobs) = TestSpark.jobsDuring(Spread(docs))
+    val (semi, semiJobs) = TestSpark.jobsDuring(Spread(kept))
+    assert(scanJobs.isEmpty && semiJobs.isEmpty, s"scan $scanJobs, semi-join $semiJobs")
+    assert(spreadTo(scan) == Some(p) && spreadTo(semi) == Some(p))
+    // a scan of at least p splits (one file cut into 4 KB splits) comes
+    // back unchanged, alone or derived; so does a derived pipeline over
+    // a range of p + 2 slices
+    val dir = java.nio.file.Files.createTempDirectory("graft_spread_").toString
+    spark.range(0, 20000, 1, 1).select(org.apache.spark.sql.functions.rand(7).as("id"))
+      .write.mode("overwrite").parquet(dir)
+    val key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(key, "4096")
+    try {
+      val wide = spark.read.parquet(dir)
+      assert(wide.rdd.getNumPartitions >= p, "the scan should plan >= p splits")
+      val wideKept = wide.join(wide.limit(10), Seq("id"), "left_semi")
+      val range = spark.range(0, 1000, 1, p + 2)
+      val rangeKept = range.join(range.groupBy((col("id") % 7).as("id")).count(), Seq("id"), "left_semi")
+      val (out, wideJobs) = TestSpark.jobsDuring(
+        Seq(Spread(wide), Spread(wideKept), Spread(rangeKept)))
+      assert(wideJobs.isEmpty, wideJobs)
+      assert(out.zip(Seq(wide, wideKept, rangeKept)).forall { case (a, b) => a eq b },
+        "a wide input must come back unchanged")
+    } finally spark.conf.unset(key)
+  }
 }
