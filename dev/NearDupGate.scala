@@ -6,8 +6,9 @@ import scala.util.Random
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.{coalesce, lit, md5}
 
-import graft.operators.{Ckpt, Dedup}
+import graft.operators.{Ckpt, Curation, Dedup, TextAnalysis}
 
 /** Times `Dedup.nearDupEdges` on both sides of its driver-path bound:
   * the gated call (bound `GATE`, default 131072) against the forced
@@ -31,6 +32,12 @@ import graft.operators.{Ckpt, Dedup}
   * call (wall seconds, jobs, edges, whether the result is a local
   * relation, i.e. the driver path completed) and one `HEAP` line per
   * size.
+  *
+  * With `gates` as the first argument it times `Curation`'s gates
+  * instead: `exactKeepers(docs).count()` with the gates' driver-path
+  * bound `GATE` against the forced distributed cuts (bound -1), on the
+  * same corpora, and each `HEAP` line reports the driver heap that the
+  * gates fetch of that size holds.
   */
 object NearDupGate {
   def textOf(id: Long): String = {
@@ -45,11 +52,19 @@ object NearDupGate {
   def main(args: Array[String]): Unit = {
     val spark = Graft.session(master = "local[4]", shufflePartitions = 4, appName = "ndgate")
     import spark.implicits._
-    val (root, reps, sizes) = (args(0), args(1).toInt, args.drop(2).map(_.toLong))
+    val gates = args(0) == "gates"
+    val rest = if (gates) args.drop(1) else args
+    val (root, reps, sizes) = (rest(0), rest(1).toInt, rest.drop(2).map(_.toLong))
     val gate = sys.env.getOrElse("GATE", "131072").toInt
     val jobs = new AtomicInteger()
+    val gateCuts = new AtomicInteger() // jobs of the distributed gates' cuts
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        val d = Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        if (d.exists(x => x.startsWith("Curation.gates:") && x.endsWith(" cut")))
+          gateCuts.incrementAndGet()
+      }
     })
     for (n <- sizes) {
       val dir = s"$root/docs_$n"
@@ -61,26 +76,43 @@ object NearDupGate {
       for (rep <- 0 to reps; (tag, bound) <- if (rep % 2 == 0) paths else paths.reverse) {
         Ckpt.releaseGraftStorage(spark); System.gc(); Thread.sleep(500)
         jobs.set(0)
+        gateCuts.set(0)
         val t0 = System.nanoTime
-        val out = Dedup.nearDupEdges(docs, bound)
-        val local = out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
-        val edges = out.collect().length
+        val (rows, edgesLocal) =
+          if (gates) (Curation.exactKeepers(docs, 0.15, bound).count(), true)
+          else {
+            val out = Dedup.nearDupEdges(docs, bound)
+            (out.collect().length.toLong, out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+          }
         val s = (System.nanoTime - t0) / 1e9
         Thread.sleep(300) // let the listener see the last job
+        // for the gates, local = the driver path completed (no gates cut ran)
+        val local = if (gates) gateCuts.get == 0 else edgesLocal
         println(f"RESULT n=$n bandRows=${n * 4} path=$tag rep=$rep wall=$s%.3f " +
-          s"jobs=${jobs.get} edges=$edges local=$local gate=$bound")
+          s"jobs=${jobs.get} ${if (gates) "keepers" else "edges"}=$rows local=$local gate=$bound")
       }
-      val bands = Dedup.lshBands(Ckpt.narrowLazy(Dedup.shingles(docs, 3)))
       val mx = java.lang.management.ManagementFactory.getMemoryMXBean
       def used() = { for (_ <- 1 to 3) { System.gc(); Thread.sleep(300) }; mx.getHeapMemoryUsage.getUsed }
-      bands.limit(1).collect()
-      val before = used()
-      val fetched = bands.select($"doc_id".cast("long"), $"b".cast("long"), $"band_key")
-        .limit(gate + 1).collect()
-      val buckets = fetched.groupMap(r => (r.getLong(1), r.getString(2)))(_.getLong(0))
-      val after = used()
-      println(f"HEAP n=$n rows=${fetched.length} buckets=${buckets.size} " +
-        f"retainedMB=${(after - before) / 1e6}%.1f")
+      if (gates) {
+        // the gates fetch's columns: (doc_id, quality, passed, fp, day)
+        val scored = TextAnalysis.qualityScores(docs.select($"doc_id", $"text",
+          md5($"text").as("fp"), lit(0).as("day")), "fp", "day")
+        val before = used()
+        val fetched = scored.select($"doc_id".cast("long"), $"quality",
+          coalesce($"quality" >= 0.15, lit(false)), $"fp", $"day").limit(gate + 1).collect()
+        val after = used()
+        println(f"HEAP n=$n rows=${fetched.length} retainedMB=${(after - before) / 1e6}%.1f")
+      } else {
+        val bands = Dedup.lshBands(Ckpt.narrowLazy(Dedup.shingles(docs, 3)))
+        bands.limit(1).collect()
+        val before = used()
+        val fetched = bands.select($"doc_id".cast("long"), $"b".cast("long"), $"band_key")
+          .limit(gate + 1).collect()
+        val buckets = fetched.groupMap(r => (r.getLong(1), r.getString(2)))(_.getLong(0))
+        val after = used()
+        println(f"HEAP n=$n rows=${fetched.length} buckets=${buckets.size} " +
+          f"retainedMB=${(after - before) / 1e6}%.1f")
+      }
       Ckpt.releaseGraftStorage(spark)
     }
     spark.stop()

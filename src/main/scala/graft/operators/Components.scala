@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an undirected edge list — the transitive-
@@ -17,8 +17,8 @@ import org.apache.spark.storage.StorageLevel
   *
   *  - Small edge lists close on the driver. After the edge cut, one
   *    bounded collect fetches at most `SmallEdges + 1` (2^18 + 1) edges
-  *    (one job for a local-relation edge list, which is cut as one
-  *    partition).
+  *    (a local-relation edge list is read as it is, with no cut and no
+  *    job).
   *    When the list fits under `SmallEdges`, both ids are `LongType` or
   *    both `IntegerType`, and no endpoint is null, a breadth-first sweep
   *    over the nodes in ascending id order labels every component with
@@ -81,24 +81,15 @@ object Components {
     // LSH verification pipeline feeding q47/q48) runs once per read.
     // Lazy: the producer's shuffle stages run at the cut and its last
     // stage inside the fetch. A local relation (a driver-built edge
-    // list, such as Dedup's driver-verified near-dup edges) is cut as one
-    // partition: its rows are on the driver already, and the bounded
-    // fetch is then one job instead of a limit scan that widens over the
-    // partitions in rounds (three jobs for q47's 25 edges).
+    // list, such as Dedup's driver-verified near-dup edges) is read as it
+    // is: its rows are on the driver already, so neither a cut nor the
+    // fetch runs a job.
     val local = edges.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
-    val e = Labelled(edges, s"$Op: edge cut")(
-      Ckpt.narrowLazy(if (local) edges.coalesce(1) else edges))
+    val e = if (local) edges else Labelled(edges, s"$Op: edge cut")(Ckpt.narrowLazy(edges))
     val idType = e.schema("i").dataType
     val small =
-      if (idType != e.schema("j").dataType || (idType != LongType && idType != IntegerType))
-        None
-      else {
-        val rows = Labelled(e, s"$Op: fetch |E|<=$smallEdges")(
-          e.select(col("i").cast("long"), col("j").cast("long"))
-            .limit(smallEdges + 1).collect())
-        Some(rows).filter(rs => rs.length <= smallEdges &&
-          !rs.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-      }
+      if (idType != e.schema("j").dataType) None
+      else Labelled.fetch(e, s"$Op: fetch |E|<=$smallEdges", smallEdges, Seq("i", "j"))
     small match {
       case Some(rows) =>
         Ckpt.release(e)

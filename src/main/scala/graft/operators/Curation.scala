@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** End-to-end corpus curation — the pass an LLM-training pipeline runs
   * over raw documents, chaining the engine's tiers into one verdict per
@@ -20,43 +23,128 @@ import org.apache.spark.sql.functions._
   * `ref_id` names the document that superseded a dropped one (its exact
   * keeper or its cluster representative; NULL for `low_quality`/`kept`).
   *
-  * Scale shape: stages 1–2 are one scan + one fingerprint shuffle; stage
-  * 3 runs only over quality-passing exact-keepers (the corpus after the
-  * cheap gates), so the expensive near-dup machinery sees the smallest
-  * possible input — the ordering a 100 TB pass depends on.
+  * Scale shape: stages 1–2 are one scan + one fingerprint shuffle (or,
+  * for at most 2^13 docs, one scan projection fetched with a bounded
+  * collect and closed on the driver); stage 3 runs only over
+  * quality-passing exact-keepers (the corpus after the cheap gates), so
+  * the expensive near-dup machinery sees the smallest possible input —
+  * the ordering a 100 TB pass depends on.
   */
 object Curation {
 
-  /** The cheap gate stages (1–2) shared by [[curate]] and
-    * [[curateIncremental]]: quality scores, quality-passed fingerprints,
-    * exact-keeper tags. Wide rows never recur: document text appears
-    * only in per-branch pruned scans (Spark has no cross-branch subtree
-    * reuse, so "used twice" means a re-scan with column pruning, never a
-    * re-shuffle of text). The NARROW shared frames are checkpointed:
-    * (doc_id, quality) ~16 B/row is read by the gate AND the verdict
-    * join; (doc_id, fp) is read by the keeper aggregation, the per-doc
-    * tag join and the keeper semi-join.
+  /** Largest input (docs, both days) whose gates close on the driver.
+    * Set with `dev/NearDupGate.scala gates` (synthetic 40–60-word docs,
+    * 4-core host, `local[4]`, medians of 5 alternating reps):
+    * `exactKeepers` took 0.72 s against the distributed cuts' 1.04 s at
+    * 4,096 docs and 0.90 vs 1.35 s at 8,192, tied at 16,384 (0.87 vs
+    * 0.89 s) and lost at 32,768 (1.50 vs 1.38 s). An input above the
+    * bound pays for the fetch that overflows, about 0.3 s (16,384 docs:
+    * 1.23 vs 0.86 s; 131,072: 2.86 vs 2.48 s). The fetch holds about 200
+    * bytes a doc on the driver (1.6 MB at the bound).
     */
-  private case class Gates(
-      quality: DataFrame, exactTag: DataFrame, keeperIds: DataFrame)
+  private val SmallDocs = 1 << 13
 
-  private def gates(docs: DataFrame, minQuality: Double): Gates = {
-    val base = docs.select(col("doc_id"), col("text"))
-    // LAZY cuts (r15, guide §1.5): the shuffle stages below each cut
-    // run at the cut, and only its last stage waits — blocks persist
-    // when the first consumer computes them, the same multi-consumer
-    // sharing as the eager form without its two count() jobs, and the
-    // gate chain's last stages run inside the near-dup tier's first
-    // action
-    val quality = Ckpt.narrowLazy(
+  /** The gate stages (1–2) shared by every entry point: (doc_id, quality)
+    * for every doc, (doc_id, exact_keep) for every quality-passing doc
+    * with a fingerprint, and the keeper ids; `kept` maps each keeper to
+    * its day when the gates closed on the driver (the three frames are
+    * then local relations).
+    */
+  private final case class Gates(quality: DataFrame, exactTag: DataFrame,
+      keeperIds: DataFrame, kept: Option[Map[Long, Int]]) {
+
+    /** The rows of `docs` whose doc is a keeper (a semi-join against
+      * `keeperIds`, broadcast when that is a local relation).
+      */
+    def keepers(docs: DataFrame): DataFrame = docs.join(keeperIds, Seq("doc_id"), "left_semi")
+
+    /** The ids of `day`'s keepers in `docs` (an [[ofDays]] frame): a
+      * local relation when the gates closed on the driver.
+      */
+    def keeperIdsOf(docs: DataFrame, day: Int): DataFrame = kept match {
+      case Some(k) => local(keeperIds, keeperIds.schema, k.collect { case (id, `day`) => Seq(id) })
+      case None => keepers(docs.filter(col("day") === day).select("doc_id"))
+    }
+  }
+
+  /** (doc_id, text, day) over the days' docs, day = position in `days`. */
+  private def ofDays(days: DataFrame*): DataFrame = days.zipWithIndex.map { case (d, k) =>
+    d.select(col("doc_id"), col("text"), lit(k).as("day"))
+  }.reduce(_ union _)
+
+  /** The gates of an [[ofDays]] frame. They close on the driver after one
+    * bounded collect of (doc_id, quality, passed, fp, day): one scan
+    * projection, `passed` computed by Spark, so the driver compares no
+    * double. Keepers are the minimum doc_id per fingerprint among passed
+    * docs; as in Spark, a null fp forms one group but joins no row. The
+    * frames come back as local relations with the distributed schema.
+    * More than `small` docs, a doc_id that is not Long/Int, a null doc_id
+    * or a repeated one (which the distributed doc_id join would multiply)
+    * runs the distributed cuts instead.
+    */
+  private def gates(docs: DataFrame, minQuality: Double, small: Int): Gates = {
+    val scored = TextAnalysis.qualityScores(
+        docs.select(col("doc_id"), col("text"), md5(col("text")).as("fp"), col("day")), "fp", "day")
+      .select(col("doc_id"), col("quality"),
+        coalesce(col("quality") >= minQuality, lit(false)).as("passed"), col("fp"), col("day"))
+    val onDriver = for {
+      rows <- Labelled.fetch(scored, s"Curation.gates: fetch |D|<=$small", small, Seq("doc_id"),
+        col("quality"), col("passed"), col("fp"), col("day"))
+      if rows.map(_.getLong(0)).distinct.length == rows.length
+    } yield {
+      val passed = rows.filter(_.getBoolean(2))
+      val keep = passed.groupMapReduce(r => Option(r.getString(3)))(_.getLong(0))(math.min)
+      val day = rows.map(r => r.getLong(0) -> r.getInt(4)).toMap
+      // the distributed frames' schemas: the join keeps docs' doc_id
+      // field, and min() is nullable
+      val id = docs.schema("doc_id")
+      val keeper = StructField("exact_keep", id.dataType, nullable = true)
+      Gates(
+        local(docs, StructType(Seq(id, scored.schema("quality"))),
+          rows.map(r => Seq(r.getLong(0), r.get(1)))),
+        local(docs, StructType(Seq(id, keeper)), passed.filter(!_.isNullAt(3))
+          .map(r => Seq(r.getLong(0), keep(Some(r.getString(3)))))),
+        local(docs, StructType(Seq(keeper.copy(name = "doc_id"))), keep.values.map(Seq(_))),
+        Some(keep.values.map(id => id -> day(id)).toMap))
+    }
+    onDriver.getOrElse(gatesOf(docs, minQuality,
+      (what, df) => Labelled(df, s"Curation.gates: $what cut")(Ckpt.narrowLazy(df))))
+  }
+
+  /** The distributed gates, each shared narrow frame passed through
+    * `cut`. Wide rows never recur: document text appears only in
+    * per-branch pruned scans (Spark has no cross-branch subtree reuse,
+    * so "used twice" means a re-scan with column pruning, never a
+    * re-shuffle of text). (doc_id, quality) ~16 B/row is read by the
+    * gate AND the verdict join; (doc_id, fp) by the keeper aggregation,
+    * the per-doc tag join and the keeper semi-join. The cuts are LAZY
+    * (r15, guide §1.5): the shuffle stages below each cut run at the
+    * cut, and only its last stage waits — blocks persist when the first
+    * consumer computes them, and the gate chain's last stages run inside
+    * the near-dup tier's first action.
+    */
+  private def gatesOf(docs: DataFrame, minQuality: Double,
+      cut: (String, DataFrame) => DataFrame): Gates = {
+    val quality = cut("quality",
       TextAnalysis.qualityScores(docs).select("doc_id", "quality"))
-    val passed = Ckpt.narrowLazy(base
+    val passed = cut("passed", docs.select(col("doc_id"), col("text"))
       .join(quality.filter(col("quality") >= minQuality), "doc_id")
       .select(col("doc_id"), md5(col("text")).as("fp")))
     val keep1 = passed.groupBy("fp").agg(min("doc_id").as("exact_keep"))
     // (doc_id, exact_keep): two longs through the fingerprint join
     val exactTag = passed.join(keep1, "fp").select("doc_id", "exact_keep")
-    Gates(quality, exactTag, keep1.select(col("exact_keep").as("doc_id")))
+    Gates(quality, exactTag, keep1.select(col("exact_keep").as("doc_id")), None)
+  }
+
+  /** `rows` as a local relation in `df`'s session with the schema
+    * `schema` (a Long value in an IntegerType column goes back to Int).
+    */
+  private def local(df: DataFrame, schema: StructType, rows: Iterable[Seq[Any]]): DataFrame = {
+    val int = schema.fields.map(_.dataType == IntegerType)
+    df.sparkSession.createDataFrame(rows.map(r => Row.fromSeq(r.zip(int).map {
+      case (v: Long, true) => v.toInt
+      case (v, _) => v
+    })).toSeq.asJava, schema)
   }
 
   /** Stage-4 verdict assembly from the gate frames + a component map. */
@@ -80,12 +168,19 @@ object Curation {
             col("component"))
           .otherwise(lit(null).cast("long")).as("ref_id"))
 
-  def curate(docs: DataFrame, minQuality: Double = 0.15): DataFrame = {
-    val g = gates(docs, minQuality)
-    // keepers' text re-enters via a semi-join against the pruned scan
-    val exactKept = docs.select(col("doc_id"), col("text"))
-      .join(g.keeperIds, Seq("doc_id"), "left_semi")
-    verdicts(g, Components.connected(Dedup.nearDupEdges(exactKept)), minQuality)
+  def curate(docs: DataFrame, minQuality: Double = 0.15): DataFrame =
+    curate(docs, minQuality, SmallDocs, Dedup.SmallBands, Dedup.NearDupMaxBucket)
+
+  /** [[curate]] with the driver-path bounds of the gates and the near-dup
+    * tier and the skew cap as parameters (a bound of -1 forces the
+    * distributed plan).
+    */
+  private[graft] def curate(docs: DataFrame, minQuality: Double, smallGates: Int,
+      smallBands: Int, maxBucketSize: Int): DataFrame = {
+    val all = ofDays(docs)
+    val g = gates(all, minQuality, smallGates)
+    verdicts(g, Components.connected(
+      Dedup.nearDupEdges(g.keepers(all), smallBands, maxBucketSize)), minQuality)
   }
 
   /** Best-quality keeper per near-dup cluster. [[curate]]'s min-id
@@ -124,46 +219,75 @@ object Curation {
     * next day's [[curateIncremental]] as `corpusEdges`.
     */
   def exactKeepers(docs: DataFrame, minQuality: Double = 0.15): DataFrame =
-    docs.select(col("doc_id"), col("text"))
-      .join(gates(docs, minQuality).keeperIds, Seq("doc_id"), "left_semi")
+    exactKeepers(docs, minQuality, SmallDocs)
+
+  /** [[exactKeepers]] with the gates' driver-path bound as a parameter
+    * (-1 forces the distributed cuts).
+    */
+  private[graft] def exactKeepers(docs: DataFrame, minQuality: Double,
+      smallGates: Int): DataFrame =
+    gates(ofDays(docs), minQuality, smallGates).keepers(docs.select(col("doc_id"), col("text")))
 
   /** Ingest-time curation: verdicts over `corpus ∪ delta` where the
     * near-dup tier — the only superlinear stage — does ONLY delta-
-    * touching work. `corpusEdges` is the stored edge list from the
-    * previous run (`Dedup.nearDupEdges(exactKeepers(corpus))` — i, j
-    * columns); new edges come from [[Dedup.incrementalNearDupEdges]] of
-    * the delta's keepers against the corpus' keepers, and components are
-    * recomputed over the union (edge lists are tiny next to the corpus;
-    * re-clustering them is linear and lets a delta doc legitimately
-    * MERGE two existing clusters).
+    * touching work on top of yesterday's edges. `corpusEdges` is the
+    * stored edge list from the previous run
+    * (`Dedup.nearDupEdges(exactKeepers(corpus))` — i, j columns); the
+    * two-argument form derives yesterday's edges in the same pass
+    * instead (below). New edges are the delta keepers' pairs with every
+    * keeper, and components are recomputed over the union (edge lists
+    * are tiny next to the corpus; re-clustering them is linear and lets
+    * a delta doc legitimately MERGE two existing clusters).
     *
     * Contract: every delta doc_id must exceed every corpus doc_id
     * (append-only ingest). That makes corpus keeper status immune to the
     * delta (a group's min id can't move), so the output equals
-    * `curate(corpus ∪ delta)` EXACTLY and unconditionally: stored edges
-    * are re-validated against the union's bucket caps
+    * `curate(corpus ∪ delta)` EXACTLY and unconditionally: yesterday's
+    * edges are re-validated against the union's bucket caps
     * ([[Dedup.revalidatedUnionEdges]] — a pair whose every shared band
     * bucket outgrew [[Dedup.NearDupMaxBucket]] once delta members joined
     * is dropped, exactly as the from-scratch run drops it), which closes
     * the skew-cap corner earlier rounds documented as a divergence.
     *
-    * Cheap stages re-scan `corpus` here (they are linear and fuse into
-    * one pass); a production run would feed the stored (doc_id, quality)
-    * and (doc_id, fp) frames instead — the operator's contract point is
-    * the near-dup tier, where from-scratch cost is corpus-quadratic in
-    * the worst case and delta-proportional here.
+    * Both days share one build. The gates run once over `corpus ∪
+    * delta` (on the driver when they fit, see [[gates]]) and give each
+    * keeper its day; the keepers of both days get one shingle cut, one
+    * band cut and one band fetch. Yesterday's edges are the corpus-only
+    * buckets' pairs, capped at corpus-only sizes (or the stored
+    * `corpusEdges`); today's are those re-validated against the union's
+    * buckets plus the delta-touching pairs, with one verify fetch for
+    * both candidate sets ([[Dedup.unionEdges]]). A production run could
+    * feed stored (doc_id, quality) and (doc_id, fp) frames to the gates
+    * as well; the operator's contract point is the near-dup tier, where
+    * from-scratch cost is corpus-quadratic in the worst case and
+    * delta-proportional here.
     */
   def curateIncremental(
       corpus: DataFrame, delta: DataFrame, corpusEdges: DataFrame,
-      minQuality: Double = 0.15): DataFrame = {
-    val all = corpus.select(col("doc_id"), col("text"))
-      .union(delta.select(col("doc_id"), col("text")))
-    val g = gates(all, minQuality)
-    val corpusKept = corpus.select(col("doc_id"), col("text"))
-      .join(g.keeperIds, Seq("doc_id"), "left_semi")
-    val deltaKept = delta.select(col("doc_id"), col("text"))
-      .join(g.keeperIds, Seq("doc_id"), "left_semi")
-    val edges = Dedup.revalidatedUnionEdges(corpusKept, deltaKept, corpusEdges)
+      minQuality: Double = 0.15): DataFrame =
+    curateIncremental(corpus, delta, Some(corpusEdges), minQuality, SmallDocs,
+      Dedup.SmallBands, Dedup.NearDupMaxBucket)
+
+  /** [[curateIncremental]] with yesterday's edges derived in the query
+    * (from the corpus-only buckets of the shared band pass), at the
+    * default `minQuality` of 0.15.
+    */
+  def curateIncremental(corpus: DataFrame, delta: DataFrame): DataFrame =
+    curateIncremental(corpus, delta, None, 0.15, SmallDocs, Dedup.SmallBands,
+      Dedup.NearDupMaxBucket)
+
+  /** [[curateIncremental]] with the driver-path bounds of the gates and
+    * the near-dup tier and the skew cap as parameters (a bound of -1
+    * forces the distributed plan).
+    */
+  private[graft] def curateIncremental(
+      corpus: DataFrame, delta: DataFrame, corpusEdges: Option[DataFrame],
+      minQuality: Double, smallGates: Int, smallBands: Int,
+      maxBucketSize: Int): DataFrame = {
+    val all = ofDays(corpus, delta)
+    val g = gates(all, minQuality, smallGates)
+    val edges = Dedup.unionEdges(g.keepers(all), g.keeperIdsOf(all, 1), corpusEdges,
+      maxBucketSize, smallBands)
     verdicts(g, Components.connected(edges), minQuality)
   }
 
@@ -183,11 +307,8 @@ object Curation {
   def curateIncrementalIndexed(
       corpus: DataFrame, delta: DataFrame, corpusEdges: DataFrame,
       index: Dedup.DedupIndex, minQuality: Double = 0.15): DataFrame = {
-    val all = corpus.select(col("doc_id"), col("text"))
-      .union(delta.select(col("doc_id"), col("text")))
-    val g = gates(all, minQuality)
-    val deltaKept = delta.select(col("doc_id"), col("text"))
-      .join(g.keeperIds, Seq("doc_id"), "left_semi")
+    val g = gates(ofDays(corpus, delta), minQuality, SmallDocs)
+    val deltaKept = g.keepers(delta.select(col("doc_id"), col("text")))
     val edges = Dedup.revalidatedUnionEdgesIndexed(index, deltaKept, corpusEdges)
     verdicts(g, Components.connected(edges), minQuality)
   }

@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Document deduplication suite — the LLM-training-pipeline tier the
   * engine adds on top of the reference's MapReduce surface (the
@@ -645,10 +645,11 @@ object Dedup {
   private[graft] def minhashPairs(
       docs: DataFrame, n: Int, numHashes: Int, rowsPerBand: Int,
       threshold: Double, maxBucketSize: Int, smallBands: Int): DataFrame = {
-    val sh = Ckpt.narrowLazy(shingles(docs, n))
+    val sh = shingleCut(shingles(docs, n))
     val bands = bandCut(lshBands(sh, numHashes, rowsPerBand))
     val local = for {
-      bk <- fetchBands(bands, maxBucketSize, smallBands)
+      rows <- fetchBands(bands, smallBands)
+      bk = DriverBands(rows, maxBucketSize, bands.schema("doc_id"))
       cand <- bounded(bk.pairs, smallBands)
       edges <- verifyOnDriver(sh, cand, bk, maxBucketSize, threshold, smallBands)
     } yield edges
@@ -663,11 +664,18 @@ object Dedup {
   private def bandCut(bands: DataFrame): DataFrame =
     Labelled(bands, "Dedup.minhash: band cut")(Ckpt.narrowLazy(bands))
 
+  /** The lazy cut of a shingle frame that the band cut and then the
+    * verify step read, under its own job description: the shingle
+    * distinct's shuffle runs at the cut.
+    */
+  private def shingleCut(sh: DataFrame): DataFrame =
+    Labelled(sh, "Dedup.minhash: shingle cut")(Ckpt.narrowLazy(sh))
+
   /** Largest band frame (rows) that [[minhashPairs]] and the incremental
     * renderings close on the driver; the same bound caps each of that
     * path's other fetches and its distinct candidates.
     */
-  private val SmallBands = 1 << 17
+  private[operators] val SmallBands = 1 << 17
 
   /** A band frame fetched and capped on the driver: the surviving
     * buckets' distinct member ids (Long-cast, ascending), the skew
@@ -704,45 +712,41 @@ object Dedup {
     }
   }
 
-  private def isIdType(t: DataType): Boolean = t == LongType || t == IntegerType
-
-  /** The driver path's first step: one bounded collect of the band
-    * frame, then [[Blocking.cap]]'s rule on the driver (a bucket of more
-    * than `maxBucketSize` rows is dropped; `maxBucketSize <= 0` keeps
-    * all). None when the rows do not fit under `small`, doc_id is not
-    * Long/Int, or a doc_id is null. A row with a null b or band_key
-    * joins nothing and is never capped on either path, so it is skipped.
-    */
-  private def fetchBands(bands: DataFrame, maxBucketSize: Int,
-      small: Int): Option[DriverBands] = {
-    val id = bands.schema("doc_id")
-    if (!isIdType(id.dataType)) None
-    else {
-      val rows = Labelled(bands, s"Dedup.minhash: fetch bands |B|<=$small")(
-        bands.select(col("doc_id").cast("long"), col("b").cast("long"), col("band_key"))
-          .limit(small + 1).collect())
-      if (rows.length > small || rows.exists(_.isNullAt(0))) None
-      else {
-        val buckets = rows.filter(r => !r.isNullAt(1) && !r.isNullAt(2))
-          .groupMap(r => (r.getLong(1), r.getString(2)))(_.getLong(0)).values.toSeq
-        val (hot, kept) = buckets.partition(m => maxBucketSize > 0 && m.length > maxBucketSize)
-        Some(DriverBands(kept.map(_.distinct.sorted), hot.size, hot.map(_.length.toLong).sum, id))
-      }
+  private object DriverBands {
+    /** [[Blocking.cap]]'s rule on the driver over the fetched band rows
+      * of the docs `keep` accepts: a bucket of more than `maxBucketSize`
+      * rows is dropped (`maxBucketSize <= 0` keeps all). A row with a
+      * null b or band_key joins nothing and is never capped on either
+      * path, so it is skipped.
+      */
+    def apply(rows: Array[Row], maxBucketSize: Int, id: StructField,
+        keep: Long => Boolean = _ => true): DriverBands = {
+      val buckets = rows.filter(r => !r.isNullAt(1) && !r.isNullAt(2) && keep(r.getLong(0)))
+        .groupMap(r => (r.getLong(1), r.getString(2)))(_.getLong(0)).values.toSeq
+      val (hot, kept) = buckets.partition(m => maxBucketSize > 0 && m.length > maxBucketSize)
+      DriverBands(kept.map(_.distinct.sorted), hot.size, hot.map(_.length.toLong).sum, id)
     }
   }
 
-  /** The id columns `cols` of `df` (Long-cast) with one bounded collect;
-    * None when more than `small` rows come back, a value is null or a
-    * column is not Long/Int.
+  /** The driver path's first step: one bounded collect of the band frame
+    * (doc_id Long-cast, b, band_key). None when the rows do not fit
+    * under `small`, doc_id is not Long/Int, or a doc_id is null.
     */
-  private def fetchIds(df: DataFrame, cols: Seq[String], small: Int,
-      what: String): Option[Array[Row]] =
-    if (!cols.forall(c => isIdType(df.schema(c).dataType))) None
-    else {
-      val rows = Labelled(df, s"Dedup.minhash: fetch $what <=$small")(
-        df.select(cols.map(c => col(c).cast("long")): _*).limit(small + 1).collect())
-      Some(rows).filter(rs => rs.length <= small && !rs.exists(r => cols.indices.exists(r.isNullAt)))
-    }
+  private def fetchBands(bands: DataFrame, small: Int): Option[Array[Row]] =
+    Labelled.fetch(bands, s"Dedup.minhash: fetch bands |B|<=$small", small, Seq("doc_id"),
+      col("b").cast("long"), col("band_key"))
+
+  /** The incremental renderings' first steps: the band rows of both
+    * days (one fetch), the delta's ids (a fetch that runs no job when
+    * `deltaIds` is a local relation) and the union's capped buckets.
+    */
+  private def daysOnDriver(bandsAll: DataFrame, deltaIds: DataFrame, maxBucketSize: Int,
+      small: Int): Option[(Array[Row], Set[Long], DriverBands)] = for {
+    rows <- fetchBands(bandsAll, small)
+    delta <- Labelled.fetch(deltaIds, s"Dedup.minhash: fetch delta ids <=$small", small,
+      Seq("doc_id"))
+  } yield (rows, delta.map(_.getLong(0)).toSet,
+    DriverBands(rows, maxBucketSize, bandsAll.schema("doc_id")))
 
   /** The distinct pairs of `it`, sorted; None once more than `small`. */
   private def bounded(it: Iterator[(Long, Long)], small: Int): Option[Array[(Long, Long)]] = {
@@ -767,12 +771,10 @@ object Dedup {
     val fetched =
       if (docs.isEmpty) Some(Array.empty[Row])
       else if (docs.length > small) None
-      else Some(Labelled(sh, s"Dedup.minhash: verify ${cand.length} candidates over " +
-          s"${docs.length} docs; cap $maxBucketSize dropped ${bk.overCap} buckets, " +
-          s"${bk.droppedRows} band rows")(
-        sh.filter(col("doc_id").cast("long").isInCollection(docs.toSeq))
-          .select(col("doc_id").cast("long"), col("gh").cast("long"))
-          .limit(small + 1).collect())).filter(_.length <= small)
+      else Labelled.fetch(sh.filter(col("doc_id").cast("long").isInCollection(docs.toSeq)),
+        s"Dedup.minhash: verify ${cand.length} candidates over ${docs.length} docs; " +
+          s"cap $maxBucketSize dropped ${bk.overCap} buckets, ${bk.droppedRows} band rows",
+        small, Seq("doc_id"), col("gh").cast("long"))
     fetched.map { rows =>
       val size = rows.groupMapReduce(_.getLong(0))(_ => 1L)(_ + _)
       val sets = rows.filter(!_.isNullAt(1))
@@ -836,11 +838,12 @@ object Dedup {
     */
   def nearDupEdges(docs: DataFrame): DataFrame = nearDupEdges(docs, SmallBands)
 
-  /** [[nearDupEdges]] with the driver-path bound as a parameter (-1
-    * forces the distributed plan).
+  /** [[nearDupEdges]] with the driver-path bound (-1 forces the
+    * distributed plan) and the skew cap as parameters.
     */
-  private[graft] def nearDupEdges(docs: DataFrame, smallBands: Int): DataFrame =
-    minhashPairs(docs, 3, 16, 4, 0.7, NearDupMaxBucket, smallBands)
+  private[graft] def nearDupEdges(docs: DataFrame, smallBands: Int,
+      maxBucketSize: Int = NearDupMaxBucket): DataFrame =
+    minhashPairs(docs, 3, 16, 4, 0.7, maxBucketSize, smallBands)
 
   /** Incremental near-dup edges: the ingest-time rendering of
     * [[nearDupEdges]]. Given the existing `corpus` and a `delta` of new
@@ -881,7 +884,7 @@ object Dedup {
       rowsPerBand: Int, threshold: Double, maxBucketSize: Int,
       smallBands: Int): DataFrame = {
     // per-doc derivations, so union-of-shingles == shingles-of-union
-    val shAll = Ckpt.narrowLazy(shingles(corpus, n).union(shingles(delta, n)))
+    val shAll = shingleCut(shingles(corpus, n).union(shingles(delta, n)))
     incrementalEdgesOf(shAll, bandCut(lshBands(shAll, numHashes, rowsPerBand)),
       delta.select("doc_id"), threshold, maxBucketSize, smallBands)
   }
@@ -896,24 +899,15 @@ object Dedup {
       shAll: DataFrame, bandsAll: DataFrame, deltaIds: DataFrame,
       threshold: Double, maxBucketSize: Int, smallBands: Int,
       ckptPruned: Boolean = false): DataFrame = {
-    val local = deltaOnDriver(shAll, bandsAll, deltaIds, threshold, maxBucketSize,
-      smallBands).map(_._2)
+    val local = for {
+      (_, delta, bk) <- daysOnDriver(bandsAll, deltaIds, maxBucketSize, smallBands)
+      cand <- bounded(bk.deltaPairs(delta), smallBands)
+      edges <- verifyOnDriver(shAll, cand, bk, maxBucketSize, threshold, smallBands)
+    } yield edges
     releasedOr(local, shAll, bandsAll)(deltaEdgesOf(shAll,
       Blocking.cap(bandsAll, BandKey, maxBucketSize), deltaIds,
       threshold, ckptPruned))
   }
-
-  /** The driver path's delta side: the capped buckets and the verified
-    * (i, j, jaccard) pairs that touch a `deltaIds` doc.
-    */
-  private def deltaOnDriver(shAll: DataFrame, bandsAll: DataFrame,
-      deltaIds: DataFrame, threshold: Double, maxBucketSize: Int,
-      smallBands: Int): Option[(DriverBands, DataFrame)] = for {
-    bk <- fetchBands(bandsAll, maxBucketSize, smallBands)
-    delta <- fetchIds(deltaIds, Seq("doc_id"), smallBands, "delta ids")
-    cand <- bounded(bk.deltaPairs(delta.map(_.getLong(0)).toSet), smallBands)
-    edges <- verifyOnDriver(shAll, cand, bk, maxBucketSize, threshold, smallBands)
-  } yield (bk, edges)
 
   private def deltaEdgesOf(
       shAll: DataFrame, cappedBands: DataFrame, deltaIds: DataFrame,
@@ -955,11 +949,12 @@ object Dedup {
     * rows — edge-proportional, never corpus-quadratic.
     *
     * Same two paths as [[minhashPairs]]. The driver path also fetches the
-    * delta's ids and the stored edges under the same 2^17 bound (ids
-    * Long/Int and none null; the stored ends of the band frame's id
-    * type), keeps each stored pair that still shares a surviving bucket,
-    * and returns those rows followed by the verified delta-touching
-    * pairs as one local relation with the distributed union's schema.
+    * delta's ids (no job when they are a local relation) and the stored
+    * edges under the same 2^17 bound (ids Long/Int and none null; the
+    * stored ends of the band frame's id type), keeps each stored pair
+    * that still shares a surviving bucket, and returns those rows
+    * followed by the verified delta-touching pairs as one local relation
+    * with the distributed union's schema.
     */
   def revalidatedUnionEdges(
       corpus: DataFrame, delta: DataFrame, corpusEdges: DataFrame,
@@ -975,9 +970,30 @@ object Dedup {
       corpus: DataFrame, delta: DataFrame, corpusEdges: DataFrame,
       n: Int, numHashes: Int, rowsPerBand: Int, threshold: Double,
       maxBucketSize: Int, smallBands: Int): DataFrame = {
-    val shAll = Ckpt.narrowLazy(shingles(corpus, n).union(shingles(delta, n)))
+    val shAll = shingleCut(shingles(corpus, n).union(shingles(delta, n)))
     unionEdgesOf(shAll, bandCut(lshBands(shAll, numHashes, rowsPerBand)),
-      delta.select("doc_id"), corpusEdges, threshold, maxBucketSize, smallBands)
+      delta.select("doc_id"), Some(corpusEdges), threshold, maxBucketSize, smallBands)
+  }
+
+  /** The edge set of `nearDupEdges(kept)` (as (i, j) pairs, with
+    * `maxBucketSize` as the skew cap) where `kept` holds two days' docs
+    * and `deltaIds` names the second day's, built by
+    * [[revalidatedUnionEdges]]' law: yesterday's edges re-validated
+    * against the union's caps, plus the delta-touching edges.
+    * Yesterday's edges are the `stored` ones or, when None, derived in
+    * the same pass: the pairs of the buckets of the docs not in
+    * `deltaIds`, capped at those corpus-only sizes, then verified. Both
+    * days share one shingle cut and one band cut. On the driver path
+    * they also share one band fetch and one verify fetch for both
+    * candidate sets, and a local-relation `deltaIds` (the curation
+    * gates' keeper set) is read without a job. The distributed fallback
+    * derives yesterday's edges from the band cut anti-joined with
+    * `deltaIds`, then runs the stored-edge composition.
+    */
+  private[operators] def unionEdges(kept: DataFrame, deltaIds: DataFrame,
+      stored: Option[DataFrame], maxBucketSize: Int, smallBands: Int): DataFrame = {
+    val sh = shingleCut(shingles(kept))
+    unionEdgesOf(sh, bandCut(lshBands(sh)), deltaIds, stored, 0.7, maxBucketSize, smallBands)
   }
 
   /** [[revalidatedUnionEdges]] over a stored [[DedupIndex]] — the corpus
@@ -997,33 +1013,44 @@ object Dedup {
       threshold: Double, maxBucketSize: Int, smallBands: Int): DataFrame = {
     val (shAll, bandsAll) = indexedUnionFrames(index, delta)
     unionEdgesOf(shAll, bandsAll,
-      delta.select("doc_id"), corpusEdges, threshold, maxBucketSize, smallBands,
+      delta.select("doc_id"), Some(corpusEdges), threshold, maxBucketSize, smallBands,
       ckptPruned = true)
   }
 
   private def unionEdgesOf(
       shAll: DataFrame, bandsAll: DataFrame, deltaIds: DataFrame,
-      corpusEdges: DataFrame, threshold: Double, maxBucketSize: Int,
+      stored: Option[DataFrame], threshold: Double, maxBucketSize: Int,
       smallBands: Int, ckptPruned: Boolean = false): DataFrame = {
-    val idType = bandsAll.schema("doc_id").dataType
+    val id = bandsAll.schema("doc_id")
     val local = for {
-      stored <- Some(corpusEdges)
-        .filter(e => Seq("i", "j").forall(c => e.schema(c).dataType == idType))
-        .flatMap(fetchIds(_, Seq("i", "j"), smallBands, "stored edges"))
-      (bk, fresh) <- deltaOnDriver(shAll, bandsAll, deltaIds, threshold, maxBucketSize,
-        smallBands)
+      storedRows <- stored.fold(Option(Array.empty[Row])) { e =>
+        if (Seq("i", "j").exists(c => e.schema(c).dataType != id.dataType)) None
+        else Labelled.fetch(e, s"Dedup.minhash: fetch stored edges <=$smallBands", smallBands,
+          Seq("i", "j"))
+      }
+      (rows, delta, bk) <- daysOnDriver(bandsAll, deltaIds, maxBucketSize, smallBands)
+      fresh <- bounded(bk.deltaPairs(delta), smallBands)
+      // yesterday's candidates when none are stored: the corpus-only
+      // buckets, capped at the corpus-only sizes
+      old <- if (stored.isDefined) Some(Array.empty[(Long, Long)])
+        else bounded(DriverBands(rows, maxBucketSize, id, d => !delta(d)).pairs, smallBands)
+      verified <- verifyOnDriver(shAll, old ++ fresh, bk, maxBucketSize, threshold, smallBands)
     } yield {
-      val kept = bk.revalidated(stored.toSeq.map(r => (r.getLong(0), r.getLong(1))))
+      val ok = verified.select(col("i").cast("long"), col("j").cast("long")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val yesterday = storedRows.toSeq.map(r => (r.getLong(0), r.getLong(1))) ++ old.filter(ok)
+      val kept = (bk.revalidated(yesterday) ++ fresh.filter(ok))
         .map { case (i, j) => Row(bk.asId(i), bk.asId(j)) }
       // a union column is nullable when either side's is
-      def field(c: String) = StructField(c, bk.id.dataType,
-        corpusEdges.schema(c).nullable || bk.id.nullable)
-      shAll.sparkSession.createDataFrame(
-        (kept ++ fresh.select("i", "j").collect()).asJava,
-        StructType(Seq(field("i"), field("j"))))
+      def field(c: String) = StructField(c, id.dataType,
+        stored.exists(_.schema(c).nullable) || id.nullable)
+      shAll.sparkSession.createDataFrame(kept.asJava, StructType(Seq(field("i"), field("j"))))
     }
     releasedOr(local, shAll, bandsAll) {
       val bands = Blocking.cap(bandsAll, BandKey, maxBucketSize)
+      val corpusEdges = stored.getOrElse(jaccardOfCandidates(shAll, candidatesOfBands(
+        bandsAll.join(deltaIds, Seq("doc_id"), "left_anti"), maxBucketSize, cut = false),
+        threshold, ckptPruned))
       // stored pairs that still share a surviving bucket (class doc above)
       val revalidated = corpusEdges.select(col("i"), col("j"))
         .join(bands.as("x"), col("i") === col("x.doc_id"))

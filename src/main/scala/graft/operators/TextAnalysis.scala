@@ -84,21 +84,23 @@ object TextAnalysis {
     * `[a-z0-9 ]`), stopword ratio, and a composite score = min(1,
     * words/100) × TTR (longer docs with diverse vocabulary score
     * higher). One scan, no shuffle — every measure folds over the doc's
-    * own text/word array.
+    * own text/word array. The `carry` columns of `docs` ride along after
+    * doc_id.
     */
-  def qualityScores(docs: DataFrame): DataFrame = {
+  def qualityScores(docs: DataFrame, carry: String*): DataFrame = {
     val stopList = Stopwords.map(w => s"'$w'").mkString(", ")
-    docs.select(col("doc_id"),
+    val keys = ("doc_id" +: carry).map(col)
+    docs.select(keys ++ Seq(
         length(col("text")).cast("long").as("n_chars"),
         length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("long")
           .as("n_punct"),
-        expr(WordsExpr).as("w"))
-      .select(col("doc_id"), col("n_chars"), col("n_punct"),
+        expr(WordsExpr).as("w")): _*)
+      .select(keys ++ Seq(col("n_chars"), col("n_punct"),
         size(col("w")).cast("long").as("n_words"),
         size(array_distinct(col("w"))).cast("long").as("n_distinct"),
         expr(s"size(filter(w, x -> x IN ($stopList)))").cast("long").as("n_stop"),
-        col("w"))
-      .select(col("doc_id"), col("n_chars"), col("n_words"), col("n_distinct"),
+        col("w")): _*)
+      .select(keys ++ Seq(col("n_chars"), col("n_words"), col("n_distinct"),
         // empty/whitespace-only docs have 0 words (and possibly 0 chars):
         // the guards yield NULL ratios — matching DuckDB's x/0 = NULL and
         // the NULL-quality arm Curation's gate documents — instead of
@@ -114,7 +116,7 @@ object TextAnalysis {
           col("n_stop").cast("double") / col("n_words")), 4).as("stop_ratio"),
         round(when(col("n_words") > 0,
           least(lit(1.0), col("n_words").cast("double") / 100.0)
-            * (col("n_distinct").cast("double") / col("n_words"))), 4).as("quality"))
+            * (col("n_distinct").cast("double") / col("n_words"))), 4).as("quality")): _*)
   }
 
   /** Flesch-Kincaid readability per document, exact-integer: whitespace

@@ -11,11 +11,13 @@ import graft.sources.Tables
   * quality-passing exact-keepers, and a recursive-closure rendering of
   * the component step.
   *
-  * q64 runs the INCREMENTAL composition (stored corpus edges + delta-
-  * touching near-dup work only, `Curation.curateIncremental`) over the
+  * q64 runs the INCREMENTAL composition (yesterday's corpus edges +
+  * delta-touching near-dup work, `Curation.curateIncremental`) over the
   * same corpus split at the q62 delta cut — and is gated against the
   * SAME from-scratch oracle SQL as q48: the hash match IS the
-  * incremental-equals-full law, enforced by the driver.
+  * incremental-equals-full law, enforced by the driver. Yesterday's
+  * edges are derived in the query, from the corpus-only buckets of the
+  * one gates-and-bands pass both days share.
   *
   * q66 is the capstone manifest a training run consumes: one row per
   * document joining the lexical verdict (q48), the strict semantic-dedup
@@ -63,9 +65,9 @@ object CurationQueries {
       val nf = deltaCut(docs)
       val corpus = docs.filter(col("doc_id") < nf)
       val delta = docs.filter(col("doc_id") >= nf)
-      // what yesterday's run would have stored
-      val corpusEdges = Dedup.nearDupEdges(Curation.exactKeepers(corpus))
-      Curation.curateIncremental(corpus, delta, corpusEdges).orderBy("doc_id")
+      // yesterday's edges (what its run would have stored) come from the
+      // corpus-only buckets of the same gates and band pass
+      Curation.curateIncremental(corpus, delta).orderBy("doc_id")
     }),
 
     // the STORED-ARTIFACT rendering of q64: yesterday's job persisted

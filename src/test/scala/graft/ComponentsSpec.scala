@@ -164,7 +164,9 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("jobs carry the operator's labels; the caller's description survives") {
     val sc = spark.sparkContext
-    val df = edgesDf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (9L, 8L)), asInt = false)
+    // an RDD-backed frame, not a local relation: the cut and the fetch run
+    val local = edgesDf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (9L, 8L)), asInt = false)
+    val df = spark.createDataFrame(sc.parallelize(local.collect().toSeq, 2), local.schema)
     sc.setJobDescription("components-spec caller")
     try {
       // the driver closure's result is a local relation: its collect
@@ -182,5 +184,13 @@ class ComponentsSpec extends AnyFunSuite {
         fix.contains("Components.connected: round 2"), fix)
       assert(sc.getLocalProperty("spark.job.description") == "components-spec caller")
     } finally sc.setJobDescription(null)
+  }
+
+  test("a local-relation edge list is read with no job on the driver path") {
+    val df = edgesDf(Seq((1L, 2L), (2L, 3L), (9L, 8L)), asInt = true)
+    val (rows, jobs) = TestSpark.jobsDuring(rowsOf(Components.connected(df)))
+    assert(jobs.isEmpty, jobs)
+    assert(rows == Seq((1L, 1L), (2L, 1L), (3L, 1L), (8L, 8L), (9L, 8L)))
+    assert(rows == rowsOf(Components.connected(df, 25, Fixpoint)))
   }
 }
