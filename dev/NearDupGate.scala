@@ -8,11 +8,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{coalesce, lit, md5}
 
-import graft.operators.{Ckpt, Curation, Dedup, TextAnalysis}
+import graft.operators.{Ckpt, Curation, Dedup, Labelled, TextAnalysis}
 
 /** Times `Dedup.nearDupEdges` on both sides of its driver-path bound:
-  * the gated call (bound `GATE`, default 131072) against the forced
-  * distributed plan (bound -1), alternating which runs first, on
+  * the gated call (the `Labelled.Policy` bound `bands` set to `GATE`,
+  * by default the policy's own) against the forced distributed plan
+  * (bound -1), alternating which runs first, on
   * synthetic corpora of `n` docs (40–60 words over a 20,000-word
   * vocabulary; every 20th doc is a one-word edit of another, so a tenth
   * of the docs are near-dup candidates). A doc has 4 band rows. Each
@@ -35,7 +36,8 @@ import graft.operators.{Ckpt, Curation, Dedup, TextAnalysis}
   *
   * With `gates` as the first argument it times `Curation`'s gates
   * instead: `exactKeepers(docs).count()` with the gates' driver-path
-  * bound `GATE` against the forced distributed cuts (bound -1), on the
+  * bound `docs` set to `GATE` (by default the policy's own) against the
+  * forced distributed cuts (bound -1), on the
   * same corpora, and each `HEAP` line reports the driver heap that the
   * gates fetch of that size holds.
   */
@@ -55,7 +57,11 @@ object NearDupGate {
     val gates = args(0) == "gates"
     val rest = if (gates) args.drop(1) else args
     val (root, reps, sizes) = (rest(0), rest(1).toInt, rest.drop(2).map(_.toLong))
-    val gate = sys.env.getOrElse("GATE", "131072").toInt
+    val gate = sys.env.get("GATE").map(_.toInt)
+      .getOrElse(if (gates) Labelled.policy.docs else Labelled.policy.bands)
+    // the policy that bounds the path under test at `bound`
+    def under(bound: Int) =
+      if (gates) Labelled.Policy(docs = bound) else Labelled.Policy(bands = bound)
     val jobs = new AtomicInteger()
     val gateCuts = new AtomicInteger() // jobs of the distributed gates' cuts
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -79,9 +85,11 @@ object NearDupGate {
         gateCuts.set(0)
         val t0 = System.nanoTime
         val (rows, edgesLocal) =
-          if (gates) (Curation.exactKeepers(docs, 0.15, bound).count(), true)
-          else {
-            val out = Dedup.nearDupEdges(docs, bound)
+          if (gates) {
+            val kept = Labelled.withPolicy(under(bound))(Curation.exactKeepers(docs, 0.15))
+            (kept.count(), true)
+          } else {
+            val out = Labelled.withPolicy(under(bound))(Dedup.nearDupEdges(docs))
             (out.collect().length.toLong, out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
           }
         val s = (System.nanoTime - t0) / 1e9

@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   * These are the distributed renderings. The canonical MinHash paths of
   * [[Dedup]] (`minhashPairs`, `nearDupEdges` and the incremental edge
   * unions) apply the same three rules on the driver when their band
-  * frame has at most 2^17 rows — same cap, same i < j pairs, same
-  * (c, n_i, n_j) counts — and fall back to these operators, with their
-  * plans unchanged, for anything larger.
+  * frame fits under the [[Labelled.Policy]] bound `bands` — same cap,
+  * same i < j pairs, same (c, n_i, n_j) counts — and fall back to these
+  * operators, with their plans unchanged, for anything larger.
   */
 private[graft] object Blocking {
 

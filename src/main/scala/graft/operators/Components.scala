@@ -1,11 +1,9 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an undirected edge list — the transitive-
@@ -16,20 +14,17 @@ import org.apache.spark.storage.StorageLevel
   * Two paths, one answer (component = minimum node id):
   *
   *  - Small edge lists close on the driver. After the edge cut, one
-  *    bounded collect fetches at most `SmallEdges + 1` (2^18 + 1) edges
-  *    (a local-relation edge list is read as it is, with no cut and no
-  *    job).
-  *    When the list fits under `SmallEdges`, both ids are `LongType` or
+  *    bounded collect fetches at most one edge more than the
+  *    [[Labelled.Policy]] bound `edges` (a local-relation edge list is
+  *    read as it is, with no cut and no job).
+  *    When the list fits under the bound, both ids are `LongType` or
   *    both `IntegerType`, and no endpoint is null, a breadth-first sweep
   *    over the nodes in ascending id order labels every component with
   *    its minimum (each sweep starts at the smallest unvisited node) and
-  *    returns a local relation. The cap bounds driver memory: the
-  *    fetched edges and the output nodes are boxed rows (on the order of
-  *    100 bytes each) next to a few primitive arrays per endpoint, about
-  *    100 MB for 2^18 edges over 2^19 distinct nodes. Near-dup edge lists
-  *    are a few hundred to a few thousand rows, so this is the common
-  *    path; it replaces one to four label-propagation rounds of about 15
-  *    AQE stage-jobs each.
+  *    returns a local relation (the bound caps driver memory). Near-dup
+  *    edge lists are a few hundred to a few thousand rows, so this is the
+  *    common path; it replaces one to four label-propagation rounds of
+  *    about 15 AQE stage-jobs each.
   *  - Anything else runs iterative min-label propagation (the
   *    MapReduce-era hash-to-min shape). Each round every node takes the
   *    minimum label among itself and its neighbors; convergence when no
@@ -46,13 +41,10 @@ import org.apache.spark.storage.StorageLevel
   * measures D during its sweep.
   *
   * Every Spark job this operator starts carries a job description
-  * (`Components.connected: edge cut`, `fetch |E|<=262144`, `round <r>`);
+  * (`Components.connected: edge cut`, `fetch |E|<=<edges>`, `round <r>`);
   * the caller's description is restored afterwards.
   */
 object Components {
-
-  /** Largest edge list closed on the driver (see the class doc). */
-  private val SmallEdges = 1 << 18
 
   /** Prefix of this operator's job descriptions. */
   private val Op = "Components.connected"
@@ -64,14 +56,7 @@ object Components {
     * rounds has propagated `round * 2 + 1` hops, which is the figure the
     * non-convergence error reports.
     */
-  def connected(edges: DataFrame, maxIter: Int = 25): DataFrame =
-    connected(edges, maxIter, SmallEdges)
-
-  /** [[connected]] with the driver-path cap as a parameter, so tests can
-    * force either path (a cap of -1 always takes the fixpoint).
-    */
-  private[graft] def connected(edges: DataFrame, maxIter: Int,
-      smallEdges: Int): DataFrame = {
+  def connected(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     // the loop advances two hops per round, so a budget below one round
     // could never observe convergence — even on an already-converged graph
     require(maxIter >= 2, s"maxIter must be >= 2 (one double-hop round), got $maxIter")
@@ -89,7 +74,8 @@ object Components {
     val idType = e.schema("i").dataType
     val small =
       if (idType != e.schema("j").dataType) None
-      else Labelled.fetch(e, s"$Op: fetch |E|<=$smallEdges", smallEdges, Seq("i", "j"))
+      else Labelled.fetch(e, s"$Op: fetch |E|<=${Labelled.Edges.value}", Labelled.Edges,
+        Seq("i", "j"))
     small match {
       case Some(rows) =>
         Ckpt.release(e)
@@ -151,16 +137,13 @@ object Components {
     }
     val rounds = math.max(1, (far + 1) / 2)
     if (2 * rounds > maxIter) throw nonConvergence(2 * (maxIter / 2) + 1, maxIter)
-    val out = (0 until n).map { v =>
-      if (idType == IntegerType) Row(ids(v).toInt, ids(root(v)).toInt)
-      else Row(ids(v), ids(root(v)))
-    }
     // the fixpoint's columns: node is an endpoint, component a least()
     // over endpoints, so both are nullable exactly when i or j is
     val nullable = e.schema("i").nullable || e.schema("j").nullable
-    e.sparkSession.createDataFrame(out.asJava, StructType(Seq(
+    Labelled.local(e, StructType(Seq(
       StructField("node", idType, nullable),
-      StructField("component", idType, nullable))))
+      StructField("component", idType, nullable))),
+      (0 until n).map(v => Seq(ids(v), ids(root(v)))))
   }
 
   /** The distributed min-label fixpoint over the cut edge list `e`. */

@@ -1,11 +1,9 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** End-to-end corpus curation — the pass an LLM-training pipeline runs
   * over raw documents, chaining the engine's tiers into one verdict per
@@ -24,25 +22,13 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * keeper or its cluster representative; NULL for `low_quality`/`kept`).
   *
   * Scale shape: stages 1–2 are one scan + one fingerprint shuffle (or,
-  * for at most 2^13 docs, one scan projection fetched with a bounded
-  * collect and closed on the driver); stage 3 runs only over
-  * quality-passing exact-keepers (the corpus after the cheap gates), so
-  * the expensive near-dup machinery sees the smallest possible input —
-  * the ordering a 100 TB pass depends on.
+  * for inputs under the [[Labelled.Policy]] bound `docs`, one scan
+  * projection fetched with a bounded collect and closed on the driver);
+  * stage 3 runs only over quality-passing exact-keepers (the corpus
+  * after the cheap gates), so the expensive near-dup machinery sees the
+  * smallest possible input — the ordering a 100 TB pass depends on.
   */
 object Curation {
-
-  /** Largest input (docs, both days) whose gates close on the driver.
-    * Set with `dev/NearDupGate.scala gates` (synthetic 40–60-word docs,
-    * 4-core host, `local[4]`, medians of 5 alternating reps):
-    * `exactKeepers` took 0.72 s against the distributed cuts' 1.04 s at
-    * 4,096 docs and 0.90 vs 1.35 s at 8,192, tied at 16,384 (0.87 vs
-    * 0.89 s) and lost at 32,768 (1.50 vs 1.38 s). An input above the
-    * bound pays for the fetch that overflows, about 0.3 s (16,384 docs:
-    * 1.23 vs 0.86 s; 131,072: 2.86 vs 2.48 s). The fetch holds about 200
-    * bytes a doc on the driver (1.6 MB at the bound).
-    */
-  private val SmallDocs = 1 << 13
 
   /** The gate stages (1–2) shared by every entry point: (doc_id, quality)
     * for every doc, (doc_id, exact_keep) for every quality-passing doc
@@ -62,7 +48,8 @@ object Curation {
       * local relation when the gates closed on the driver.
       */
     def keeperIdsOf(docs: DataFrame, day: Int): DataFrame = kept match {
-      case Some(k) => local(keeperIds, keeperIds.schema, k.collect { case (id, `day`) => Seq(id) })
+      case Some(k) =>
+        Labelled.local(keeperIds, keeperIds.schema, k.collect { case (id, `day`) => Seq(id) })
       case None => keepers(docs.filter(col("day") === day).select("doc_id"))
     }
   }
@@ -78,18 +65,18 @@ object Curation {
     * double. Keepers are the minimum doc_id per fingerprint among passed
     * docs; as in Spark, a null fp forms one group but joins no row. The
     * frames come back as local relations with the distributed schema.
-    * More than `small` docs, a doc_id that is not Long/Int, a null doc_id
-    * or a repeated one (which the distributed doc_id join would multiply)
-    * runs the distributed cuts instead.
+    * More docs than the `docs` bound, a doc_id that is not Long/Int, a
+    * null doc_id or a repeated one (which the distributed doc_id join
+    * would multiply) runs the distributed cuts instead.
     */
-  private def gates(docs: DataFrame, minQuality: Double, small: Int): Gates = {
+  private def gates(docs: DataFrame, minQuality: Double): Gates = {
     val scored = TextAnalysis.qualityScores(
         docs.select(col("doc_id"), col("text"), md5(col("text")).as("fp"), col("day")), "fp", "day")
       .select(col("doc_id"), col("quality"),
         coalesce(col("quality") >= minQuality, lit(false)).as("passed"), col("fp"), col("day"))
     val onDriver = for {
-      rows <- Labelled.fetch(scored, s"Curation.gates: fetch |D|<=$small", small, Seq("doc_id"),
-        col("quality"), col("passed"), col("fp"), col("day"))
+      rows <- Labelled.fetch(scored, s"Curation.gates: fetch |D|<=${Labelled.Docs.value}",
+        Labelled.Docs, Seq("doc_id"), col("quality"), col("passed"), col("fp"), col("day"))
       if rows.map(_.getLong(0)).distinct.length == rows.length
     } yield {
       val passed = rows.filter(_.getBoolean(2))
@@ -100,11 +87,12 @@ object Curation {
       val id = docs.schema("doc_id")
       val keeper = StructField("exact_keep", id.dataType, nullable = true)
       Gates(
-        local(docs, StructType(Seq(id, scored.schema("quality"))),
+        Labelled.local(docs, StructType(Seq(id, scored.schema("quality"))),
           rows.map(r => Seq(r.getLong(0), r.get(1)))),
-        local(docs, StructType(Seq(id, keeper)), passed.filter(!_.isNullAt(3))
+        Labelled.local(docs, StructType(Seq(id, keeper)), passed.filter(!_.isNullAt(3))
           .map(r => Seq(r.getLong(0), keep(Some(r.getString(3)))))),
-        local(docs, StructType(Seq(keeper.copy(name = "doc_id"))), keep.values.map(Seq(_))),
+        Labelled.local(docs, StructType(Seq(keeper.copy(name = "doc_id"))),
+          keep.values.map(Seq(_))),
         Some(keep.values.map(id => id -> day(id)).toMap))
     }
     onDriver.getOrElse(gatesOf(docs, minQuality,
@@ -136,17 +124,6 @@ object Curation {
     Gates(quality, exactTag, keep1.select(col("exact_keep").as("doc_id")), None)
   }
 
-  /** `rows` as a local relation in `df`'s session with the schema
-    * `schema` (a Long value in an IntegerType column goes back to Int).
-    */
-  private def local(df: DataFrame, schema: StructType, rows: Iterable[Seq[Any]]): DataFrame = {
-    val int = schema.fields.map(_.dataType == IntegerType)
-    df.sparkSession.createDataFrame(rows.map(r => Row.fromSeq(r.zip(int).map {
-      case (v: Long, true) => v.toInt
-      case (v, _) => v
-    })).toSeq.asJava, schema)
-  }
-
   /** Stage-4 verdict assembly from the gate frames + a component map. */
   private def verdicts(g: Gates, comp: DataFrame, minQuality: Double): DataFrame =
     g.quality
@@ -168,19 +145,10 @@ object Curation {
             col("component"))
           .otherwise(lit(null).cast("long")).as("ref_id"))
 
-  def curate(docs: DataFrame, minQuality: Double = 0.15): DataFrame =
-    curate(docs, minQuality, SmallDocs, Dedup.SmallBands, Dedup.NearDupMaxBucket)
-
-  /** [[curate]] with the driver-path bounds of the gates and the near-dup
-    * tier and the skew cap as parameters (a bound of -1 forces the
-    * distributed plan).
-    */
-  private[graft] def curate(docs: DataFrame, minQuality: Double, smallGates: Int,
-      smallBands: Int, maxBucketSize: Int): DataFrame = {
+  def curate(docs: DataFrame, minQuality: Double = 0.15): DataFrame = {
     val all = ofDays(docs)
-    val g = gates(all, minQuality, smallGates)
-    verdicts(g, Components.connected(
-      Dedup.nearDupEdges(g.keepers(all), smallBands, maxBucketSize)), minQuality)
+    val g = gates(all, minQuality)
+    verdicts(g, Components.connected(Dedup.nearDupEdges(g.keepers(all))), minQuality)
   }
 
   /** Best-quality keeper per near-dup cluster. [[curate]]'s min-id
@@ -219,14 +187,7 @@ object Curation {
     * next day's [[curateIncremental]] as `corpusEdges`.
     */
   def exactKeepers(docs: DataFrame, minQuality: Double = 0.15): DataFrame =
-    exactKeepers(docs, minQuality, SmallDocs)
-
-  /** [[exactKeepers]] with the gates' driver-path bound as a parameter
-    * (-1 forces the distributed cuts).
-    */
-  private[graft] def exactKeepers(docs: DataFrame, minQuality: Double,
-      smallGates: Int): DataFrame =
-    gates(ofDays(docs), minQuality, smallGates).keepers(docs.select(col("doc_id"), col("text")))
+    gates(ofDays(docs), minQuality).keepers(docs.select(col("doc_id"), col("text")))
 
   /** Ingest-time curation: verdicts over `corpus ∪ delta` where the
     * near-dup tier — the only superlinear stage — does ONLY delta-
@@ -265,29 +226,24 @@ object Curation {
   def curateIncremental(
       corpus: DataFrame, delta: DataFrame, corpusEdges: DataFrame,
       minQuality: Double = 0.15): DataFrame =
-    curateIncremental(corpus, delta, Some(corpusEdges), minQuality, SmallDocs,
-      Dedup.SmallBands, Dedup.NearDupMaxBucket)
+    curateIncremental(corpus, delta, Some(corpusEdges), minQuality)
 
   /** [[curateIncremental]] with yesterday's edges derived in the query
     * (from the corpus-only buckets of the shared band pass), at the
     * default `minQuality` of 0.15.
     */
   def curateIncremental(corpus: DataFrame, delta: DataFrame): DataFrame =
-    curateIncremental(corpus, delta, None, 0.15, SmallDocs, Dedup.SmallBands,
-      Dedup.NearDupMaxBucket)
+    curateIncremental(corpus, delta, None, 0.15)
 
-  /** [[curateIncremental]] with the driver-path bounds of the gates and
-    * the near-dup tier and the skew cap as parameters (a bound of -1
-    * forces the distributed plan).
+  /** The body both [[curateIncremental]] forms share; the skew cap is
+    * the [[Labelled.Policy]]'s `maxBucket`.
     */
-  private[graft] def curateIncremental(
-      corpus: DataFrame, delta: DataFrame, corpusEdges: Option[DataFrame],
-      minQuality: Double, smallGates: Int, smallBands: Int,
-      maxBucketSize: Int): DataFrame = {
+  private def curateIncremental(corpus: DataFrame, delta: DataFrame,
+      corpusEdges: Option[DataFrame], minQuality: Double): DataFrame = {
     val all = ofDays(corpus, delta)
-    val g = gates(all, minQuality, smallGates)
+    val g = gates(all, minQuality)
     val edges = Dedup.unionEdges(g.keepers(all), g.keeperIdsOf(all, 1), corpusEdges,
-      maxBucketSize, smallBands)
+      Labelled.policy.maxBucket)
     verdicts(g, Components.connected(edges), minQuality)
   }
 
@@ -307,7 +263,7 @@ object Curation {
   def curateIncrementalIndexed(
       corpus: DataFrame, delta: DataFrame, corpusEdges: DataFrame,
       index: Dedup.DedupIndex, minQuality: Double = 0.15): DataFrame = {
-    val g = gates(ofDays(corpus, delta), minQuality, SmallDocs)
+    val g = gates(ofDays(corpus, delta), minQuality)
     val deltaKept = g.keepers(delta.select(col("doc_id"), col("text")))
     val edges = Dedup.revalidatedUnionEdgesIndexed(index, deltaKept, corpusEdges)
     verdicts(g, Components.connected(edges), minQuality)

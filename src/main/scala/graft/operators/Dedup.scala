@@ -1,10 +1,8 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Document deduplication suite — the LLM-training-pipeline tier the
   * engine adds on top of the reference's MapReduce surface (the
@@ -591,20 +589,19 @@ object Dedup {
     *
     *  - Small band frames are capped, paired and verified on the driver.
     *    The band frame is cut (lazily), and one bounded collect fetches at
-    *    most `SmallBands + 1` (2^17 + 1) band rows (doc_id, b, band_key)
-    *    from the cut. When they fit, doc_id is `LongType` or
-    *    `IntegerType` and no doc_id is null, the driver drops every bucket
-    *    of more than `maxBucketSize` rows, forms the distinct i < j pairs
-    *    of the surviving buckets, fetches the candidate docs' shingle
-    *    rows with one more bounded collect, and counts (i, j, c, n_i,
-    *    n_j) exactly as [[Blocking.overlapOf]] does.
+    *    most one band row (doc_id, b, band_key) more than the
+    *    [[Labelled.Policy]] bound `bands` from the cut. When they fit,
+    *    doc_id is `LongType` or `IntegerType` and no doc_id is null, the
+    *    driver drops every bucket of more than `maxBucketSize` rows, forms
+    *    the distinct i < j pairs of the surviving buckets, fetches the
+    *    candidate docs' shingle rows with one more bounded collect, and
+    *    counts (i, j, c, n_i, n_j) exactly as [[Blocking.overlapOf]] does.
     *    Those rows go through [[jaccardAtLeast]] as a local relation, so
     *    the division, threshold and rounding stay Spark's own, and the
     *    result is a local relation (its consumers never re-run the
-    *    chain). Driver memory is bounded by the same constant: at most
-    *    2^17 band rows, 2^17 distinct candidates and 2^17 shingle rows.
-    *    The fetched band rows and their buckets hold about 240 bytes a
-    *    band row (31 MB at the bound, measured). Near-dup band frames are
+    *    chain). The same bound caps the band rows, the distinct
+    *    candidates and the shingle rows, and so driver memory (the
+    *    bound's scaladoc gives the measured heap). Near-dup band frames are
     *    bands × docs rows (2,000 at sf0.01 with 25 candidates), so this
     *    is the common path; it replaces a chain of about 30 AQE
     *    stage-jobs with the band cut and two fetches, one job each at
@@ -617,41 +614,23 @@ object Dedup {
     *    [[Blocking.overlapOf]] verifies. The rows the driver path fetched
     *    before it fell back are thrown away.
     *
-    * The bound is where the driver path stops winning. On synthetic
-    * corpora of 40–60-word docs with a tenth of them in near-dup pairs
-    * (4-core host, `local[4]`), it took 1.3 s against the distributed
-    * plan's 2.2 s at 2^15 band rows and 3.3 s against 4.9 s at 98,304.
-    * Such corpora fetch about 5 candidate shingle rows a doc against 4
-    * band rows, so near 2^17 band rows the verify fetch overflows and
-    * the call falls back, 0.3 s slower than the distributed plan alone;
-    * under a bound of 2^18 that overflow cost 2 s.
-    *
     * The cut and the fetches carry job descriptions (`Dedup.minhash:
-    * band cut`, `fetch bands |B|<=131072`, then `verify <k> candidates over <d> docs; cap <max>
-    * dropped <h> buckets, <r> band rows`), so the skew guard's drops are
-    * counted in the job that follows them. With no candidate left there
-    * is nothing to verify and no job runs.
+    * band cut`, `fetch bands |B|<=<bands>`, then `verify <k> candidates
+    * over <d> docs; cap <max> dropped <h> buckets, <r> band rows`), so
+    * the skew guard's drops are counted in the job that follows them.
+    * With no candidate left there is nothing to verify and no job runs.
     */
   def minhashPairs(
       docs: DataFrame, n: Int = 3, numHashes: Int = 16,
       rowsPerBand: Int = 4, threshold: Double = 0.7,
-      maxBucketSize: Int = NearDupMaxBucket): DataFrame =
-    minhashPairs(docs, n, numHashes, rowsPerBand, threshold, maxBucketSize, SmallBands)
-
-  /** [[minhashPairs]] with the driver-path bound as a parameter, so tests
-    * can force either path (a bound of -1 always takes the distributed
-    * plan).
-    */
-  private[graft] def minhashPairs(
-      docs: DataFrame, n: Int, numHashes: Int, rowsPerBand: Int,
-      threshold: Double, maxBucketSize: Int, smallBands: Int): DataFrame = {
+      maxBucketSize: Int = NearDupMaxBucket): DataFrame = {
     val sh = shingleCut(shingles(docs, n))
     val bands = bandCut(lshBands(sh, numHashes, rowsPerBand))
     val local = for {
-      rows <- fetchBands(bands, smallBands)
+      rows <- fetchBands(bands)
       bk = DriverBands(rows, maxBucketSize, bands.schema("doc_id"))
-      cand <- bounded(bk.pairs, smallBands)
-      edges <- verifyOnDriver(sh, cand, bk, maxBucketSize, threshold, smallBands)
+      cand <- bounded(bk.pairs)
+      edges <- verifyOnDriver(sh, cand, bk, maxBucketSize, threshold)
     } yield edges
     releasedOr(local, sh, bands)(jaccardOfCandidates(sh,
       candidatesOfBands(bands, maxBucketSize, cut = false), threshold))
@@ -671,21 +650,12 @@ object Dedup {
   private def shingleCut(sh: DataFrame): DataFrame =
     Labelled(sh, "Dedup.minhash: shingle cut")(Ckpt.narrowLazy(sh))
 
-  /** Largest band frame (rows) that [[minhashPairs]] and the incremental
-    * renderings close on the driver; the same bound caps each of that
-    * path's other fetches and its distinct candidates.
-    */
-  private[operators] val SmallBands = 1 << 17
-
   /** A band frame fetched and capped on the driver: the surviving
     * buckets' distinct member ids (Long-cast, ascending), the skew
     * guard's counters, and the doc_id field (type and nullability).
     */
   private final case class DriverBands(
       buckets: Seq[Array[Long]], overCap: Int, droppedRows: Long, id: StructField) {
-
-    /** A Long-cast id back in the id column's type. */
-    def asId(x: Long): Any = if (id.dataType == IntegerType) x.toInt else x
 
     /** (i, j), i < j, for every two docs sharing a bucket. */
     def pairs: Iterator[(Long, Long)] = buckets.iterator.flatMap(m =>
@@ -730,26 +700,29 @@ object Dedup {
 
   /** The driver path's first step: one bounded collect of the band frame
     * (doc_id Long-cast, b, band_key). None when the rows do not fit
-    * under `small`, doc_id is not Long/Int, or a doc_id is null.
+    * under the `bands` bound, doc_id is not Long/Int, or a doc_id is null.
     */
-  private def fetchBands(bands: DataFrame, small: Int): Option[Array[Row]] =
-    Labelled.fetch(bands, s"Dedup.minhash: fetch bands |B|<=$small", small, Seq("doc_id"),
-      col("b").cast("long"), col("band_key"))
+  private def fetchBands(bands: DataFrame): Option[Array[Row]] =
+    Labelled.fetch(bands, s"Dedup.minhash: fetch bands |B|<=${Labelled.Bands.value}",
+      Labelled.Bands, Seq("doc_id"), col("b").cast("long"), col("band_key"))
 
   /** The incremental renderings' first steps: the band rows of both
     * days (one fetch), the delta's ids (a fetch that runs no job when
     * `deltaIds` is a local relation) and the union's capped buckets.
     */
-  private def daysOnDriver(bandsAll: DataFrame, deltaIds: DataFrame, maxBucketSize: Int,
-      small: Int): Option[(Array[Row], Set[Long], DriverBands)] = for {
-    rows <- fetchBands(bandsAll, small)
-    delta <- Labelled.fetch(deltaIds, s"Dedup.minhash: fetch delta ids <=$small", small,
-      Seq("doc_id"))
+  private def daysOnDriver(bandsAll: DataFrame, deltaIds: DataFrame,
+      maxBucketSize: Int): Option[(Array[Row], Set[Long], DriverBands)] = for {
+    rows <- fetchBands(bandsAll)
+    delta <- Labelled.fetch(deltaIds,
+      s"Dedup.minhash: fetch delta ids <=${Labelled.Bands.value}", Labelled.Bands, Seq("doc_id"))
   } yield (rows, delta.map(_.getLong(0)).toSet,
     DriverBands(rows, maxBucketSize, bandsAll.schema("doc_id")))
 
-  /** The distinct pairs of `it`, sorted; None once more than `small`. */
-  private def bounded(it: Iterator[(Long, Long)], small: Int): Option[Array[(Long, Long)]] = {
+  /** The distinct pairs of `it`, sorted; None once more than the `bands`
+    * bound.
+    */
+  private def bounded(it: Iterator[(Long, Long)]): Option[Array[(Long, Long)]] = {
+    val small = Labelled.Bands.value
     val out = scala.collection.mutable.HashSet.empty[(Long, Long)]
     while (it.hasNext && out.size <= small) out += it.next()
     if (out.size <= small) Some(out.toArray.sorted) else None
@@ -759,22 +732,21 @@ object Dedup {
     * docs' rows of `sh`, then per candidate c = matching (gh) row pairs,
     * n = each doc's row count — [[Blocking.overlapOf]]'s counts, pairs
     * with c = 0 absent — as a local relation through [[jaccardAtLeast]].
-    * None when the rows do not fit under `small`. The fetch's job
-    * description carries the candidate and skew-guard counters.
+    * None when the rows do not fit under the `bands` bound. The fetch's
+    * job description carries the candidate and skew-guard counters.
     */
   private def verifyOnDriver(sh: DataFrame, cand: Array[(Long, Long)],
-      bk: DriverBands, maxBucketSize: Int, threshold: Double,
-      small: Int): Option[DataFrame] = {
+      bk: DriverBands, maxBucketSize: Int, threshold: Double): Option[DataFrame] = {
     val docs = cand.flatMap(p => Array(p._1, p._2)).distinct
-    // every banded doc has a shingle row, so more docs than `small`
+    // every banded doc has a shingle row, so more docs than the bound
     // cannot fit: fall back without the fetch
     val fetched =
       if (docs.isEmpty) Some(Array.empty[Row])
-      else if (docs.length > small) None
+      else if (docs.length > Labelled.Bands.value) None
       else Labelled.fetch(sh.filter(col("doc_id").cast("long").isInCollection(docs.toSeq)),
         s"Dedup.minhash: verify ${cand.length} candidates over ${docs.length} docs; " +
           s"cap $maxBucketSize dropped ${bk.overCap} buckets, ${bk.droppedRows} band rows",
-        small, Seq("doc_id"), col("gh").cast("long"))
+        Labelled.Bands, Seq("doc_id"), col("gh").cast("long"))
     fetched.map { rows =>
       val size = rows.groupMapReduce(_.getLong(0))(_ => 1L)(_ + _)
       val sets = rows.filter(!_.isNullAt(1))
@@ -782,14 +754,14 @@ object Dedup {
       val none = Array.empty[Long]
       val counted = cand.iterator.flatMap { case (i, j) =>
         val c = sharedRows(sets.getOrElse(i, none), sets.getOrElse(j, none))
-        if (c > 0) Some(Row(bk.asId(i), bk.asId(j), c, size(i), size(j))) else None
+        if (c > 0) Some(Seq(i, j, c, size(i), size(j))) else None
       }.toSeq
       val t = bk.id.dataType
-      jaccardAtLeast(sh.sparkSession.createDataFrame(counted.asJava, StructType(Seq(
+      jaccardAtLeast(Labelled.local(sh, StructType(Seq(
         StructField("i", t, bk.id.nullable), StructField("j", t, bk.id.nullable),
         StructField("c", LongType, nullable = false),
         StructField("n_i", LongType, nullable = false),
-        StructField("n_j", LongType, nullable = false)))), threshold)
+        StructField("n_j", LongType, nullable = false))), counted), threshold)
     }
   }
 
@@ -831,19 +803,14 @@ object Dedup {
     * is the path a 100 TB curation run takes, so it runs with the
     * bucket cap a 100 TB corpus needs (and the oracle mirrors).
     *
-    * It takes [[minhashPairs]]' two paths: a band frame of at most 2^17
-    * rows with Long/Int ids and no null doc_id is capped, paired and
-    * verified on the driver (two bounded fetches, a local-relation
-    * result); anything else runs the distributed plan.
+    * It takes [[minhashPairs]]' two paths: a band frame under the
+    * [[Labelled.Policy]] bound `bands` with Long/Int ids and no null
+    * doc_id is capped, paired and verified on the driver (two bounded
+    * fetches, a local-relation result); anything else runs the
+    * distributed plan. The skew cap is the policy's `maxBucket`.
     */
-  def nearDupEdges(docs: DataFrame): DataFrame = nearDupEdges(docs, SmallBands)
-
-  /** [[nearDupEdges]] with the driver-path bound (-1 forces the
-    * distributed plan) and the skew cap as parameters.
-    */
-  private[graft] def nearDupEdges(docs: DataFrame, smallBands: Int,
-      maxBucketSize: Int = NearDupMaxBucket): DataFrame =
-    minhashPairs(docs, 3, 16, 4, 0.7, maxBucketSize, smallBands)
+  def nearDupEdges(docs: DataFrame): DataFrame =
+    minhashPairs(docs, 3, 16, 4, 0.7, Labelled.policy.maxBucket)
 
   /** Incremental near-dup edges: the ingest-time rendering of
     * [[nearDupEdges]]. Given the existing `corpus` and a `delta` of new
@@ -866,27 +833,17 @@ object Dedup {
     * from-scratch run would say.
     *
     * Same two paths as [[minhashPairs]]: the driver path also fetches the
-    * delta's ids (under the same 2^17 bound, none null) and pairs each
+    * delta's ids (under the same `bands` bound, none null) and pairs each
     * delta doc with every other member of its surviving buckets.
     */
   def incrementalNearDupEdges(
       corpus: DataFrame, delta: DataFrame, n: Int = 3, numHashes: Int = 16,
       rowsPerBand: Int = 4, threshold: Double = 0.7,
-      maxBucketSize: Int = NearDupMaxBucket): DataFrame =
-    incrementalNearDupEdges(corpus, delta, n, numHashes, rowsPerBand, threshold,
-      maxBucketSize, SmallBands)
-
-  /** [[incrementalNearDupEdges]] with the driver-path bound as a
-    * parameter (-1 forces the distributed plan).
-    */
-  private[graft] def incrementalNearDupEdges(
-      corpus: DataFrame, delta: DataFrame, n: Int, numHashes: Int,
-      rowsPerBand: Int, threshold: Double, maxBucketSize: Int,
-      smallBands: Int): DataFrame = {
+      maxBucketSize: Int = NearDupMaxBucket): DataFrame = {
     // per-doc derivations, so union-of-shingles == shingles-of-union
     val shAll = shingleCut(shingles(corpus, n).union(shingles(delta, n)))
     incrementalEdgesOf(shAll, bandCut(lshBands(shAll, numHashes, rowsPerBand)),
-      delta.select("doc_id"), threshold, maxBucketSize, smallBands)
+      delta.select("doc_id"), threshold, maxBucketSize)
   }
 
   /** The delta-side candidate join + verification shared by the
@@ -897,12 +854,11 @@ object Dedup {
     */
   private def incrementalEdgesOf(
       shAll: DataFrame, bandsAll: DataFrame, deltaIds: DataFrame,
-      threshold: Double, maxBucketSize: Int, smallBands: Int,
-      ckptPruned: Boolean = false): DataFrame = {
+      threshold: Double, maxBucketSize: Int, ckptPruned: Boolean = false): DataFrame = {
     val local = for {
-      (_, delta, bk) <- daysOnDriver(bandsAll, deltaIds, maxBucketSize, smallBands)
-      cand <- bounded(bk.deltaPairs(delta), smallBands)
-      edges <- verifyOnDriver(shAll, cand, bk, maxBucketSize, threshold, smallBands)
+      (_, delta, bk) <- daysOnDriver(bandsAll, deltaIds, maxBucketSize)
+      cand <- bounded(bk.deltaPairs(delta))
+      edges <- verifyOnDriver(shAll, cand, bk, maxBucketSize, threshold)
     } yield edges
     releasedOr(local, shAll, bandsAll)(deltaEdgesOf(shAll,
       Blocking.cap(bandsAll, BandKey, maxBucketSize), deltaIds,
@@ -950,7 +906,7 @@ object Dedup {
     *
     * Same two paths as [[minhashPairs]]. The driver path also fetches the
     * delta's ids (no job when they are a local relation) and the stored
-    * edges under the same 2^17 bound (ids Long/Int and none null; the
+    * edges under the same `bands` bound (ids Long/Int and none null; the
     * stored ends of the band frame's id type), keeps each stored pair
     * that still shares a surviving bucket, and returns those rows
     * followed by the verified delta-touching pairs as one local relation
@@ -959,20 +915,10 @@ object Dedup {
   def revalidatedUnionEdges(
       corpus: DataFrame, delta: DataFrame, corpusEdges: DataFrame,
       n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4,
-      threshold: Double = 0.7, maxBucketSize: Int = NearDupMaxBucket): DataFrame =
-    revalidatedUnionEdges(corpus, delta, corpusEdges, n, numHashes, rowsPerBand,
-      threshold, maxBucketSize, SmallBands)
-
-  /** [[revalidatedUnionEdges]] with the driver-path bound as a parameter
-    * (-1 forces the distributed plan).
-    */
-  private[graft] def revalidatedUnionEdges(
-      corpus: DataFrame, delta: DataFrame, corpusEdges: DataFrame,
-      n: Int, numHashes: Int, rowsPerBand: Int, threshold: Double,
-      maxBucketSize: Int, smallBands: Int): DataFrame = {
+      threshold: Double = 0.7, maxBucketSize: Int = NearDupMaxBucket): DataFrame = {
     val shAll = shingleCut(shingles(corpus, n).union(shingles(delta, n)))
     unionEdgesOf(shAll, bandCut(lshBands(shAll, numHashes, rowsPerBand)),
-      delta.select("doc_id"), Some(corpusEdges), threshold, maxBucketSize, smallBands)
+      delta.select("doc_id"), Some(corpusEdges), threshold, maxBucketSize)
   }
 
   /** The edge set of `nearDupEdges(kept)` (as (i, j) pairs, with
@@ -991,9 +937,9 @@ object Dedup {
     * `deltaIds`, then runs the stored-edge composition.
     */
   private[operators] def unionEdges(kept: DataFrame, deltaIds: DataFrame,
-      stored: Option[DataFrame], maxBucketSize: Int, smallBands: Int): DataFrame = {
+      stored: Option[DataFrame], maxBucketSize: Int): DataFrame = {
     val sh = shingleCut(shingles(kept))
-    unionEdgesOf(sh, bandCut(lshBands(sh)), deltaIds, stored, 0.7, maxBucketSize, smallBands)
+    unionEdgesOf(sh, bandCut(lshBands(sh)), deltaIds, stored, 0.7, maxBucketSize)
   }
 
   /** [[revalidatedUnionEdges]] over a stored [[DedupIndex]] — the corpus
@@ -1001,50 +947,39 @@ object Dedup {
     */
   def revalidatedUnionEdgesIndexed(
       index: DedupIndex, delta: DataFrame, corpusEdges: DataFrame,
-      threshold: Double = 0.7, maxBucketSize: Int = NearDupMaxBucket): DataFrame =
-    revalidatedUnionEdgesIndexed(index, delta, corpusEdges, threshold, maxBucketSize,
-      SmallBands)
-
-  /** [[revalidatedUnionEdgesIndexed]] with the driver-path bound as a
-    * parameter (-1 forces the distributed plan).
-    */
-  private[graft] def revalidatedUnionEdgesIndexed(
-      index: DedupIndex, delta: DataFrame, corpusEdges: DataFrame,
-      threshold: Double, maxBucketSize: Int, smallBands: Int): DataFrame = {
+      threshold: Double = 0.7, maxBucketSize: Int = NearDupMaxBucket): DataFrame = {
     val (shAll, bandsAll) = indexedUnionFrames(index, delta)
     unionEdgesOf(shAll, bandsAll,
-      delta.select("doc_id"), Some(corpusEdges), threshold, maxBucketSize, smallBands,
-      ckptPruned = true)
+      delta.select("doc_id"), Some(corpusEdges), threshold, maxBucketSize, ckptPruned = true)
   }
 
   private def unionEdgesOf(
       shAll: DataFrame, bandsAll: DataFrame, deltaIds: DataFrame,
       stored: Option[DataFrame], threshold: Double, maxBucketSize: Int,
-      smallBands: Int, ckptPruned: Boolean = false): DataFrame = {
+      ckptPruned: Boolean = false): DataFrame = {
     val id = bandsAll.schema("doc_id")
     val local = for {
       storedRows <- stored.fold(Option(Array.empty[Row])) { e =>
         if (Seq("i", "j").exists(c => e.schema(c).dataType != id.dataType)) None
-        else Labelled.fetch(e, s"Dedup.minhash: fetch stored edges <=$smallBands", smallBands,
-          Seq("i", "j"))
+        else Labelled.fetch(e, s"Dedup.minhash: fetch stored edges <=${Labelled.Bands.value}",
+          Labelled.Bands, Seq("i", "j"))
       }
-      (rows, delta, bk) <- daysOnDriver(bandsAll, deltaIds, maxBucketSize, smallBands)
-      fresh <- bounded(bk.deltaPairs(delta), smallBands)
+      (rows, delta, bk) <- daysOnDriver(bandsAll, deltaIds, maxBucketSize)
+      fresh <- bounded(bk.deltaPairs(delta))
       // yesterday's candidates when none are stored: the corpus-only
       // buckets, capped at the corpus-only sizes
       old <- if (stored.isDefined) Some(Array.empty[(Long, Long)])
-        else bounded(DriverBands(rows, maxBucketSize, id, d => !delta(d)).pairs, smallBands)
-      verified <- verifyOnDriver(shAll, old ++ fresh, bk, maxBucketSize, threshold, smallBands)
+        else bounded(DriverBands(rows, maxBucketSize, id, d => !delta(d)).pairs)
+      verified <- verifyOnDriver(shAll, old ++ fresh, bk, maxBucketSize, threshold)
     } yield {
       val ok = verified.select(col("i").cast("long"), col("j").cast("long")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val yesterday = storedRows.toSeq.map(r => (r.getLong(0), r.getLong(1))) ++ old.filter(ok)
-      val kept = (bk.revalidated(yesterday) ++ fresh.filter(ok))
-        .map { case (i, j) => Row(bk.asId(i), bk.asId(j)) }
+      val kept = (bk.revalidated(yesterday) ++ fresh.filter(ok)).map { case (i, j) => Seq(i, j) }
       // a union column is nullable when either side's is
       def field(c: String) = StructField(c, id.dataType,
         stored.exists(_.schema(c).nullable) || id.nullable)
-      shAll.sparkSession.createDataFrame(kept.asJava, StructType(Seq(field("i"), field("j"))))
+      Labelled.local(shAll, StructType(Seq(field("i"), field("j"))), kept)
     }
     releasedOr(local, shAll, bandsAll) {
       val bands = Blocking.cap(bandsAll, BandKey, maxBucketSize)
@@ -1152,7 +1087,7 @@ object Dedup {
     val (shAll, bandsAll) = indexedUnionFrames(index, delta)
     // shAll is a LAZY parquet union here — verify on the pruned ckpt
     incrementalEdgesOf(shAll, bandsAll,
-      delta.select("doc_id"), threshold, maxBucketSize, SmallBands, ckptPruned = true)
+      delta.select("doc_id"), threshold, maxBucketSize, ckptPruned = true)
   }
 
   /** (index ∪ delta) shingle and band frames for the incremental

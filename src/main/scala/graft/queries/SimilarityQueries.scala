@@ -250,7 +250,7 @@ object SimilarityQueries {
 
     "q206_centroid_drift" -> ((spark, dir) => {
       val emb = Tables.load(spark, dir, "embeddings")
-      Similarity.centroidDrift(emb, vecCut(emb)).orderBy("label")
+      Similarity.centroidDrift(emb, deltaCut(emb, "vec_id")).orderBy("label")
     }),
 
     "q31_ann_neighbors" -> ((spark, dir) => {
@@ -344,7 +344,7 @@ object SimilarityQueries {
     // embedding side)
     "q87_ivf_append" -> ((spark, dir) => {
       val emb = Tables.load(spark, dir, "embeddings")
-      val cut = vecCut(emb)
+      val cut = deltaCut(emb, "vec_id")
       val idx = Similarity.loadIvfIndex(spark, corpusIvfDir(spark, dir))
       Similarity.ivfAppend(idx, emb.filter(col("vec_id") >= cut))
         .assigned.select(col("vec_id"), col("cell"))
@@ -380,7 +380,7 @@ object SimilarityQueries {
       val emb = Tables.load(spark, dir, "embeddings")
       Similarity.writeIvfIndex(
         Similarity.ivfTrainedIndex(
-          emb.filter(col("vec_id") < vecCut(emb)), iters = 2), d)
+          emb.filter(col("vec_id") < deltaCut(emb, "vec_id")), iters = 2), d)
     }
 
   def oracles: Map[String, String] = Map(

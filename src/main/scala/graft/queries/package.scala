@@ -10,20 +10,16 @@ package object queries {
     */
   type Q = (SparkSession, String) => DataFrame
 
-  /** The q62/q64 ingest-delta cut: docs with id ≥ floor(0.8 · max id)
+  /** The ingest-delta cut on the Long column `id` (doc_id for q62/q64,
+    * vec_id for q87's embeddings): rows with id ≥ floor(0.8 · max id)
     * play the "newly arrived" role. 0 on an empty table (empty corpus +
     * empty delta → empty result, not a NullPointerException from
     * getLong on a null max). The oracles recompute the identical cut
-    * from their own max(doc_id).
+    * from their own max. Its jobs run under `deltaCut: max(<id>)`.
     */
-  private[queries] def deltaCut(docs: DataFrame): Long = {
-    val r = docs.agg(org.apache.spark.sql.functions.max("doc_id")).head
-    if (r.isNullAt(0)) 0L else math.floor(0.8 * r.getLong(0)).toLong
-  }
-
-  /** The q87 embedding-ingest cut — [[deltaCut]]'s formula on vec_id. */
-  private[queries] def vecCut(emb: DataFrame): Long = {
-    val r = emb.agg(org.apache.spark.sql.functions.max("vec_id")).head
+  private[queries] def deltaCut(df: DataFrame, id: String = "doc_id"): Long = {
+    val r = graft.operators.Labelled(df, s"deltaCut: max($id)")(
+      df.agg(org.apache.spark.sql.functions.max(id)).head())
     if (r.isNullAt(0)) 0L else math.floor(0.8 * r.getLong(0)).toLong
   }
 

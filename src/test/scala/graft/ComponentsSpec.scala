@@ -10,18 +10,22 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-import graft.operators.Components
+import graft.operators.{Components, Labelled}
 
 /** `Components.connected`'s two paths: the driver-side closure for small
-  * edge lists and the distributed min-label fixpoint (reached through the
-  * test-only cap of -1) must agree on rows, schema and the `maxIter`
-  * failure contract.
+  * edge lists and the distributed min-label fixpoint (reached through a
+  * policy whose `edges` bound is -1) must agree on rows, schema and the
+  * `maxIter` failure contract.
   */
 class ComponentsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private val Fixpoint = -1
   private val Cap = 1 << 18
+
+  /** `Components.connected(df, maxIter)` built under the edge bound `cap`. */
+  private def connected(df: DataFrame, maxIter: Int, cap: Int): DataFrame =
+    Labelled.withPolicy(Labelled.Policy(edges = cap))(Components.connected(df, maxIter))
 
   /** Sorted (node, component) rows, ids widened to Long. */
   private def rowsOf(df: DataFrame): Seq[(Long, Long)] =
@@ -69,16 +73,16 @@ class ComponentsSpec extends AnyFunSuite {
   test("property: the driver closure == the fixpoint, rows and maxIter failures (Long and Int ids)") {
     val prop = Prop.forAll(graphGen, Gen.oneOf(false, true)) { (edges, asInt) =>
       val df = edgesDf(edges, asInt)
-      val want = rowsOf(Components.connected(df, 64, Fixpoint))
-      assert(rowsOf(Components.connected(df, 64, Cap)) == want, s"edges $edges")
+      val want = rowsOf(connected(df, 64, Fixpoint))
+      assert(rowsOf(connected(df, 64, Cap)) == want, s"edges $edges")
       // every budget in [2, 12]. Once the fixpoint converges at some
       // budget it runs the same rounds at every larger one, so it is not
       // rerun there.
       var fixConverged = false
       for (m <- 2 to 12) {
-        val small = Try(Components.connected(df, m, Cap))
+        val small = Try(connected(df, m, Cap))
         if (!fixConverged) {
-          val fix = Try(Components.connected(df, m, Fixpoint))
+          val fix = Try(connected(df, m, Fixpoint))
           assert(small.isSuccess == fix.isSuccess, s"maxIter $m edges $edges")
           for (fe <- fix.failed; se <- small.failed) {
             assert(se.getClass == fe.getClass, s"maxIter $m edges $edges")
@@ -99,10 +103,10 @@ class ComponentsSpec extends AnyFunSuite {
     // needs 6 double-hop rounds
     val df = edgesDf((100L until 112L).map(k => (k, k + 1)), asInt = false)
     val msgs = Seq(Cap, Fixpoint).map(cap =>
-      intercept[IllegalStateException](Components.connected(df, 11, cap)).getMessage)
+      intercept[IllegalStateException](connected(df, 11, cap)).getMessage)
     assert(msgs.distinct == Seq(msgs.head) &&
       msgs.head.contains("within 11 label-propagation hops (maxIter=11)"), msgs)
-    val rows = Seq(Cap, Fixpoint).map(cap => rowsOf(Components.connected(df, 12, cap)))
+    val rows = Seq(Cap, Fixpoint).map(cap => rowsOf(connected(df, 12, cap)))
     assert(rows.head == rows.last && rows.head.forall(_._2 == 100L))
   }
 
@@ -116,8 +120,8 @@ class ComponentsSpec extends AnyFunSuite {
       Seq((Option(1L), Option(2L))).toDF("i", "j"),
       Seq((Option(7), Option(3))).toDF("i", "j"))
     for (df <- frames) {
-      val small = Components.connected(df, 25, Cap)
-      val fix = Components.connected(df, 25, Fixpoint)
+      val small = connected(df, 25, Cap)
+      val fix = connected(df, 25, Fixpoint)
       assert(small.schema == fix.schema, s"${df.schema}")
       assert(rowsOf(small) == rowsOf(fix))
     }
@@ -156,7 +160,7 @@ class ComponentsSpec extends AnyFunSuite {
         Components.connected(df).collect().map(_.toSeq).toSet
       }
       assert(descs.contains("Components.connected: round 1"), descs)
-      assert(got == Components.connected(df, 25, Fixpoint).collect().map(_.toSeq).toSet)
+      assert(got == connected(df, 25, Fixpoint).collect().map(_.toSeq).toSet)
     }
     assert(Components.connected(strings).collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
       Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
@@ -178,7 +182,7 @@ class ComponentsSpec extends AnyFunSuite {
       assert(!small.exists(_.startsWith("Components.connected: round")), small)
       assert(sc.getLocalProperty("spark.job.description") == "components-spec caller")
       val (_, fix) = withJobs("components-spec caller") {
-        Components.connected(df, 25, Fixpoint).collect()
+        connected(df, 25, Fixpoint).collect()
       }
       assert(fix.contains("Components.connected: round 1") &&
         fix.contains("Components.connected: round 2"), fix)
@@ -191,6 +195,6 @@ class ComponentsSpec extends AnyFunSuite {
     val (rows, jobs) = TestSpark.jobsDuring(rowsOf(Components.connected(df)))
     assert(jobs.isEmpty, jobs)
     assert(rows == Seq((1L, 1L), (2L, 1L), (3L, 1L), (8L, 8L), (9L, 8L)))
-    assert(rows == rowsOf(Components.connected(df, 25, Fixpoint)))
+    assert(rows == rowsOf(connected(df, 25, Fixpoint)))
   }
 }

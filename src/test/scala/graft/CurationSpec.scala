@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
-import graft.operators.{Curation, Dedup}
+import graft.operators.{Curation, Dedup, Labelled}
 import graft.sources.Tables
 
 /** Laws for the end-to-end curation pass (q48). */
@@ -174,6 +174,12 @@ class CurationSpec extends AnyFunSuite {
   private val Forced = -1
   private val Fetch = s"Curation.gates: fetch |D|<=$Gates"
 
+  /** `body` (a frame's build) under the gates' bound `gates`, the
+    * near-dup bound `bands` and the skew cap `max`.
+    */
+  private def under[T](gates: Int, bands: Int, max: Int = Dedup.NearDupMaxBucket)(body: => T): T =
+    Labelled.withPolicy(Labelled.Policy(docs = gates, bands = bands, maxBucket = max))(body)
+
   /** Rows sorted on their printed form. */
   private def rowsOf(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
@@ -204,14 +210,15 @@ class CurationSpec extends AnyFunSuite {
   private def differential(label: String, corpus: DataFrame, delta: DataFrame,
       max: Int = Dedup.NearDupMaxBucket, driverGates: Boolean = true): DataFrame = {
     val all = corpus.union(delta)
-    val (full, jobs) = TestSpark.jobsDuring(Curation.curate(all, 0.15, Gates, Bound, max))
+    val (full, jobs) = TestSpark.jobsDuring(under(Gates, Bound, max)(Curation.curate(all, 0.15)))
     assert(jobs.contains(Fetch), s"$label: $jobs")
     assert(jobs.exists(_.matches("Curation.gates: \\w+ cut")) != driverGates, s"$label: $jobs")
-    same(s"$label forced curate", Curation.curate(all, 0.15, Forced, Forced, max), full)
-    val stored = Dedup.nearDupEdges(Curation.exactKeepers(corpus), Bound, max)
+    same(s"$label forced curate", under(Forced, Forced, max)(Curation.curate(all, 0.15)), full)
+    val stored = under(Gates, Bound, max)(Dedup.nearDupEdges(Curation.exactKeepers(corpus)))
     for (g <- Seq(Gates, Forced); b <- Seq(Bound, Forced); edges <- Seq(None, Some(stored)))
       same(s"$label incremental gates $g bands $b ${edges.fold("derived")(_ => "stored")}",
-        Curation.curateIncremental(corpus, delta, edges, 0.15, g, b, max), full)
+        under(g, b, max)(edges.fold(Curation.curateIncremental(corpus, delta))(
+          Curation.curateIncremental(corpus, delta, _, 0.15))), full)
     full
   }
 
@@ -275,7 +282,7 @@ class CurationSpec extends AnyFunSuite {
     differential("null doc_id", corpus, withNull, driverGates = false)
     val all = corpus.union(delta)
     val (over, jobs) =
-      TestSpark.jobsDuring(Curation.curate(all, 0.15, 5, Bound, Dedup.NearDupMaxBucket))
+      TestSpark.jobsDuring(under(5, Bound)(Curation.curate(all, 0.15)))
     assert(jobs.contains("Curation.gates: fetch |D|<=5") && jobs.exists(_.endsWith(" cut")), jobs)
     same("over the bound", over, Curation.curate(all))
   }
@@ -288,7 +295,7 @@ class CurationSpec extends AnyFunSuite {
     val (corpus0, delta0) = crafted(asInt = false)
     val corpus = corpus0.union(docsDf((0 until 4).map(k => (Long.box(100L + k), s"$boiler tail$k"))))
     val delta = delta0.union(docsDf((4 until 12).map(k => (Long.box(100L + k), s"$boiler tail$k"))))
-    val stored = Dedup.nearDupEdges(Curation.exactKeepers(corpus), Bound, 5)
+    val stored = under(Gates, Bound, 5)(Dedup.nearDupEdges(Curation.exactKeepers(corpus)))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(stored.count(_._1 >= 100L) == 6, s"yesterday's boilerplate edges: ${stored.toSeq}")
     val full = differential("cap 5", corpus, delta, max = 5)

@@ -8,11 +8,11 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
-import graft.operators.Dedup
+import graft.operators.{Dedup, Labelled}
 
 /** The canonical MinHash paths' two renderings — bands capped, paired and
-  * verified on the driver, or the distributed plan (forced by the
-  * test-only bound of -1) — must agree row for row and on the schema for
+  * verified on the driver, or the distributed plan (forced by a policy
+  * whose `bands` bound is -1) — must agree row for row and on the schema for
   * every entry point that takes them, and both must keep the
   * incremental ≡ from-scratch law.
   */
@@ -22,6 +22,10 @@ class NearDupDriverSpec extends AnyFunSuite {
   private val Forced = -1
   private val Bound = 1 << 17
   private val Max = Dedup.NearDupMaxBucket
+
+  /** `body` (a frame's build) under the near-dup bound `bands`. */
+  private def under[T](bands: Int)(body: => T): T =
+    Labelled.withPolicy(Labelled.Policy(bands = bands))(body)
 
   private def isLocal(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
@@ -81,23 +85,23 @@ class NearDupDriverSpec extends AnyFunSuite {
       df.select("i", "j").collect().map(r => (r.get(0).toString.toLong, r.get(1).toString.toLong)).toSet
 
     same(s"$label minhashPairs",
-      Dedup.minhashPairs(docs, 3, 16, 4, 0.7, max, Bound),
-      Dedup.minhashPairs(docs, 3, 16, 4, 0.7, max, Forced))
+      under(Bound)(Dedup.minhashPairs(docs, 3, 16, 4, 0.7, max)),
+      under(Forced)(Dedup.minhashPairs(docs, 3, 16, 4, 0.7, max)))
     if (max == Max)
-      same(s"$label nearDupEdges", Dedup.nearDupEdges(docs, Bound),
-        Dedup.nearDupEdges(docs, Forced))
+      same(s"$label nearDupEdges", under(Bound)(Dedup.nearDupEdges(docs)),
+        under(Forced)(Dedup.nearDupEdges(docs)))
     same(s"$label incrementalNearDupEdges",
-      Dedup.incrementalNearDupEdges(corpus, delta, 3, 16, 4, 0.7, max, Bound),
-      Dedup.incrementalNearDupEdges(corpus, delta, 3, 16, 4, 0.7, max, Forced))
+      under(Bound)(Dedup.incrementalNearDupEdges(corpus, delta, 3, 16, 4, 0.7, max)),
+      under(Forced)(Dedup.incrementalNearDupEdges(corpus, delta, 3, 16, 4, 0.7, max)))
 
     val dir = java.nio.file.Files.createTempDirectory("graft_nd_driver_").toString
     Dedup.writeIndex(corpus, dir)
     val index = Dedup.loadIndex(spark, dir)
     val union = Seq(Bound, Forced).map { b =>
-      val stored = Dedup.minhashPairs(corpus, 3, 16, 4, 0.7, max, b)
-      val fromScratch = pairs(Dedup.minhashPairs(docs, 3, 16, 4, 0.7, max, b))
-      val inc = Dedup.revalidatedUnionEdges(corpus, delta, stored, 3, 16, 4, 0.7, max, b)
-      val viaIndex = Dedup.revalidatedUnionEdgesIndexed(index, delta, stored, 0.7, max, b)
+      val stored = under(b)(Dedup.minhashPairs(corpus, 3, 16, 4, 0.7, max))
+      val fromScratch = pairs(under(b)(Dedup.minhashPairs(docs, 3, 16, 4, 0.7, max)))
+      val inc = under(b)(Dedup.revalidatedUnionEdges(corpus, delta, stored, 3, 16, 4, 0.7, max))
+      val viaIndex = under(b)(Dedup.revalidatedUnionEdgesIndexed(index, delta, stored, 0.7, max))
       // the incremental ≡ from-scratch law, on each path
       assert(pairs(inc) == fromScratch, s"$label bound $b: incremental drifts")
       assert(pairs(viaIndex) == fromScratch, s"$label bound $b: indexed drifts")
@@ -111,7 +115,7 @@ class NearDupDriverSpec extends AnyFunSuite {
     for (seed <- Seq(11, 12)) {
       val docs = corpus(seed)
       val df = docsDf(docs)
-      val found = rowsOf(Dedup.minhashPairs(df, 3, 16, 4, 0.7, Max, Bound))
+      val found = rowsOf(under(Bound)(Dedup.minhashPairs(df, 3, 16, 4, 0.7, Max)))
       // 16 planted pairs; a short doc with two words replaced can fall
       // under 0.7, so most, not all, verify
       assert(found.size >= 8, s"seed $seed: planted pairs should verify, got ${found.size}")
@@ -129,8 +133,8 @@ class NearDupDriverSpec extends AnyFunSuite {
     val df = docsDf(docs)
     differential("cap 5", df, cut = 1004L, max = 5)
     differential("no cap", df, cut = 1004L, max = 0)
-    val capped = rowsOf(Dedup.minhashPairs(df, 3, 16, 4, 0.7, 5, Bound))
-    val uncapped = rowsOf(Dedup.minhashPairs(df, 3, 16, 4, 0.7, 0, Bound))
+    val capped = rowsOf(under(Bound)(Dedup.minhashPairs(df, 3, 16, 4, 0.7, 5)))
+    val uncapped = rowsOf(under(Bound)(Dedup.minhashPairs(df, 3, 16, 4, 0.7, 0)))
     assert(!capped.exists(_.head.toString.toLong >= 1000L), "the hot bucket must be dropped")
     assert(uncapped.count(_.head.toString.toLong >= 1000L) == 66)
   }
@@ -140,11 +144,12 @@ class NearDupDriverSpec extends AnyFunSuite {
     differential("int ids", docsDf(docs, asInt = true),
       cut = docs.map(_._1).sorted.apply(docs.size / 2))
     val empty = docsDf(Nil)
-    same("empty minhashPairs", Dedup.minhashPairs(empty, 3, 16, 4, 0.7, Max, Bound),
-      Dedup.minhashPairs(empty, 3, 16, 4, 0.7, Max, Forced), anyPlan = true)
+    same("empty minhashPairs", under(Bound)(Dedup.minhashPairs(empty, 3, 16, 4, 0.7, Max)),
+      under(Forced)(Dedup.minhashPairs(empty, 3, 16, 4, 0.7, Max)), anyPlan = true)
     same("empty incremental",
-      Dedup.incrementalNearDupEdges(empty, empty, 3, 16, 4, 0.7, Max, Bound),
-      Dedup.incrementalNearDupEdges(empty, empty, 3, 16, 4, 0.7, Max, Forced), anyPlan = true)
+      under(Bound)(Dedup.incrementalNearDupEdges(empty, empty, 3, 16, 4, 0.7, Max)),
+      under(Forced)(Dedup.incrementalNearDupEdges(empty, empty, 3, 16, 4, 0.7, Max)),
+      anyPlan = true)
   }
 
   test("a null doc_id takes the distributed fallback and returns its answer") {
@@ -153,15 +158,16 @@ class NearDupDriverSpec extends AnyFunSuite {
       (docs.map { case (id, t) => Row(id, t) } :+ Row(null, docs.head._2)).asJava,
       StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
     val (got, jobs) = TestSpark.jobsDuring(
-      Dedup.minhashPairs(withNull, 3, 16, 4, 0.7, Max, Bound))
+      under(Bound)(Dedup.minhashPairs(withNull, 3, 16, 4, 0.7, Max)))
     assert(!isLocal(got), "a null doc_id must fall back")
     assert(jobs.exists(_.startsWith("Dedup.minhash: fetch bands")), jobs)
     assert(!jobs.exists(_.startsWith("Dedup.minhash: verify")), jobs)
-    assert(got.schema == Dedup.minhashPairs(withNull, 3, 16, 4, 0.7, Max, Forced).schema)
-    assert(rowsOf(got) == rowsOf(Dedup.minhashPairs(withNull, 3, 16, 4, 0.7, Max, Forced)))
+    assert(got.schema == under(Forced)(Dedup.minhashPairs(withNull, 3, 16, 4, 0.7, Max)).schema)
+    assert(rowsOf(got) ==
+      rowsOf(under(Forced)(Dedup.minhashPairs(withNull, 3, 16, 4, 0.7, Max))))
     val cut = docs.map(_._1).sorted.apply(docs.size / 2)
-    val inc = Dedup.incrementalNearDupEdges(withNull.filter(col("doc_id") < cut),
-      withNull.filter(col("doc_id") >= cut || col("doc_id").isNull), 3, 16, 4, 0.7, Max, Bound)
+    val inc = under(Bound)(Dedup.incrementalNearDupEdges(withNull.filter(col("doc_id") < cut),
+      withNull.filter(col("doc_id") >= cut || col("doc_id").isNull), 3, 16, 4, 0.7, Max))
     assert(!isLocal(inc), "a null delta doc_id must fall back")
   }
 
@@ -178,19 +184,21 @@ class NearDupDriverSpec extends AnyFunSuite {
       assert(got.schema == forced.schema, s"$label: ${got.schema} vs ${forced.schema}")
       assert(rowsOf(got) == rowsOf(forced), s"$label: rows differ")
     }
-    val forced = Dedup.minhashPairs(df, 3, 16, 4, 0.7, Max, Forced)
-    val stored = Dedup.minhashPairs(corpusDf, 3, 16, 4, 0.7, Max, Forced)
+    val forced = under(Forced)(Dedup.minhashPairs(df, 3, 16, 4, 0.7, Max))
+    val stored = under(Forced)(Dedup.minhashPairs(corpusDf, 3, 16, 4, 0.7, Max))
     for ((bound, overflowing) <- Seq(100 -> "bands", 300 -> "verify")) {
-      val (got, jobs) = TestSpark.jobsDuring(Dedup.minhashPairs(df, 3, 16, 4, 0.7, Max, bound))
+      val (got, jobs) =
+        TestSpark.jobsDuring(under(bound)(Dedup.minhashPairs(df, 3, 16, 4, 0.7, Max)))
       assert(jobs.exists(_.startsWith("Dedup.minhash: fetch bands")), jobs)
       assert(jobs.exists(_.startsWith("Dedup.minhash: verify")) == (overflowing == "verify"), jobs)
       fallsBack(s"$overflowing minhashPairs", got, forced)
       fallsBack(s"$overflowing incrementalNearDupEdges",
-        Dedup.incrementalNearDupEdges(corpusDf, delta, 3, 16, 4, 0.7, Max, bound),
-        Dedup.incrementalNearDupEdges(corpusDf, delta, 3, 16, 4, 0.7, Max, Forced))
-      val inc = Dedup.revalidatedUnionEdges(corpusDf, delta, stored, 3, 16, 4, 0.7, Max, bound)
+        under(bound)(Dedup.incrementalNearDupEdges(corpusDf, delta, 3, 16, 4, 0.7, Max)),
+        under(Forced)(Dedup.incrementalNearDupEdges(corpusDf, delta, 3, 16, 4, 0.7, Max)))
+      val inc =
+        under(bound)(Dedup.revalidatedUnionEdges(corpusDf, delta, stored, 3, 16, 4, 0.7, Max))
       fallsBack(s"$overflowing revalidatedUnionEdges", inc,
-        Dedup.revalidatedUnionEdges(corpusDf, delta, stored, 3, 16, 4, 0.7, Max, Forced))
+        under(Forced)(Dedup.revalidatedUnionEdges(corpusDf, delta, stored, 3, 16, 4, 0.7, Max)))
       assert(rowsOf(inc.select("i", "j")) == rowsOf(forced.select("i", "j")),
         s"$overflowing: incremental drifts from scratch")
     }
@@ -205,7 +213,7 @@ class NearDupDriverSpec extends AnyFunSuite {
     sc.setJobDescription("driver-spec caller")
     try {
       val (rows, jobs) = TestSpark.jobsDuring(
-        rowsOf(Dedup.minhashPairs(df, 3, 16, 4, 0.7, 5, Bound)))
+        rowsOf(under(Bound)(Dedup.minhashPairs(df, 3, 16, 4, 0.7, 5))))
       assert(rows.map(_.take(2).map(_.toString.toLong)) == Seq(Seq(1L, 2L)), rows)
       assert(jobs.contains(s"Dedup.minhash: fetch bands |B|<=$Bound"), jobs)
       assert(jobs.contains("Dedup.minhash: verify 1 candidates over 2 docs; " +

@@ -133,4 +133,26 @@ class ParSpec extends AnyFunSuite {
       assert(sc.getJobTags() == tagsBefore)
     } finally sc.removeSparkListener(listener)
   }
+
+  test("a Labelled policy override is restored after its body, also on a throw, and reaches Par.both's helper") {
+    import graft.operators.Labelled
+    import graft.operators.Labelled.{Bands, Docs, Edges, Policy}
+    val default = Labelled.policy
+    assert(default == Policy() && Edges.value == (1 << 18) && Bands.value == (1 << 17) &&
+      Docs.value == (1 << 13) && default.maxBucket == graft.operators.Dedup.NearDupMaxBucket)
+    val forced = Policy(edges = -1, bands = -1, docs = -1, maxBucket = 5)
+    // both branches read the override, the helper on the thread both() starts
+    val (a, b) = Labelled.withPolicy(forced)(
+      Par.both((Labelled.policy, Bands.value), (Labelled.policy, Bands.value)))
+    assert(a == (forced, -1) && b == (forced, -1))
+    assert(Labelled.policy == default)
+    // a nested override ends with its own body
+    Labelled.withPolicy(forced) {
+      assert(Labelled.withPolicy(Policy(docs = 5))(Docs.value) == 5)
+      assert(Labelled.policy == forced)
+    }
+    val boom = new IllegalStateException("body failed")
+    assert(intercept[IllegalStateException](Labelled.withPolicy(forced)(throw boom)) eq boom)
+    assert(Labelled.policy == default)
+  }
 }

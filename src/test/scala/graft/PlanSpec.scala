@@ -422,8 +422,8 @@ class PlanSpec extends AnyFunSuite {
     // (the hot-key broadcast guard is gated above through
     // minhashCandidates, which the driver path does not touch)
     import org.apache.spark.sql.functions.col
-    import graft.operators.Dedup
-    val Forced = -1
+    import graft.operators.{Dedup, Labelled}
+    val Forced = Labelled.Policy(bands = -1)
     def noQuadratic(label: String, plan: String): Unit =
       assert(!plan.contains("BroadcastNestedLoopJoin BuildRight, Inner") &&
         !plan.contains("BroadcastNestedLoopJoin BuildLeft, Inner") &&
@@ -437,14 +437,14 @@ class PlanSpec extends AnyFunSuite {
         s"$label skew guard shuffles instead of broadcasting: ${bad.mkString("; ")}")
     }
     val docs = graft.sources.Tables.load(spark, TestSpark.Sf0001, "documents")
-    val pairs = executedPlan(
-      Dedup.minhashPairs(docs, 3, 16, 4, 0.7, Dedup.NearDupMaxBucket, Forced))
+    val pairs = executedPlan(Labelled.withPolicy(Forced)(
+      Dedup.minhashPairs(docs, 3, 16, 4, 0.7, Dedup.NearDupMaxBucket)))
     noQuadratic("minhashPairs", pairs)
     noShuffledAnti("minhashPairs", pairs)
     val nf = 400L
-    noQuadratic("incrementalNearDupEdges", executedPlan(Dedup.incrementalNearDupEdges(
-      docs.filter(col("doc_id") < nf), docs.filter(col("doc_id") >= nf),
-      3, 16, 4, 0.7, Dedup.NearDupMaxBucket, Forced)))
+    noQuadratic("incrementalNearDupEdges", executedPlan(Labelled.withPolicy(Forced)(
+      Dedup.incrementalNearDupEdges(docs.filter(col("doc_id") < nf),
+        docs.filter(col("doc_id") >= nf), 3, 16, 4, 0.7, Dedup.NearDupMaxBucket))))
   }
 
   test("Spread reads planned splits: no job for a derived pipeline, same decisions") {
