@@ -80,11 +80,7 @@ object BandAgreement {
     require(args.length >= 2,
       "usage: BandAgreement <outPath> <dir>=<relScale> [<dir>=<relScale> ...]")
     val outPath = args(0)
-    val dirs: Seq[(String, Double)] = args.drop(1).toSeq.map { a =>
-      val i = a.lastIndexOf('=')
-      require(i > 0, s"bad dir spec: $a")
-      (a.take(i), a.drop(i + 1).toDouble)
-    }.sortBy(_._2)
+    val dirs = Bench.dirScales(args.drop(1).toSeq)
 
     val targets = sys.env.getOrElse("SPARK_GRAFT_BAND_TARGETS", "250,2000,8000")
       .split(',').map(_.trim.toLong).toSeq.sorted

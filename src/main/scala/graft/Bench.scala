@@ -53,9 +53,10 @@ object Bench {
 
   /** JSON number/string rendering shared by the full record and the
     * compact line — ONE escaping definition, so the two can never
-    * diverge into one parseable and one malformed output.
+    * diverge into one parseable and one malformed output. ScaleBench and
+    * IngestBench format their seconds with the same `num`.
     */
-  private def num(v: Double): String =
+  private[graft] def num(v: Double): String =
     String.format(Locale.ROOT, "%.3f", Double.box(v))
 
   private def jstr(s: String): String =
@@ -117,6 +118,54 @@ object Bench {
     spark.catalog.clearCache()
     graft.operators.Ckpt.releaseGraftStorage(spark)
     t
+  }
+
+  /** One untimed warm-up of `once`, then the min of `runs` timed runs:
+    * the protocol of ScaleBench's and IngestBench's points (a scaling or
+    * probe-cost curve wants the noise floor; a hot repeat can lift a
+    * min, never hide a real cost).
+    */
+  private[graft] def warmMin(runs: Int)(once: () => Double): Double = {
+    require(runs >= 1, s"runs must be >= 1, got $runs")
+    once()
+    Seq.fill(runs)(once()).min
+  }
+
+  /** `<dir>=<relScale>` arguments (ScaleBench, BandAgreement), in scale
+    * order. The last '=' splits, so a dir may itself contain one.
+    */
+  private[graft] def dirScales(specs: Seq[String]): Seq[(String, Double)] =
+    specs.map { a =>
+      val i = a.lastIndexOf('=')
+      require(i > 0, s"bad dir spec: $a")
+      (a.take(i), a.drop(i + 1).toDouble)
+    }.sortBy(_._2)
+
+  private def historyPath: String =
+    sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "BENCH_HISTORY.jsonl")
+
+  /** Append the one-line JSON record `line`, stamped with `at_ms`, to
+    * the cumulative bench history (SPARK_GRAFT_BENCH_HISTORY, default
+    * BENCH_HISTORY.jsonl). A failed append is logged under `tag`, never
+    * fatal: the record itself is already written.
+    */
+  private def appendHistory(tag: String, line: String): Unit =
+    try java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(historyPath),
+      s"""{"at_ms":${System.currentTimeMillis()},${line.drop(1)}""" + "\n",
+      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    catch { case e: Throwable => System.err.println(s"[$tag] history append failed: $e") }
+
+  /** Write `line` to `outPath` (parent dirs created, previous content
+    * replaced), then append it to the bench history. Records with their
+    * own "metric" never feed [[historyMedians]], which reads only lines
+    * whose "sf" matches a bench sf-dir.
+    */
+  private[graft] def writeRecord(tag: String, outPath: String, line: String): Unit = {
+    val out = java.nio.file.Paths.get(outPath)
+    Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
+    java.nio.file.Files.writeString(out, line + "\n")
+    appendHistory(tag, line)
   }
 
   /** The interleaved-pass measurement core, pure over an injected
@@ -215,8 +264,7 @@ object Bench {
 
     // history medians load BEFORE measuring: the contamination guard
     // judges each candidate record against them at capture time
-    val hist = sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "BENCH_HISTORY.jsonl")
-    val histMed = historyMedians(hist, sfDir)
+    val histMed = historyMedians(historyPath, sfDir)
     // the record is contaminated when ANY query reads > 3× its own
     // cross-round history median, or the suite's medians run > 25% hot
     // against this run's own mins (the r12 signature: median 35% above
@@ -305,11 +353,7 @@ object Bench {
     } catch { case e: Throwable => System.err.println(s"[bench] results.json write failed: $e") }
     // cumulative per-run history so round-over-round per-query regressions
     // are machine-diffable (driver reads the stdout line; this appends)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(hist),
-      s"""{"at_ms":${System.currentTimeMillis()},${line.drop(1)}""" + "\n",
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    catch { case e: Throwable => System.err.println(s"[bench] history append failed: $e") }
+    appendHistory("bench", line)
     spark.stop()
     // The full record is printed first for humans reading the log...
     println(line)

@@ -26,7 +26,7 @@ object Graft {
     * codegen-thrash regression reappears looking like host noise (26
     * false >2× readings in that incident). Harnesses whose OUTPUT is a
     * measurement or a correctness record (Bench, Verify, ScaleBench,
-    * IngestBench, SkewScaleBench) pass `failHard = true` and die here
+    * IngestBench, BandAgreement) pass `failHard = true` and die here
     * rather than emit poisoned records; interactive CLIs keep the
     * warning.
     */

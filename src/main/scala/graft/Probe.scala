@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 import java.util.Locale
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Optimization-round measurement probe (guide §1: measure first).
@@ -19,6 +21,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * plan can't show — how many actions an operator really fires (each
   * `localCheckpoint` is an extra job) and how many bytes actually
   * cross an exchange at this sf.
+  *
+  * A query that throws prints `[probe] <name> ERROR <class>: <message>`
+  * and the list goes on; the exit status is 1 if any query failed.
   *
   * Diagnostic tool only: never part of the bench record or any gate.
   */
@@ -65,26 +70,40 @@ object Probe {
     val spark = Graft.session(appName = "graft-probe")
     val counters = new Counters
     spark.sparkContext.addSparkListener(counters)
-    for (name <- names) {
-      val fn = SparkEntry.queries(name)
-      spark.sparkContext.setJobDescription(name)
-      // plan capture (fresh frame; operators may persist during build)
-      val plan = fn(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      Files.writeString(Paths.get(planDir, s"$name.txt"), plan)
-      spark.catalog.clearCache()
-      graft.operators.Ckpt.releaseGraftStorage(spark)
-      // one untimed warm-up + `reps` timed runs of the Bench protocol
-      Bench.timeOnce(spark, sfDir, fn)
-      val ts = (1 to reps).map { _ =>
-        counters.reset()
-        val t = Bench.timeOnce(spark, sfDir, fn)
-        println(f"[probe] $name rep ${t}%.3fs ${counters.line}")
-        t
+    // a failing query costs only itself: one ERROR line (which
+    // dev/scaling_cores.py's MEDIAN pattern skips), its frames released,
+    // and the exit status once the rest of the list has run
+    val failed = names.filterNot { name =>
+      try {
+        val fn = SparkEntry.queries(name)
+        spark.sparkContext.setJobDescription(name)
+        // plan capture (fresh frame; operators may persist during build)
+        val plan = fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        Files.writeString(Paths.get(planDir, s"$name.txt"), plan)
+        spark.catalog.clearCache()
+        graft.operators.Ckpt.releaseGraftStorage(spark)
+        // one untimed warm-up + `reps` timed runs of the Bench protocol
+        Bench.timeOnce(spark, sfDir, fn)
+        val ts = (1 to reps).map { _ =>
+          counters.reset()
+          val t = Bench.timeOnce(spark, sfDir, fn)
+          println(f"[probe] $name rep ${t}%.3fs ${counters.line}")
+          t
+        }
+        val med = ts.sorted.apply(ts.size / 2)
+        println(f"[probe] $name MEDIAN ${med}%.3fs MIN ${ts.min}%.3fs")
+        true
+      } catch {
+        case NonFatal(e) =>
+          val msg = String.valueOf(e.getMessage).replaceAll("\\s+", " ")
+          println(s"[probe] $name ERROR ${e.getClass.getName}: $msg")
+          spark.catalog.clearCache()
+          graft.operators.Ckpt.releaseGraftStorage(spark)
+          false
       }
-      val med = ts.sorted.apply(ts.size / 2)
-      println(f"[probe] $name MEDIAN ${med}%.3fs MIN ${ts.min}%.3fs")
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

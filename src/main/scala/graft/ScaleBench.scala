@@ -1,7 +1,5 @@
 package graft
 
-import java.util.Locale
-
 /** Scale-decade measurement harness (VERDICT r5 ask #4): run the
   * scale-bearing query tiers at several corpus scales and fit a
   * per-query scaling exponent, so "would survive 100×" stops being a
@@ -15,8 +13,9 @@ import java.util.Locale
   * Protocol: per (dir, query) — 1 warm-up, then `SPARK_GRAFT_SCALE_RUNS`
   * (default 2) timed runs under [[Bench.timeOnce]] (same noop-sink +
   * cache-release protocol as the official bench); the MIN is recorded
-  * (scaling fits want the noise floor, not the median — a hot repeat
-  * can only raise a min's exponent estimate, never hide a real one).
+  * by [[Bench.warmMin]] (scaling fits want the noise floor, not the
+  * median — a hot repeat can only raise a min's exponent estimate,
+  * never hide a real one).
   * The exponent is the least-squares slope of log t over log scale
   * across the points where t ≥ 0.3 s (below that, fixed session/plan
   * overhead dominates and a slope says nothing about the data path);
@@ -256,11 +255,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: ScaleBench <outPath> <dir>=<relScale> <dir>=<relScale> ...")
     val outPath = args(0)
-    val dirs: Seq[(String, Double)] = args.drop(1).toSeq.map { a =>
-      val i = a.lastIndexOf('=')
-      require(i > 0, s"bad dir spec: $a")
-      (a.take(i), a.drop(i + 1).toDouble)
-    }.sortBy(_._2)
+    val dirs = Bench.dirScales(args.drop(1).toSeq)
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt
     val names = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
@@ -278,25 +273,23 @@ object ScaleBench {
       (dir, scale) <- dirs
       name <- names
     } yield {
-      Bench.timeOnce(spark, dir, qs(name)) // warm-up
-      val t = Seq.fill(runs)(Bench.timeOnce(spark, dir, qs(name))).min
+      val t = Bench.warmMin(runs)(() => Bench.timeOnce(spark, dir, qs(name)))
       System.err.println(f"[scalebench] $name @ ${scale}%.3gx: $t%.3f s")
       (name, scale, dir, t)
     }
     spark.stop()
 
-    def num(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))
     val fitted: Seq[(String, Option[Double], Option[Double], String)] = names.map { name =>
       val pts = times.filter(_._1 == name).map(t => (t._2, t._4)).sortBy(_._1)
       val fitPts = pts.filter(_._2 >= 0.3)
-      val tsJson = pts.map { case (s, t) => "\"" + s + "\":" + num(t) }.mkString("{", ",", "}")
+      val tsJson = pts.map { case (s, t) => "\"" + s + "\":" + Bench.num(t) }.mkString("{", ",", "}")
       (name, slope(fitPts), slope(fitPts.takeRight(2)), tsJson)
     }
     val perQuery = fitted.map { case (name, exp, expLast, tsJson) =>
       "\"" + name + "\":{\"times\":" + tsJson +
-        exp.map(e => ",\"exp_fit\":" + num(e)).getOrElse("") +
-        expLast.map(e => ",\"exp_last\":" + num(e)).getOrElse("") +
-        SlopeCeilings.get(name).map(c => ",\"ceiling\":" + num(c)).getOrElse("") + "}"
+        exp.map(e => ",\"exp_fit\":" + Bench.num(e)).getOrElse("") +
+        expLast.map(e => ",\"exp_last\":" + Bench.num(e)).getOrElse("") +
+        SlopeCeilings.get(name).map(c => ",\"ceiling\":" + Bench.num(c)).getOrElse("") + "}"
     }.mkString("{", ",", "}")
     // the slope gate: every fitted exponent checks against its declared
     // ceiling (SlopeCeilings; absent = no declared non-linearity to
@@ -309,21 +302,10 @@ object ScaleBench {
         name -> e
     }
     val violJson = violations
-      .map { case (n, e) => "\"" + n + "\":" + num(e) }.mkString("{", ",", "}")
+      .map { case (n, e) => "\"" + n + "\":" + Bench.num(e) }.mkString("{", ",", "}")
     val scalesJson = dirs.map { case (d, s) => "\"" + s + "\":\"" + d + "\"" }.mkString("{", ",", "}")
     val line = s"""{"metric":"scaling","unit":"sec","runs":$runs,"scales":$scalesJson,"ceiling_violations":$violJson,"queries":$perQuery}"""
-
-    val out = java.nio.file.Paths.get(outPath)
-    Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.writeString(out, line + "\n")
-    // the scaling record joins the cumulative bench history (distinct
-    // "metric" — Bench.historyMedians only reads lines whose "sf"
-    // matches a bench sf-dir, so these lines never pollute medians)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "BENCH_HISTORY.jsonl")),
-      s"""{"at_ms":${System.currentTimeMillis()},${line.drop(1)}""" + "\n",
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    catch { case e: Throwable => System.err.println(s"[scalebench] history append failed: $e") }
+    Bench.writeRecord("scalebench", outPath, line)
     println(line)
     if (violations.nonEmpty) {
       System.err.println("[scalebench] SLOPE CEILING VIOLATIONS: " +

@@ -3,7 +3,7 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 import scala.util.DynamicVariable
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
@@ -19,8 +19,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   * of running their distributed plans.
   */
 private[graft] object Labelled {
-  def apply[T](df: DataFrame, what: String)(body: => T): T = {
-    val (sc, key) = (df.sparkSession.sparkContext, "spark.job.description")
+  def apply[T](df: DataFrame, what: String)(body: => T): T =
+    apply(df.sparkSession, what)(body)
+
+  def apply[T](spark: SparkSession, what: String)(body: => T): T = {
+    val (sc, key) = (spark.sparkContext, "spark.job.description")
     val prev = sc.getLocalProperty(key)
     sc.setJobDescription(what)
     try body finally sc.setLocalProperty(key, prev)

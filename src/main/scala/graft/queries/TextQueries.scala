@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Bpe, Components, Dedup, Multimodal, TextAnalysis, TextIndex}
 import graft.sources.Tables
@@ -353,37 +354,8 @@ object TextQueries {
     // tier, so the fused report cannot disagree with the per-tier gates
     "q188_source_datasheet" -> ((spark, dir) => {
       val docs = Tables.load(spark, dir, "documents")
-      val rich = TextAnalysis.lexicalRichness(docs)
-        .select("source", "n_docs", "n_tokens", "ttr_ppm", "hapax_ppm")
-      val zipf = TextAnalysis.zipfProfile(docs)
-        .select(col("source"), col("top10_ppm"))
-      val cls = TextAnalysis.charClassProfile(docs)
-        .select(col("source"), col("alpha_ppm"), col("other_ppm"))
-      val ks = TextAnalysis.lengthKsDrift(docs)
-        .select(col("source"), col("d_ppm").as("ks_ppm"))
-      val pur = TextAnalysis.languageId(docs, k = 200)
-        .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .groupBy("source")
-        .agg(sum(when(col("pred_lang") === col("lang"), 1L).otherwise(0L))
-          .as("n_match"))
-      val dsrc = docs.select(col("doc_id"), col("source"))
-        .join(Dedup.nearDupEdges(docs)
-          .select(col("j").as("doc_id")).distinct(), Seq("doc_id"))
-        .groupBy("source").agg(count(lit(1)).as("n_dropped"))
-      rich
-        .join(zipf, Seq("source"), "left")
-        .join(cls, Seq("source"), "left")
-        .join(ks, Seq("source"), "left")
-        .join(pur, Seq("source"), "left")
-        .join(dsrc, Seq("source"), "left")
-        .select(col("source"), col("n_docs"), col("n_tokens"),
-          col("ttr_ppm"), col("hapax_ppm"), col("top10_ppm"),
-          col("alpha_ppm"), col("other_ppm"), col("ks_ppm"),
-          expr("(coalesce(n_match, 0) * 1000000) div n_docs")
-            .as("lang_match_ppm"),
-          expr("(coalesce(n_dropped, 0) * 1000000) div n_docs")
-            .as("dup_drop_ppm"))
-        .orderBy("source")
+      sourceDatasheetOf(docs, TextAnalysis.languageId(docs, k = 200),
+        Dedup.nearDupEdges(docs))
     }),
 
     // the STORED-ARTIFACT rendering of q188 (VERDICT r11 ask #4): the
@@ -397,37 +369,9 @@ object TextQueries {
     // recomputed, driver-enforced.
     "q220_source_datasheet_stored" -> ((spark, dir) => {
       val docs = Tables.load(spark, dir, "documents")
-      val rich = TextAnalysis.lexicalRichness(docs)
-        .select("source", "n_docs", "n_tokens", "ttr_ppm", "hapax_ppm")
-      val zipf = TextAnalysis.zipfProfile(docs)
-        .select(col("source"), col("top10_ppm"))
-      val cls = TextAnalysis.charClassProfile(docs)
-        .select(col("source"), col("alpha_ppm"), col("other_ppm"))
-      val ks = TextAnalysis.lengthKsDrift(docs)
-        .select(col("source"), col("d_ppm").as("ks_ppm"))
-      val pur = spark.read.parquet(s"${langPredDir(spark, dir)}/langpred")
-        .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .groupBy("source")
-        .agg(sum(when(col("pred_lang") === col("lang"), 1L).otherwise(0L))
-          .as("n_match"))
-      val dsrc = docs.select(col("doc_id"), col("source"))
-        .join(spark.read.parquet(s"${corpusEdgesDir(spark, dir)}/edges")
-          .select(col("j").as("doc_id")).distinct(), Seq("doc_id"))
-        .groupBy("source").agg(count(lit(1)).as("n_dropped"))
-      rich
-        .join(zipf, Seq("source"), "left")
-        .join(cls, Seq("source"), "left")
-        .join(ks, Seq("source"), "left")
-        .join(pur, Seq("source"), "left")
-        .join(dsrc, Seq("source"), "left")
-        .select(col("source"), col("n_docs"), col("n_tokens"),
-          col("ttr_ppm"), col("hapax_ppm"), col("top10_ppm"),
-          col("alpha_ppm"), col("other_ppm"), col("ks_ppm"),
-          expr("(coalesce(n_match, 0) * 1000000) div n_docs")
-            .as("lang_match_ppm"),
-          expr("(coalesce(n_dropped, 0) * 1000000) div n_docs")
-            .as("dup_drop_ppm"))
-        .orderBy("source")
+      sourceDatasheetOf(docs,
+        spark.read.parquet(s"${langPredDir(spark, dir)}/langpred"),
+        spark.read.parquet(s"${corpusEdgesDir(spark, dir)}/edges"))
     }),
 
     // near-dup cluster provenance: per (cluster_size, distinct
@@ -659,6 +603,47 @@ object TextQueries {
         .select("doc_id", "lang", "pred_lang")
         .write.mode("overwrite").parquet(s"$d/langpred")
     }
+
+  /** q188/q220: the fused per-source datasheet over the per-doc language
+    * predictions (doc_id, lang, pred_lang) and the near-dup edge
+    * relation (j = the dropped doc). ONE definition so the inline and
+    * stored renderings cannot drift. Both inputs are by-name: each is
+    * built where the inline rendering always built it, after the
+    * single-scan tiers.
+    */
+  private def sourceDatasheetOf(docs: DataFrame, preds: => DataFrame,
+      edges: => DataFrame): DataFrame = {
+    val rich = TextAnalysis.lexicalRichness(docs)
+      .select("source", "n_docs", "n_tokens", "ttr_ppm", "hapax_ppm")
+    val zipf = TextAnalysis.zipfProfile(docs)
+      .select(col("source"), col("top10_ppm"))
+    val cls = TextAnalysis.charClassProfile(docs)
+      .select(col("source"), col("alpha_ppm"), col("other_ppm"))
+    val ks = TextAnalysis.lengthKsDrift(docs)
+      .select(col("source"), col("d_ppm").as("ks_ppm"))
+    val pur = preds
+      .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
+      .groupBy("source")
+      .agg(sum(when(col("pred_lang") === col("lang"), 1L).otherwise(0L))
+        .as("n_match"))
+    val dsrc = docs.select(col("doc_id"), col("source"))
+      .join(edges.select(col("j").as("doc_id")).distinct(), Seq("doc_id"))
+      .groupBy("source").agg(count(lit(1)).as("n_dropped"))
+    rich
+      .join(zipf, Seq("source"), "left")
+      .join(cls, Seq("source"), "left")
+      .join(ks, Seq("source"), "left")
+      .join(pur, Seq("source"), "left")
+      .join(dsrc, Seq("source"), "left")
+      .select(col("source"), col("n_docs"), col("n_tokens"),
+        col("ttr_ppm"), col("hapax_ppm"), col("top10_ppm"),
+        col("alpha_ppm"), col("other_ppm"), col("ks_ppm"),
+        expr("(coalesce(n_match, 0) * 1000000) div n_docs")
+          .as("lang_match_ppm"),
+        expr("(coalesce(n_dropped, 0) * 1000000) div n_docs")
+          .as("dup_drop_ppm"))
+      .orderBy("source")
+  }
 
   def oracles: Map[String, String] = Map(
     "q157_readability" ->

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Labelled
 
 /** Loaders for the benchmark tables (`/root/testdata/sf<N>/<name>.parquet`).
   *
@@ -26,10 +27,11 @@ object Tables {
     * through double, whose 2^53 exact-integer range epoch-nanosecond
     * values exceed) — the µs boundary at-or-before the ns instant,
     * matching an oracle engine's timeline truncation on either side of
-    * the epoch.
+    * the epoch. The parquet schema job runs under the description
+    * `Tables.load: <name>`; the caller's description is restored.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = Labelled(spark, s"Tables.load: $name")(spark.read.parquet(s"$dir/$name.parquet"))
     if (name == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       df.withColumn("ts", timestamp_micros(expr("(ts - pmod(ts, 1000)) div 1000")))
     else df

@@ -274,4 +274,66 @@ class BenchSpec extends AnyFunSuite {
     val sn = mapper.readTree(small)
     assert(sn.get("queries_omitted").asLong == 0L && sn.get("queries").size() == 5)
   }
+
+  test("warmMin: the warm-up is never counted; the value is the min of N") {
+    // the warm-up is the fastest call: counting it would read 0.01
+    val samples = Iterator(0.01, 5.0, 2.0, 3.0)
+    var calls = 0
+    assert(Bench.warmMin(3)(() => { calls += 1; samples.next() }) == 2.0)
+    assert(calls == 4, "one warm-up + 3 timed runs")
+    intercept[IllegalArgumentException](Bench.warmMin(0)(() => 1.0))
+  }
+
+  test("dirScales: <dir>=<relScale> splits at the last '=', sorts by scale") {
+    assert(Bench.dirScales(Seq("/x/big=10", "/x/a=b=1")) ==
+      Seq(("/x/a=b", 1.0), ("/x/big", 10.0)))
+    intercept[IllegalArgumentException](Bench.dirScales(Seq("/x/noscale")))
+  }
+
+  /** An IngestBench tier with no Spark behind it: batches record their
+    * index, the probe builds nothing, each timed probe reads 1, 2, 3, ...
+    */
+  private def fakeRun(n: Int, compact: Option[(org.apache.spark.sql.SparkSession, String) => Option[Long]])
+      : (Seq[(Int, Double)], Double, Seq[Int], Int) = {
+    val landed = scala.collection.mutable.ListBuffer[Int]()
+    var probes = 0
+    val tier = IngestBench.Tier("fake", "fold", (_, i, _) => landed += i, (_, _) => null, compact)
+    val (points, after) = IngestBench.runTier(tier, new IngestBench.Inputs(null, "", n),
+      "/unused", mk => { mk(); probes += 1; probes.toDouble })
+    (points, after, landed.toSeq, probes)
+  }
+
+  test("IngestBench.runTier: the probe schedule always holds the first and the last batch") {
+    for (n <- Seq(1, 2, 3, 7, 8, 9, 17, 24, 96)) {
+      val (points, after, landed, probes) = fakeRun(n, Some((_, _) => Some(n - 1L)))
+      val at = points.map(_._1)
+      assert(landed == (0 until n), s"every shard lands once, in order (n=$n)")
+      assert(at.head == 1 && at.last == n, s"n=$n: $at")
+      assert(at == at.distinct.sorted && at.size <= 10, s"about 8 sampled points (n=$n): $at")
+      assert(probes == at.size + 1 && after == probes.toDouble,
+        s"one probe per point, then one after the compact (n=$n)")
+    }
+  }
+
+  test("IngestBench.runTier: a compact that does not report the last batch fails loudly") {
+    for (bad <- Seq(None, Some(2L), Some(4L))) {
+      val ex = intercept[IllegalArgumentException](fakeRun(4, Some((_, _) => bad)))
+      assert(ex.getMessage.contains("fake") && ex.getMessage.contains("Some(3)"), ex.getMessage)
+    }
+  }
+
+  test("IngestBench.runTier: a tier with no compact job reports its final fold as after") {
+    val (points, after, _, probes) = fakeRun(5, None)
+    assert(after == points.last._2)
+    assert(probes == points.size, "no probe runs after the last fold")
+  }
+
+  test("IngestBench tiers: record order is the table's, unknown names are rejected") {
+    assert(IngestBench.KnownTiers == Seq("neardup", "ivf", "text", "bloom", "profile",
+      "budget", "valuehist", "centroids", "transitions", "hazard", "imgfeat"))
+    assert(IngestBench.Tiers.filter(_.compact.isEmpty).map(_.name) == Seq("profile"))
+    assert(IngestBench.subset(" profile,neardup,") == Seq("neardup", "profile"))
+    val ex = intercept[IllegalArgumentException](IngestBench.subset("neardup,nosuch"))
+    assert(ex.getMessage.contains("unknown ingest tiers: nosuch"))
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Components, Dedup, RangeJoin, Similarity}
 import graft.sources.Tables
@@ -49,9 +50,28 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   // ---- SkewJoin at scale ----------------------------------------------
 
+  /** events with an injected celebrity key: `pmod(event_id, 5) < 3`
+    * remaps 60% of rows to user -1 at any corpus scale (the shape of the
+    * retired SkewScaleBench, whose record is bench/scaling_r10_skew.json).
+    */
+  private def skewedEvents(dir: String): DataFrame =
+    Tables.load(spark, dir, "events")
+      .select(col("event_id"),
+        when(pmod(col("event_id"), lit(5L)) < 3, lit(-1L))
+          .otherwise(col("user_id")).as("user_id"),
+        col("value"))
+
+  /** per-user profile side derived from the same skewed events: rows
+    * grow with the corpus, columns don't collide with the event side.
+    */
+  private def userProfiles(ev: DataFrame): DataFrame =
+    ev.groupBy("user_id")
+      .agg(count(lit(1)).as("u_events"),
+        sum(expr("CAST(round(value * 100) AS BIGINT)")).as("u_cents"))
+
   test("autoJoin flips broadcast -> salted as the profile side outgrows the budget (the SkewScaleBench shape)") {
-    val ev = SkewScaleBench.skewedEvents(spark, TestSpark.Sf0001)
-    val users = SkewScaleBench.userProfiles(ev)
+    val ev = skewedEvents(TestSpark.Sf0001)
+    val users = userProfiles(ev)
     // the 1x regime: profile side fits the row budget -> broadcast
     val small = operators.SkewJoin.choose(ev, "user_id", users, "user_id",
       broadcastRows = 1000L)

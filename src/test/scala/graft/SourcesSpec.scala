@@ -14,6 +14,20 @@ class SourcesSpec extends AnyFunSuite {
 
   private def tmp(name: String) = s"/tmp/graft_sources/$name"
 
+  test("Tables.load: the parquet schema job is labelled; the caller's description survives") {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("sources-spec caller")
+    try {
+      val (after, jobs) = TestSpark.jobsDuring {
+        Tables.load(spark, TestSpark.Sf0001, "events")
+        sc.getLocalProperty("spark.job.description")
+      }
+      assert(jobs.nonEmpty && jobs.forall(_ == "Tables.load: events"), s"$jobs")
+      assert(after == "sources-spec caller")
+    } finally sc.setLocalProperty("spark.job.description", prev)
+  }
+
   test("csv round-trip: orders survive header+schema read unchanged") {
     val orig = Tables.load(spark, TestSpark.Sf0001, "orders")
     orig.write.mode("overwrite").option("header", "true").csv(tmp("orders_csv"))
