@@ -111,19 +111,27 @@ object Bench {
     */
   private[graft] def timeOnce(
       spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+    timed(spark)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())._2
+
+  /** `body`'s result and its seconds, then the run-boundary cleanup of
+    * [[timeOnce]] outside the timed region: the one timing bracket for
+    * callers that also keep what the run returned (BandAgreement's
+    * curve rows).
+    */
+  private[graft] def timed[A](spark: org.apache.spark.sql.SparkSession)(body: => A): (A, Double) = {
     val t0 = System.nanoTime()
-    fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    val a = body
     val t = (System.nanoTime() - t0) / 1e9
     spark.catalog.clearCache()
     graft.operators.Ckpt.releaseGraftStorage(spark)
-    t
+    (a, t)
   }
 
   /** One untimed warm-up of `once`, then the min of `runs` timed runs:
-    * the protocol of ScaleBench's and IngestBench's points (a scaling or
-    * probe-cost curve wants the noise floor; a hot repeat can lift a
-    * min, never hide a real cost).
+    * the protocol of ScaleBench's and IngestBench's points and of
+    * BandAgreement's curves (a scaling or probe-cost curve wants the
+    * noise floor; a hot repeat can lift a min, never hide a real cost).
     */
   private[graft] def warmMin(runs: Int)(once: () => Double): Double = {
     require(runs >= 1, s"runs must be >= 1, got $runs")

@@ -36,6 +36,24 @@ object MRSpec {
     line.split(" ").toIndexedSeq.map(w => (w.toDouble, 1))
 
   def doubleCountReducer(k: Double, vs: Iterator[Int]): (Double, Long) = (k, vs.size.toLong)
+
+  /** Tokens `word:i` → `(word, i)`: a unique value per emission, so a
+    * reducer can show that each value arrives exactly once.
+    */
+  def tokenizeIndexed(line: String): Seq[(String, Int)] =
+    line.split(" ").toIndexedSeq.filter(_.nonEmpty).map { t =>
+      val i = t.lastIndexOf(':')
+      (t.take(i), t.drop(i + 1).toInt)
+    }
+
+  def valuesReducer(k: String, vs: Iterator[Int]): (String, Seq[Int]) = (k, vs.toSeq.sorted)
+
+  /** Reads no value of "hot", one of "warm", every value of the rest. */
+  def partialReducer(k: String, vs: Iterator[Int]): (String, Long) = k match {
+    case "hot" => (k, 0L)
+    case "warm" => (k, vs.take(1).size.toLong)
+    case _ => (k, vs.size.toLong)
+  }
 }
 
 class MRSpec extends AnyFunSuite {
@@ -252,5 +270,128 @@ class MRSpec extends AnyFunSuite {
       Seq(("a", Seq(0)), ("b", Seq(1)), ("c", Seq(3)), ("d", Seq(6))))
     assert(groups((k, vs) => if (k == "a") vs.take(1).toSeq else vs.toSeq) ==
       Seq(("a", Seq(0)), ("b", Seq(1, 4)), ("c", Seq(3)), ("d", Seq(6))))
+  }
+
+  /** groupPairs' rows regrouped per key: the values of a key's rows,
+    * concatenated in output order.
+    */
+  private def regroup[K, V](rows: Seq[(K, Array[V])]): Map[K, Seq[V]] =
+    rows.foldLeft(Map.empty[K, Seq[V]]) { case (m, (k, vs)) =>
+      m.updated(k, m.getOrElse(k, Seq.empty) ++ vs)
+    }
+
+  private def emitOrder[K, V](pairs: Seq[(K, V)]): Map[K, Seq[V]] =
+    pairs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+
+  test("groupPairs: a flush at the key bound splits a key across windows, values once in emit order") {
+    // windows a a a b | a c | b a | a
+    val pairs = Seq("a", "a", "a", "b", "a", "c", "b", "a", "a").zipWithIndex
+    val rows = MR.groupPairs(pairs.iterator, maxKeys = 2, maxValues = 100, maxBytes = Long.MaxValue)
+      .toSeq
+    assert(rows.map(_._1).sorted == Seq("a", "a", "a", "a", "b", "b", "c"))
+    assert(regroup(rows) == emitOrder(pairs))
+    assert(rows.map(r => (r._1, r._2.length)).sortBy(r => (r._1, -r._2)) ==
+      Seq(("a", 3), ("a", 1), ("a", 1), ("a", 1), ("b", 1), ("b", 1), ("c", 1)))
+  }
+
+  test("groupPairs: a flush at the value bound splits a key across windows, values once in emit order") {
+    // windows a a b a | b a a b | a b: each ships a and b once
+    val pairs = Seq("a", "a", "b", "a", "b", "a", "a", "b", "a", "b").zipWithIndex
+    val rows = MR.groupPairs(pairs.iterator, maxKeys = 100, maxValues = 4, maxBytes = Long.MaxValue)
+      .toSeq
+    assert(rows.map(_._1).sorted == Seq("a", "a", "a", "b", "b", "b"))
+    assert(regroup(rows) == emitOrder(pairs))
+    assert(rows.map(_._2.length).sum == pairs.size)
+  }
+
+  test("groupPairs: a flush at the byte budget keeps every value once") {
+    val pairs = (0 until 50).map(i => (s"k${i % 7}", i))
+    val rows = MR.groupPairs(pairs.iterator, maxKeys = 1 << 16, maxValues = 1 << 20, maxBytes = 1)
+      .toSeq
+    // a budget of one byte flushes after every pair: nothing groups, nothing is lost
+    assert(rows.size == pairs.size)
+    assert(regroup(rows) == emitOrder(pairs))
+  }
+
+  test("groupPairs: null, 0.0/-0.0 and Array[Byte] keys are never merged across distinct keys") {
+    val k1 = Array[Byte](1, 2)
+    val k1Copy = Array[Byte](1, 2)
+    val k2 = Array[Byte](3)
+    val keys: Seq[Any] = Seq(null, 0.0, -0.0, 0.0, null, k1, k2, k1Copy, k1, -0.0, "0.0", 0.0f, -0.0f)
+    val pairs = keys.zipWithIndex
+    for (bounds <- Seq((1 << 16, 1 << 20), (3, 100))) {
+      val rows = MR.groupPairs(pairs.iterator, bounds._1, bounds._2, Long.MaxValue).toSeq
+      // each row's values come from emissions whose key equals the row's,
+      // by the reduce side's own test (Objects.deepEquals)
+      for ((k, vs) <- rows; i <- vs)
+        assert(java.util.Objects.deepEquals(keys(i), k), s"value $i (key ${keys(i)}) under key $k")
+      assert(rows.flatMap(_._2).sorted == pairs.map(_._2), s"bounds=$bounds")
+    }
+    // with room for every key, equal scalar keys group and 0.0/-0.0 stay apart
+    val rows = MR.groupPairs(pairs.iterator, 1 << 16, 1 << 20, Long.MaxValue).toSeq
+    val byKey = rows.collect { case (k, vs) if !k.isInstanceOf[Array[Byte]] =>
+      (String.valueOf(k) + "/" + Option(k).map(_.getClass.getSimpleName).getOrElse(""), vs.toSeq)
+    }.toMap
+    assert(byKey == Map("null/" -> Seq(0, 4), "0.0/Double" -> Seq(1, 3), "-0.0/Double" -> Seq(2, 9),
+      "0.0/String" -> Seq(10), "0.0/Float" -> Seq(11), "-0.0/Float" -> Seq(12)))
+  }
+
+  test("grouped runOnDataset ≡ a driver-side grouping over skewed inputs, both paths, R = 1, 3, 8 (ScalaCheck)") {
+    // a few hot words and a long tail, spread over several map tasks so a
+    // key reaches the reducer as several groups
+    val wordGen = Gen.frequency(
+      8 -> Gen.oneOf("the", "of", "and"), 3 -> Gen.oneOf("x1", "Y_2", "z.z", "ß"),
+      1 -> Gen.alphaNumStr.suchThat(_.nonEmpty).map(_.take(6)))
+    val gen = for {
+      words <- Gen.listOf(wordGen)
+      tasks <- Gen.choose(1, 4)
+    } yield (words, tasks)
+    for (r <- Seq(1, 3, 8); user <- Seq(false, true)) {
+      val prop = Prop.forAll(gen) { case (words, tasks) =>
+        val tokens = words.zipWithIndex.map { case (w, i) => s"$w:$i" }
+        val lines = spark.createDataset(
+          spark.sparkContext.parallelize(tokens.grouped(4).map(_.mkString(" ")).toSeq, tasks))
+        val got = MR.runOnDataset[String, Int, (String, Seq[Int])](
+          lines, tokenizeIndexed, valuesReducer, r,
+          partitioner = if (user) Some(MR.defaultHashPartition(_, r)) else None)
+          .collect()
+        val want = words.zipWithIndex.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
+        got.length == want.size && got.toMap == want
+      }
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(5), prop)
+      assert(res.passed, s"R=$r user=$user: ${res.status}")
+    }
+  }
+
+  test("a reducer that reads 0 or 1 values of a key with several groups leaves the next keys right") {
+    // "hot" and "warm" sit in each of 3 map tasks, so each reaches its
+    // reducer as 3 groups of several values
+    val text = Seq("hot hot warm a hot warm", "warm hot b hot warm a", "hot warm warm c hot hot")
+    val lines = spark.createDataset(spark.sparkContext.parallelize(text, 3))
+    val words = text.flatMap(_.split(" "))
+    val want = words.groupBy(identity).map { case (k, v) => (k, v.size.toLong) } ++
+      Map("hot" -> 0L, "warm" -> 1L)
+    for (r <- Seq(1, 2); partitioner <- Seq(None, Some((_: String) => 0))) {
+      val got = MR.runOnDataset[String, Int, (String, Long)](
+        lines, tokenize, partialReducer, r, partitioner).collect()
+      assert(got.length == want.size && got.toMap == want, s"R=$r partitioner=$partitioner")
+    }
+  }
+
+  test("the map side ships one row per key and map task, not one per pair, on both paths") {
+    val text = Seq("hot hot hot a hot", "hot b hot a")
+    val lines = spark.createDataset(spark.sparkContext.parallelize(text, 2))
+    for (partitioner <- Seq(None, Some(MR.defaultHashPartition(_: String, 3)))) {
+      val ds = MR.runOnDataset[String, Int, (String, Long)](
+        lines, tokenize, countReducer, 3, partitioner).toDF()
+      assert(ds.collect().map(r => (r.getString(0), r.getLong(1))).toMap ==
+        Map("hot" -> 6L, "a" -> 2L, "b" -> 1L))
+      val walk = new AdaptiveSparkPlanHelper {}
+      val written = walk.collect(ds.queryExecution.executedPlan) { case e: ShuffleExchangeExec =>
+        e.metrics("shuffleRecordsWritten").value
+      }
+      // {hot, a} from the first task, {hot, b, a} from the second: 5 rows for 9 pairs
+      assert(written == Seq(5L), s"partitioner=$partitioner")
+    }
   }
 }
